@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at the given scale
   * factor and prints one JSON metrics line. A trivial warmup action absorbs
   * JVM/session startup so per-query numbers measure the plans, not
@@ -161,7 +159,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     startNanos = System.nanoTime()
     sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cores
     itersCfg = math.max(1,
       sys.env.get("SPARK_GRAFT_BENCH_ITERS").flatMap(_.trim.toIntOption).getOrElse(3))
     outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_full.json")
@@ -175,26 +173,7 @@ object Bench {
     // failure mode).
     val hook = new Thread(() => writeArtifacts(aborted = true), "bench-flush")
     Runtime.getRuntime.addShutdownHook(hook)
-    val spark = Tables.withEventsConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // The suite's .stage() localCheckpoints pin storage blocks until a
-      // DRIVER GC lets ContextCleaner reclaim them; at 276 queries the
-      // default 30-minute periodic GC lets dead blocks squeeze unified
-      // memory for most of the run (late-suite queries read 2–3× their
-      // fresh-JVM times in the r18 window A/B). A 5-minute cadence keeps
-      // the storage pool honest; the explicit GC every 32 queries below
-      // bounds the in-between growth.
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      .config("spark.ui.enabled", "false"))
-      // keep saveAsTable catalog dirs (q94's bucketed tables) out of the
-      // repo root — ./spark-warehouse is the default otherwise
-      .config("spark.sql.warehouse.dir",
-        graft.tools.TempDirs.createFastForJvm("graft-warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.create(cpus)
     spark.range(1000).selectExpr("sum(id)").collect() // JVM/session warmup
     val warmDir = "/root/testdata/sf0.001"
     // Projection bookkeeping (the class doc's budget scheme): measured
@@ -241,7 +220,7 @@ object Bench {
       if (elapsedSec + avgIter > budgetCap) {
         lock.synchronized { skipped += name }
       } else {
-        // see the periodicGC comment on the session conf
+        // see the periodicGC comment in Session
         sinceGc += 1
         if (sinceGc >= 32) { sinceGc = 0; System.gc() }
         // Warm-up is INTERLEAVED (class doc): sf0.001 plan compile for

@@ -26,6 +26,19 @@ object SparkEntry {
       Similarity.queries ++ Multimodal.queries ++ EtlPipeline.queries ++ KMeans.queries ++ Corpus.queries ++
       Graph.queries ++ Analytics.queries ++ Layout.queries ++ Scale.queries ++ Typed.queries ++ UrlCuration.queries
 
+  /** The registered queries `names` picks, in the given order (blank
+    * entries ignored). An unknown name fails with every unknown listed —
+    * one resolver for Verify's GRAFT_ONLY and the probe tools, so a typo
+    * can never silently select nothing. */
+  def resolve(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val picked = names.map(_.trim).filter(_.nonEmpty)
+    require(picked.nonEmpty, "no query names given")
+    val all = queries
+    val unknown = picked.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+    picked.map(n => n -> all(n))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

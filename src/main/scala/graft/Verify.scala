@@ -1,27 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.withEventsConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      // keep saveAsTable catalog dirs (q94's bucketed tables) out of the
-      // repo root — ./spark-warehouse is the default otherwise
-      .config("spark.sql.warehouse.dir",
-        graft.tools.TempDirs.createFastForJvm("graft-warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // Local-iteration filter: GRAFT_ONLY=name1,name2 restricts the dump
-    // (unset for the driver, which always runs the full contract).
-    val only = sys.env.get("GRAFT_ONLY").map(_.split(",").toSet)
+    // (unset for a full contract run). Names are resolved before the
+    // session starts: a typo fails the run instead of dumping nothing that
+    // check_oracle.py would then read as clean.
+    val only = sys.env.get("GRAFT_ONLY")
+      .map(v => SparkEntry.resolve(v.split(",").toSeq).map(_._1).toSet)
+    val spark = Session.create(Session.cores)
+    new java.io.File(outDir).mkdirs()
     // Failures land in _verify_errors.json beside the dumps (r8 lesson:
     // stderr-only failures made the correctness file silently SHRINK — a
     // missing query was indistinguishable from a never-declared one).

@@ -309,7 +309,7 @@ object Dedup {
     // caller can ever place (the leak accumulates a band-frame copy per
     // call in long-lived sessions); checkpoint blocks are reclaimed by
     // the ContextCleaner once the frame is unreachable, and laziness is
-    // preserved for plan-only callers (ExplainDump).
+    // preserved for plan-only callers (Probe plan).
     val banded = bandRows(sigs)
       .stageLazy()
     val bucketed = banded

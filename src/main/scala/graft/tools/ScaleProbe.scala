@@ -7,7 +7,8 @@ import graft.tools.Stage._
 /** 20× scale probe — empirical evidence that the operators' 100 TB design
   * arguments hold beyond the fixture sizes. Builds a synthetic corpus
   * `MULT`× the given scale-factor directory (default 20× sf0.1), then
-  * times the probed operators end to end on it at local[32].
+  * times the probed operators end to end on it at `SPARK_GRAFT_CPUS`
+  * cores.
   *
   * Corpus construction mirrors the round-3 probe so numbers stay
   * comparable across rounds: each document is replicated MULT times —
@@ -89,6 +90,50 @@ object ScaleProbe {
     } finally TempDirs.deleteRecursively(base)
   }
 
+  /** Battery arms that run a registered query exactly as Verify and Bench
+    * do (its registered arguments) on the probe corpus, checked against
+    * `SparkEntry.queries` at start-up. They run AFTER the special arms, in
+    * this order: text_hybrid_retrieval reuses the BM25 index whose cold
+    * build text_bm25_index_build times, and graph_pagerank_incr reuses
+    * graph_pagerank's edge/rank artifacts, as a production refresh reuses
+    * yesterday's. */
+  private val RegisteredArms = Seq(
+    "corpus_pack", "corpus_budget", "corpus_balance", "corpus_shard",
+    "corpus_vocab_prune", "corpus_shuffle_epochs", "corpus_chunk",
+    "pipeline_shards", "corpus_mix", "corpus_curriculum",
+    // stratified sampling is the no-shuffle floor: one predicate scan
+    "corpus_sample_stratified",
+    "dedup_exact",
+    // span removal on the replica corpus — the WORST case for the digest
+    // pre-filter (half the corpus is exact copies, so nearly every gram
+    // digest repeats); bounded time shows the sort/groupBy plan carries
+    // even total-duplication corpora without an all-pairs term
+    "dedup_substring",
+    // banned set = ~12.5% of docs' grams; cost should track dedup_substring
+    "dedup_decontaminate",
+    "dedup_fuzzy", "dedup_minhash", "dedup_simhash",
+    // (source, shingle) distinct + shingle-keyed pair join must stay
+    // linear-ish in shingle mass (fan-out ≤ |sources| = 20 here)
+    "dedup_overlap_matrix",
+    // cold BM25: tf/df aggregations shuffle O(distinct (doc, token)); time
+    // should track the tf aggregation, near-linear in token mass
+    "text_bm25",
+    // zero-shuffle compiled kernels: any super-linear bend means a kernel
+    // left codegen or the plan grew a shuffle
+    "text_gopher_rep", "text_dsir",
+    // one corpus pass + the per-text dedup window (≈ text_gopher_rep + an
+    // exchange); the full curation chain should sit near pipeline_fineweb
+    // + text_dsir + decontam windows over the SHRINKING survivor chain
+    "pipeline_fineweb", "pipeline_curation",
+    // fusion is O(queries·k); the BM25 and dense legs dominate
+    "text_hybrid_retrieval",
+    "text_tfidf", "text_inverted_index", "text_langid",
+    "mm_decode_real", "mm_audio_windows",
+    // warm-started rank refresh: refresh_steps vs graph_pagerank's
+    // supersteps phase is the recurring-cost contrast
+    "graph_pagerank", "graph_pagerank_incr",
+    "q67_upsert_merge")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).flatMap(_.toIntOption).getOrElse(20)
@@ -100,25 +145,19 @@ object ScaleProbe {
     val only = args.lift(3).map(_.split(",").filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty[String])
     def want(n: String) = only.isEmpty || only.contains(n)
-    val spark = graft.Tables.withEventsConf(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
+    val registered = graft.SparkEntry.resolve(RegisteredArms)
+    // The heap comes from -Xmx${SPARK_DRIVER_MEM} (build.sbt): in local
+    // mode the JVM is already running when the builder reads its conf, so
+    // spark.driver.memory here would be a no-op.
+    val spark = graft.Session.create(graft.Session.cores,
       // shuffle/spill scratch on tmpfs when the machine has one — the
       // pair-heavy 100× arms write tens of GB of shuffle; on the shared
       // sandbox the root disk swings probe numbers 1.5–2.4× run to run
       // (measured on dedup_minhash 100×: 146.7 s disk-corpus vs 91.9 s
       // tmpfs-corpus, same code). A real cluster's local SSDs are the
       // analogue; the probe should measure the OPERATOR, not /dev/vda.
-      .config("spark.local.dir",
-        TempDirs.createFastForJvm("graft-spark-local"))
-      .config("spark.sql.warehouse.dir",
-        TempDirs.createFastForJvm("graft-warehouse")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      _.config("spark.local.dir",
+        TempDirs.createFastForJvm("graft-spark-local")))
 
     val reps = spark.range(mult).withColumnRenamed("id", "rep")
 
@@ -532,28 +571,11 @@ object ScaleProbe {
     }
 
     val battery: Seq[(String, () => Long)] = Seq(
-      "corpus_pack"        -> (() => graft.ops.Corpus.queries("corpus_pack")(spark, outDir).count()),
-      "corpus_budget"      -> (() => graft.ops.Corpus.queries("corpus_budget")(spark, outDir).count()),
-      "corpus_balance"     -> (() => graft.ops.Corpus.queries("corpus_balance")(spark, outDir).count()),
-      "corpus_shard"       -> (() => graft.ops.Corpus.queries("corpus_shard")(spark, outDir).count()),
-      "corpus_vocab_prune" -> (() => graft.ops.Corpus.queries("corpus_vocab_prune")(spark, outDir).count()),
-      "corpus_shuffle_epochs" -> (() =>
-        graft.ops.Corpus.shuffleShardsEpochs(spark, outDir).count()),
-      "corpus_chunk" -> (() =>
-        graft.ops.Corpus.chunkDocs(spark, outDir).count()),
-      "pipeline_shards"    -> (() => graft.ops.Corpus.queries("pipeline_shards")(spark, outDir).count()),
-      "dedup_exact"        -> (() => graft.ops.Dedup.exact(spark, outDir).count()),
-      // substring-level span removal on the replica corpus — the WORST
-      // case for the digest pre-filter (half the corpus is exact copies,
-      // so nearly every gram digest repeats and the exact-confirm pays
-      // full gram mass); bounded time here shows the sort/groupBy plan
-      // carries even total-duplication corpora without an all-pairs term
-      "dedup_substring"    -> (() => graft.ops.Dedup.substringDedup(spark, outDir).count()),
       // incremental span-dedup recurring term: history artifacts build on
       // the first call (*.build phases), then the delta ingest pays delta
       // grams + AFFECTED-doc re-windowing (deltaOnly returns the
       // recomputed frame — the recurring cost, comparable against
-      // dedup_substring's full pass above). Delta choice matters exactly
+      // dedup_substring's full pass). Delta choice matters exactly
       // as for dedup_incr_minhash: a refresh-shaped tail of the LAST
       // replica (5% of base docs) keeps affected ≈ those base docs'
       // replicas — a whole-replica delta would share spans with every
@@ -579,13 +601,8 @@ object ScaleProbe {
         }
         graft.ops.Dedup.substringDedup(spark, ldir, n = 50).count()
       }),
-      // BM25 retrieval at corpus scale: tf/df aggregations shuffle
-      // O(distinct (doc, token)); the query-term and stats broadcasts are
-      // O(1); the bounded-heap top-k ships O(queries·k) — time should
-      // track the tf aggregation, i.e. near-linear in token mass
-      "text_bm25"          -> (() => graft.ops.TextAnalysis.bm25(spark, outDir).count()),
       // BM25 index lifecycle at corpus scale (VERDICT r12 #8): the cold
-      // arm above pays the tf/df/dl aggregations EVERY query; these two
+      // text_bm25 arm pays the tf/df/dl aggregations EVERY query; these two
       // split the train-once cost from the recurring term. _index_build
       // runs bm25Indexed with cold artifacts (aggregations + index
       // writes); _indexed immediately reruns it against the now-warm
@@ -596,13 +613,7 @@ object ScaleProbe {
         graft.ops.TextAnalysis.bm25Indexed(spark, outDir).count()),
       "text_bm25_indexed"  -> (() =>
         graft.ops.TextAnalysis.bm25Indexed(spark, outDir).count()),
-      // benchmark decontamination at corpus scale: banned set = ~12.5%
-      // of docs' grams (md5 test buckets), train side scans once; cost
-      // should track dedup_substring's symmetric pass
-      "dedup_decontaminate" -> (() => graft.ops.Dedup.decontaminate(spark, outDir).count()),
-      "dedup_fuzzy"        -> (() => graft.ops.Dedup.fuzzy(spark, outDir).count()),
       "dedup_incremental"  -> (() => graft.ops.Dedup.incremental(spark, outDir, (nDocs * mult) / 2).count()),
-      "dedup_minhash"      -> (() => graft.ops.Dedup.minhash(spark, outDir).count()),
       // Incremental band-index maintenance: the one-time historical build
       // shows up as *.build phases; the REMAINDER is the recurring delta
       // ingest. Delta choice matters in THIS corpus: ids group by replica
@@ -644,11 +655,6 @@ object ScaleProbe {
       // width). The two arms' epoch curves are the dial's evidence.
       "dedup_stream_embedding_wide" -> (() =>
         embStreamArm(spark, sfDir, reps, mult, bits = 24)),
-      "dedup_simhash"      -> (() => graft.ops.Dedup.simhash(spark, outDir).count()),
-      // source-pair shingle overlap at 500 k docs: the (source, shingle)
-      // distinct + shingle-keyed pair join must stay linear-ish in corpus
-      // shingle mass (per-shingle fan-out ≤ |sources| = 20 here)
-      "dedup_overlap_matrix" -> (() => graft.ops.Dedup.overlapMatrix(spark, outDir).count()),
       // URL tier at corpus scale (VERDICT r14 #4): canonicalization is a
       // compiled per-row kernel (no shuffle), dedup groups on md5
       // digests — cold cost should track corpus size linearly. Prints
@@ -685,7 +691,6 @@ object ScaleProbe {
       "corpus_domain_cap_stream16" -> (() =>
         graft.ops.UrlCuration.domainCapStream(spark, outDir,
           epochs = 16).count()),
-      "corpus_mix"         -> (() => graft.ops.Corpus.mixWeights(spark, outDir).count()),
       // BPE training at a production-shaped merge count (VERDICT r11 #1).
       // The replica corpus's ~90-type vocabulary exhausts after ~173
       // merges, so the BPE arms train on a DERIVED vocabulary-rich corpus
@@ -748,20 +753,6 @@ object ScaleProbe {
       // evidence (oversized blocks route to the minhash escape path)
       "dedup_jaccard_hotblock" -> (() =>
         graft.ops.Dedup.ngramJaccardHotBlock(spark, outDir).count()),
-      // zero-shuffle compiled kernels: wall time here should track the
-      // corpus linearly — any super-linear bend means the kernel left
-      // codegen or the plan grew a shuffle
-      "text_gopher_rep"    -> (() => graft.ops.TextAnalysis.queries("text_gopher_rep")(spark, outDir).count()),
-      "text_dsir"          -> (() => graft.ops.TextAnalysis.queries("text_dsir")(spark, outDir).count()),
-      // the composed funnel: one corpus pass + the per-text dedup window;
-      // cost should sit near text_gopher_rep + an exchange
-      "pipeline_fineweb"   -> (() => graft.ops.TextAnalysis.queries("pipeline_fineweb")(spark, outDir).count()),
-      // the FULL curation composition (r16): funnel → decontam → DSIR
-      // → domain cap → mix → pack. Cost should sit near
-      // pipeline_fineweb + text_dsir + the decontam gram windows over
-      // the SHRINKING survivor chain — a superlinear bend means a
-      // stage re-scanned the raw corpus instead of its survivors
-      "pipeline_curation"  -> (() => graft.ops.TextAnalysis.queries("pipeline_curation")(spark, outDir).count()),
       // streaming funnel over 16 id-local epochs: per-epoch fwepochNNN
       // phases must stay flat — each epoch pays the stateless flag
       // kernels on the batch plus two anti-joins against the slim
@@ -867,37 +858,12 @@ object ScaleProbe {
         graft.ops.Similarity.filteredTopK(spark, edir,
           col("label") < 5).count()
       }),
-      // hybrid fusion over the replicated documents + embeddings: the
-      // legs dominate (indexed BM25 scoring join; planner-dispatched
-      // dense tier); the fusion layer itself is O(queries·k)
-      "text_hybrid" -> (() =>
-        graft.ops.TextAnalysis.hybridRetrieval(spark, outDir).count()),
-      // curriculum = lmScore's bigram plan + one narrow (bucket, md5)
-      // rank — the arm prices the phase signal at corpus scale
-      "corpus_curriculum" -> (() =>
-        graft.ops.Corpus.curriculumOrder(spark, outDir).count()),
-      // stratified sampling is the no-shuffle floor: one predicate scan
-      "corpus_sample" -> (() =>
-        graft.ops.Corpus.sampleStratified(spark, outDir).count()),
       // the full assembly chain (sample → temper → replicate → shuffle →
       // shard) at a budget that scales with the corpus, so the instance
       // stream the rank shuffles grows with the data
       "pipeline_dataloader" -> (() =>
         graft.ops.Corpus.dataloaderPipeline(spark, outDir,
           totalBudget = 20000L * mult).count()),
-      "text_tfidf"         -> (() => graft.ops.TextAnalysis.queries("text_tfidf")(spark, outDir).count()),
-      "text_inverted_index"-> (() => graft.ops.TextAnalysis.queries("text_inverted_index")(spark, outDir).count()),
-      "text_langid"        -> (() => graft.ops.TextAnalysis.queries("text_langid")(spark, outDir).count()),
-      "mm_decode_real"     -> (() => graft.ops.Multimodal.queries("mm_decode_real")(spark, outDir).count()),
-      "mm_audio_windows"   -> (() => graft.ops.Multimodal.queries("mm_audio_windows")(spark, outDir).count()),
-      "graph_pagerank"     -> (() => graft.ops.Graph.pagerank(spark, outDir).count()),
-      // incremental rank refresh (warm start after a ~3% edge delta):
-      // the refresh_steps phase vs graph_pagerank's supersteps phase is
-      // the recurring-cost contrast; the edge/rank artifacts are reused
-      // from the run above, as a production refresh would reuse
-      // yesterday's
-      "graph_pagerank_incr" -> (() => graft.ops.Graph.pagerankIncr(spark, outDir).count()),
-      "q67_upsert_merge"   -> (() => graft.ops.Relational2.q67UpsertMerge(spark, outDir).count()),
       // 16 epochs instead of the gate's 4: the per-epoch phases expose the
       // cost CURVE as state accumulates — the full-state-rewrite trade's
       // growth term, and where a partitioned state table becomes mandatory
@@ -931,7 +897,8 @@ object ScaleProbe {
     )
     val results = pagedResults ++ idlocalResults ++ dominantResults ++
       manysrcResults ++
-      battery.filter(p => want(p._1)).map { case (n, f) => time(n)(f()) }
+      (battery ++ registered.map { case (n, fn) => n -> (() => fn(spark, outDir).count()) })
+        .filter(p => want(p._1)).map { case (n, f) => time(n)(f()) }
     // peak heap across all pools: the "no cliff" claim needs a memory
     // number next to the wall times (collected AFTER the probes so every
     // pool's high-water mark is final)

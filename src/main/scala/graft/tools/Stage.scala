@@ -35,8 +35,9 @@ import org.apache.spark.storage.StorageLevel
   *    self-referential stream state read — those sites document it).
   *
   * All three produce bitwise-identical query results
-  * (`StageModeEquivalenceSpec` pins one gated query per heavy family in
-  * `local` vs `reliable`); only the failure-recovery story differs.
+  * (`StageSpec`'s "mode equivalence" tests pin one gated query per heavy
+  * family in `local` vs `reliable`); only the failure-recovery story
+  * differs.
   */
 object Stage {
 

@@ -113,4 +113,8 @@ class EtlPipelineSpec extends SparkSpec {
     assert(spark.read.jdbc(url, "orders_sink", new java.util.Properties).count()
       == 2 * df.count())
   }
+
+  test("smoke check: SparkEntry.entry returns rows") {
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
 }

@@ -59,4 +59,13 @@ class SparkEntrySpec extends AnyFunSuite {
       s"twin chains (a ○ entry pairing to another ○ entry): " +
         chained.toSeq.sorted.mkString(", "))
   }
+
+  test("resolve returns the named queries in order and rejects unknown names") {
+    assert(SparkEntry.resolve(Seq("q7_topk", " q1_pricing_summary", "")).map(_._1) ==
+      Seq("q7_topk", "q1_pricing_summary"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.resolve(Seq("q1_pricing_summary", "q1_pricing_sumary", "nope")))
+    assert(e.getMessage.contains("q1_pricing_sumary, nope"))
+    intercept[IllegalArgumentException](SparkEntry.resolve(Seq(" ", "")))
+  }
 }

@@ -6,23 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session keeps the
   * test run fast; suites must not mutate session-global state). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = Tables.withEventsConf(SparkSession.builder()
-      // local[4, 2]: 4 threads, 2 task attempts — task-level retry is ON
-      // so the failure-injection specs can prove the write protocols
-      // survive a killed first attempt (local[4] makes any task throw
-      // fatal, which would leave the retry paths untestable).
-      .master("local[4, 2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = Session.create(4,
+    // local[4, 2]: 4 threads, 2 task attempts — task-level retry is ON
+    // so the failure-injection specs can prove the write protocols
+    // survive a killed first attempt (local[4] makes any task throw
+    // fatal, which would leave the retry paths untestable).
+    _.master("local[4, 2]"))
 }
 
 abstract class SparkSpec extends AnyFunSuite {
