@@ -303,7 +303,7 @@ object Analytics {
     else {
       pinCmsGeometry(statePath, d, w) // reject a (d,w) mismatch up front
       val sk = new Array[Long](d * w)
-      sp.read.parquet(paths: _*)
+      Tables.parquet(sp, paths: _*)
         .groupBy(col("idx")).agg(sum(col("n")).as("n"))
         .collect().foreach { r =>
           val idx = r.getInt(0)

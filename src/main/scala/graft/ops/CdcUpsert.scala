@@ -185,7 +185,7 @@ object CdcUpsert {
       // double-apply the delta.
       val merged =
         if (new java.io.File(prev).exists())
-          fold(batch.sparkSession.read.parquet(prev).unionByName(d))
+          fold(graft.Tables.parquet(batch.sparkSession, prev).unionByName(d))
         else d
       merged.write.mode("overwrite").parquet(s"$statePath/v$epoch")
       // GC two behind: the engine only ever replays the LAST uncommitted
@@ -256,7 +256,7 @@ object CdcUpsert {
         touchedBuckets, epoch - 1)
       val prior =
         if (priorPaths.isEmpty) None
-        else Some(fold(sp.read.parquet(priorPaths: _*))
+        else Some(fold(graft.Tables.parquet(sp, priorPaths: _*))
           .join(d.select(col("user_id")), Seq("user_id"), "left_semi")
           .stage())
       val newV = prior.map(p => fold(d.unionByName(p))).getOrElse(d)
@@ -437,7 +437,7 @@ object CdcUpsert {
       .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
       .filter(_.getName.drop(1).toLong <= upTo)
       .map(_.getAbsolutePath).sorted
-    if (dirs.isEmpty) None else Some(sp.read.parquet(dirs.toIndexedSeq: _*))
+    if (dirs.isEmpty) None else Some(graft.Tables.parquet(sp, dirs.toIndexedSeq: _*))
   }
 
   /** Merged view of the state as of epoch `upTo` (inclusive), `None`
@@ -448,13 +448,13 @@ object CdcUpsert {
                 policy: Policy): Option[DataFrame] = policy match {
     case Rewrite =>
       rewriteVersions(statePath, upTo).lastOption
-        .map(v => sp.read.parquet(s"$statePath/v$v"))
+        .map(v => graft.Tables.parquet(sp, s"$statePath/v$v"))
     case _: Mor =>
       val paths = graft.tools.LogState.pathsAsOf(statePath, upTo)
-      if (paths.isEmpty) None else Some(fold(sp.read.parquet(paths: _*)))
+      if (paths.isEmpty) None else Some(fold(graft.Tables.parquet(sp, paths: _*)))
     case _: Partitioned =>
       val paths = graft.tools.RangeState.pathsAsOf(statePath, upTo)
-      if (paths.isEmpty) None else Some(fold(sp.read.parquet(paths: _*)))
+      if (paths.isEmpty) None else Some(fold(graft.Tables.parquet(sp, paths: _*)))
     case Indexed(inner, _) => stateAsOf(sp, statePath, upTo, inner)
   }
 
@@ -480,14 +480,14 @@ object CdcUpsert {
   def writtenFrameAt(sp: SparkSession, statePath: String, epoch: Long,
                      policy: Policy): Option[DataFrame] = policy match {
     case Rewrite =>
-      Some(sp.read.parquet(s"$statePath/v$epoch"))
+      Some(graft.Tables.parquet(sp, s"$statePath/v$epoch"))
     case _: Mor =>
-      Some(sp.read.parquet(s"$statePath/delta/v$epoch"))
+      Some(graft.Tables.parquet(sp, s"$statePath/delta/v$epoch"))
     case _: Partitioned =>
       val paths = graft.tools.RangeState.partDirs(statePath)
         .map(p => s"$p/delta/v$epoch")
         .filter(p => new java.io.File(p).isDirectory)
-      if (paths.isEmpty) None else Some(sp.read.parquet(paths: _*))
+      if (paths.isEmpty) None else Some(graft.Tables.parquet(sp, paths: _*))
     case Indexed(inner, _) => writtenFrameAt(sp, statePath, epoch, inner)
   }
 
@@ -510,7 +510,7 @@ object CdcUpsert {
         _.split('/').find(_.startsWith("p="))).distinct.size.toLong
       val df =
         if (paths.isEmpty) None
-        else Some(fold(sp.read.parquet(paths: _*))
+        else Some(fold(graft.Tables.parquet(sp, paths: _*))
           .filter(col("user_id") === key))
       (df, parts)
     case Indexed(inner, _) => keyLookup(sp, statePath, key, inner)
@@ -535,7 +535,7 @@ object CdcUpsert {
       .distinct.size.toLong
     val df =
       if (paths.isEmpty) None
-      else Some(indexFold(sp.read.parquet(paths: _*))
+      else Some(indexFold(graft.Tables.parquet(sp, paths: _*))
         .filter(col("v") === lit(value) && !col("del"))
         .select(col("user_id")))
     (df, parts)

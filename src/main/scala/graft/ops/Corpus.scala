@@ -188,7 +188,7 @@ object Corpus {
     val hist =
       if (histPaths.isEmpty)
         d.select(col("source"), lit(0L).as("n")).limit(0)
-      else sp.read.parquet(histPaths: _*)
+      else Tables.parquet(sp, histPaths: _*)
     val histTot = hist.groupBy(col("source")).agg(sum(col("n")).as("h"))
     val res = finish(local
         .join(broadcast(histTot), Seq("source"), "left_outer")
@@ -241,7 +241,7 @@ object Corpus {
                           seqLen: Int = 64, epochs: Int = 4): DataFrame = {
     val base = graft.tools.StateCache.getOrBuild(
       "corpus_pack_stream",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$seqLen|$epochs") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$seqLen|$epochs") { root =>
       val statePath = s"$root/state"
       val all = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text")).stage()
@@ -254,7 +254,7 @@ object Corpus {
           k, statePath, seqLen, compactEvery = 2)
       }
     }
-    spark.read.parquet(graft.tools.LogState.pathsAsOf(
+    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
         s"$base/state/results", epochs - 1L): _*)
       .select(col("source"), col("doc_id"), col("n_tokens"),
         col("cum_before"), col("seq_first"), col("seq_offset"),
@@ -274,7 +274,7 @@ object Corpus {
                          epochs: Int = 4): DataFrame = {
     val base = graft.tools.StateCache.getOrBuild(
       "corpus_budget_stream",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$budget|$epochs") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$budget|$epochs") { root =>
       val statePath = s"$root/state"
       val all = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text")).stage()
@@ -287,7 +287,7 @@ object Corpus {
           k, statePath, budget, compactEvery = 2)
       }
     }
-    spark.read.parquet(graft.tools.LogState.pathsAsOf(
+    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
         s"$base/state/results", epochs - 1L): _*)
       .select(col("source"), col("doc_id"), col("n_tokens"),
         col("cum_before"))
@@ -333,7 +333,7 @@ object Corpus {
                              latenessMicros: Long = StreamLatenessMicros): DataFrame = {
     val base = graft.tools.StateCache.getOrBuild(
       "corpus_budget_stream_late",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$budget|$epochs|$latenessMicros") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$budget|$epochs|$latenessMicros") { root =>
       val budState = s"$root/state"
       val lateState = s"$root/late"
       val all = Tables.documents(spark, dir)
@@ -360,7 +360,7 @@ object Corpus {
         }
       }
     }
-    val kept = spark.read.parquet(graft.tools.LogState.pathsAsOf(
+    val kept = Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
         s"$base/state/results", epochs - 1L): _*)
       .select(col("source"), col("doc_id"), col("n_tokens"),
         col("cum_before"),
@@ -389,7 +389,7 @@ object Corpus {
                               latenessMicros: Long = StreamLatenessMicros): DataFrame = {
     val base = graft.tools.StateCache.getOrBuild(
       "corpus_pack_stream_late",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$seqLen|$epochs|$latenessMicros") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$seqLen|$epochs|$latenessMicros") { root =>
       val packState = s"$root/state"
       val lateState = s"$root/late"
       val all = Tables.documents(spark, dir)
@@ -416,7 +416,7 @@ object Corpus {
         }
       }
     }
-    val kept = spark.read.parquet(graft.tools.LogState.pathsAsOf(
+    val kept = Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
         s"$base/state/results", epochs - 1L): _*)
       .select(col("source"), col("doc_id"), col("n_tokens"),
         col("cum_before"), col("seq_first"), col("seq_offset"),
@@ -903,7 +903,7 @@ object Corpus {
     * resume gates read the assembly from a once-per-JVM parquet artifact
     * (the q99 / sim_recall discipline): the build stays visible as a
     * `<kind>.build` bench phase, and [[graft.tools.ArtifactCache]]'s
-    * dirToken invalidates it if the corpus is rebuilt in place. Params
+    * pathToken invalidates it if the corpus is rebuilt in place. Params
     * are folded into the kind so different budgets/shards never share an
     * artifact. */
   private def cachedAssembly(spark: SparkSession, dir: String, kind: String)
@@ -1518,7 +1518,7 @@ object Corpus {
                           perLang: Int = 40, epochs: Int = 4): DataFrame = {
     val base = graft.tools.StateCache.getOrBuild(
       "corpus_balance_stream",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$perLang|$epochs") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$perLang|$epochs") { root =>
       val statePath = s"$root/state"
       val all = Tables.documents(spark, dir)
         .select(col("lang"), col("doc_id")).stage()
@@ -2037,7 +2037,7 @@ object Corpus {
     }
     val wordsPath = graft.tools.ArtifactCache.pathOf(dir,
       s"bpe_merges_m$BpeMerges").get + "_words"
-    (mt, spark.read.parquet(wordsPath))
+    (mt, Tables.parquet(spark, wordsPath))
   }
 
   /** Sequence packing under the LEARNED tokenizer: identical prefix-sum
@@ -2725,7 +2725,7 @@ object Corpus {
     }
     val wordsPath = graft.tools.ArtifactCache.pathOf(dir,
       s"wp_merges_m$WordpieceMerges").get + "_words"
-    (mt, spark.read.parquet(wordsPath))
+    (mt, Tables.parquet(spark, wordsPath))
   }
 
   /** The learned WordPiece merge table — the gate query: the floor

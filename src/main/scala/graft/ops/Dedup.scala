@@ -573,7 +573,7 @@ object Dedup {
       .stage()
     val histPaths = graft.tools.LogState.pathsAsOf(indexRoot, batchId - 1)
     val hist =
-      if (histPaths.nonEmpty) sp.read.parquet(histPaths: _*)
+      if (histPaths.nonEmpty) Tables.parquet(sp, histPaths: _*)
       else newRows.limit(0)
     val bandCols = Seq("band", "band_sig")
     val newKeys = newRows.groupBy(bandCols.map(col): _*)
@@ -649,7 +649,7 @@ object Dedup {
       .stage()
     val histPaths = graft.tools.LogState.pathsAsOf(indexRoot, batchId - 1)
     val hist =
-      if (histPaths.nonEmpty) sp.read.parquet(histPaths: _*)
+      if (histPaths.nonEmpty) Tables.parquet(sp, histPaths: _*)
       else newRows.limit(0)
     val bandCols = Seq("band", "band_sig")
     val newKeys = newRows.groupBy(bandCols.map(col): _*)
@@ -714,7 +714,7 @@ object Dedup {
     // as a *.build phase.
     val base = graft.tools.StateCache.getOrBuild(
       "dedup_stream_simhash_clustered",
-      s"$cdir@${graft.tools.ArtifactCache.dirToken(cdir)}|$epochs") { b =>
+      s"$cdir@${graft.tools.ArtifactCache.pathToken(cdir)}|$epochs") { b =>
       val statePath = s"$b/state"
       val all = Tables.documents(spark, cdir)
         .select(col("doc_id"), col("text")).stage()
@@ -728,7 +728,7 @@ object Dedup {
     }
     val paths = graft.tools.LogState.pathsAsOf(s"$base/state/survivors",
       epochs - 1L)
-    spark.read.parquet(paths: _*).stage()
+    Tables.parquet(spark, paths: _*).stage()
       .orderBy(col("doc_id"))
   }
 
@@ -756,7 +756,7 @@ object Dedup {
     val cdir = clusteredDocsDir(spark)
     val base = graft.tools.StateCache.getOrBuild(
       "dedup_stream_minhash_clustered",
-      s"$cdir@${graft.tools.ArtifactCache.dirToken(cdir)}|$epochs") { b =>
+      s"$cdir@${graft.tools.ArtifactCache.pathToken(cdir)}|$epochs") { b =>
       val statePath = s"$b/state"
       val all = Tables.documents(spark, cdir)
         .select(col("doc_id"), col("text")).stage()
@@ -771,7 +771,7 @@ object Dedup {
     }
     val paths = graft.tools.LogState.pathsAsOf(s"$base/state/survivors",
       epochs - 1L)
-    spark.read.parquet(paths: _*).stage()
+    Tables.parquet(spark, paths: _*).stage()
       .orderBy(col("doc_id"))
   }
 
@@ -798,7 +798,7 @@ object Dedup {
     val cdir = clusteredDocsDir(spark)
     val base = graft.tools.StateCache.getOrBuild(
       "dedup_stream_minhash_late",
-      s"$cdir@${graft.tools.ArtifactCache.dirToken(cdir)}|$epochs|$latenessMicros") { b =>
+      s"$cdir@${graft.tools.ArtifactCache.pathToken(cdir)}|$epochs|$latenessMicros") { b =>
       val dedupState = s"$b/state"
       val lateState = s"$b/late"
       val width = ClusteredCorpusDocs / epochs
@@ -819,7 +819,7 @@ object Dedup {
           compactEvery = 2, idSpan = ClusteredCorpusDocs)
       }
     }
-    val surv = spark.read.parquet(graft.tools.LogState.pathsAsOf(
+    val surv = Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
         s"$base/state/survivors", epochs - 1L): _*)
       .select(col("doc_id"),
         lit(null).cast("long").as("quarantine_epoch"))
@@ -880,7 +880,7 @@ object Dedup {
     val cdir = clusteredDocsDir(spark)
     val base = graft.tools.StateCache.getOrBuild(
       "dedup_stream_simhash_late",
-      s"$cdir@${graft.tools.ArtifactCache.dirToken(cdir)}|$epochs|$latenessMicros") { b =>
+      s"$cdir@${graft.tools.ArtifactCache.pathToken(cdir)}|$epochs|$latenessMicros") { b =>
       val dedupState = s"$b/state"
       val lateState = s"$b/late"
       val width = ClusteredCorpusDocs / epochs
@@ -900,7 +900,7 @@ object Dedup {
           k, lateState, dedupState, latenessMicros)
       }
     }
-    val surv = spark.read.parquet(graft.tools.LogState.pathsAsOf(
+    val surv = Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
         s"$base/state/survivors", epochs - 1L): _*)
       .select(col("doc_id"),
         lit(null).cast("long").as("quarantine_epoch"))
@@ -929,7 +929,7 @@ object Dedup {
     val cdir = Similarity.clusteredCorpusDir(spark)
     val base = graft.tools.StateCache.getOrBuild(
       "dedup_stream_embedding_late",
-      s"$cdir@${graft.tools.ArtifactCache.dirToken(cdir)}|$epochs|$latenessMicros") { b =>
+      s"$cdir@${graft.tools.ArtifactCache.pathToken(cdir)}|$epochs|$latenessMicros") { b =>
       val dedupState = s"$b/state"
       val lateState = s"$b/late"
       val width = 200 / epochs
@@ -951,7 +951,7 @@ object Dedup {
           compactEvery = 2, idSpan = 200)
       }
     }
-    val surv = spark.read.parquet(graft.tools.LogState.pathsAsOf(
+    val surv = Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
         s"$base/state/survivors", epochs - 1L): _*)
       .select(col("vec_id"),
         lit(null).cast("long").as("quarantine_epoch"))
@@ -1044,7 +1044,7 @@ object Dedup {
     val keepers =
       if (winPaths.isEmpty) firstInBatch
       else firstInBatch.join(
-        sp.read.parquet(winPaths: _*).select(col("dig")),
+        Tables.parquet(sp, winPaths: _*).select(col("dig")),
         Seq("dig"), "left_anti")
     arr.select(col("dig")).write.mode("overwrite")
       .parquet(s"$digRoot/delta/v$batchId")
@@ -1078,7 +1078,7 @@ object Dedup {
     val cdir = clusteredDocsDir(spark)
     val base = graft.tools.StateCache.getOrBuild(
       "dedup_stream_exact_ttl",
-      s"$cdir@${graft.tools.ArtifactCache.dirToken(cdir)}|$epochs|$ttl") { b =>
+      s"$cdir@${graft.tools.ArtifactCache.pathToken(cdir)}|$epochs|$ttl") { b =>
       val statePath = s"$b/state"
       val all = Tables.documents(spark, cdir)
         .select(col("doc_id"), col("text")).stage()
@@ -1090,7 +1090,7 @@ object Dedup {
           k, statePath, ttl)
       }
     }
-    spark.read.parquet(graft.tools.LogState.pathsAsOf(
+    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
         s"$base/state/survivors", epochs - 1L): _*)
       .stage().orderBy(col("doc_id"))
   }
@@ -1813,7 +1813,7 @@ object Dedup {
     // the ≤ compactEvery deltas after it (LogState.pathsAsOf).
     val histPaths = graft.tools.LogState.pathsAsOf(indexRoot, batchId - 1)
     val histIndex =
-      if (histPaths.nonEmpty) sp.read.parquet(histPaths: _*)
+      if (histPaths.nonEmpty) Tables.parquet(sp, histPaths: _*)
       else newBands.limit(0)
     // the shared refresh core: batch×index ∪ batch×batch candidates,
     // combined-bucket skew cap, candidate-pruned exact verify. A doc is a
@@ -1842,7 +1842,7 @@ object Dedup {
       graft.tools.RoutingMetrics.add(f"sh_read_b$batchId%03d",
         buckets.size.toLong)
       if (paths.isEmpty) shingleSetsOf(arriving).limit(0)
-      else sp.read.parquet(paths: _*).join(candIds, Seq("doc_id"), "left_semi")
+      else Tables.parquet(sp, paths: _*).join(candIds, Seq("doc_id"), "left_semi")
     }
     val dupIds = deltaVerifiedPairs(histIndex, newBands,
       verifyFromStore, jaccardThreshold, maxBucket)
@@ -1904,7 +1904,7 @@ object Dedup {
                     compactEvery: Int = 2): DataFrame = {
     val base = graft.tools.StateCache.getOrBuild(
       "dedup_stream_minhash",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$jaccardThreshold|$maxBucket|$chunks|$compactEvery") { b =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$jaccardThreshold|$maxBucket|$chunks|$compactEvery") { b =>
       val base = b
       val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", "8")
@@ -1956,7 +1956,7 @@ object Dedup {
     val survPaths =
       graft.tools.LogState.pathsAsOf(s"$base/state/survivors", Long.MaxValue)
     require(survPaths.nonEmpty, s"no survivor state under $base/state")
-    spark.read.parquet(survPaths: _*)
+    Tables.parquet(spark, survPaths: _*)
       .stage()
       .orderBy(col("doc_id"))
   }
@@ -2271,12 +2271,14 @@ object Dedup {
     // so a cached index equals a retrained one — and iterations after
     // the first pay assignment + pair enumeration, not the ~8 sequential
     // driver jobs of a k-means‖ fit. Probe callers that hand a frame
-    // with no directory identity keep the inline fit.
+    // with no directory identity keep the inline fit. The cached index
+    // trains on `embeddings(d)` itself, not on `corpus`, so it is by
+    // construction the index its key names.
     val centroids = indexDir match {
       case Some(d) =>
         graft.tools.ArtifactCache.parquet(spark, d,
           s"semdedup_c${k}_i$iterations") { p =>
-          KMeans.saveIndex(KMeans.fit(spark, corpus, k, iterations), p)
+          KMeans.saveIndex(KMeans.fit(spark, Tables.embeddings(spark, d), k, iterations), p)
         }
       case None => KMeans.fit(spark, corpus, k, iterations)
     }
@@ -2633,7 +2635,7 @@ object Dedup {
     graft.tools.RoutingMetrics.add("sem_buckets_read", buckets.size.toLong)
     graft.tools.RoutingMetrics.add("sem_buckets_total",
       graft.tools.RangeState.partDirs(memberRoot).size.toLong)
-    val mates = sp.read.parquet(paths: _*)
+    val mates = Tables.parquet(sp, paths: _*)
       .select(col("cluster_id"), col("vec_id"), col("v"))
     val dups = semanticDupIds(mates, assigned, eps)
     arriving.select(col("vec_id"))
@@ -2658,7 +2660,7 @@ object Dedup {
     val cdir = Similarity.clusteredCorpusDir(spark)
     val base = graft.tools.StateCache.getOrBuild(
       "dedup_stream_semantic_clustered",
-      s"$cdir@${graft.tools.ArtifactCache.dirToken(cdir)}|$epochs") { root =>
+      s"$cdir@${graft.tools.ArtifactCache.pathToken(cdir)}|$epochs") { root =>
       val statePath = s"$root/state"
       val all = Tables.embeddings(spark, cdir)
         .select(col("vec_id"), col("embedding")).stage()
@@ -2673,7 +2675,7 @@ object Dedup {
     }
     val paths = graft.tools.LogState.pathsAsOf(s"$base/state/survivors",
       epochs - 1L)
-    spark.read.parquet(paths: _*).stage()
+    Tables.parquet(spark, paths: _*).stage()
       .orderBy(col("vec_id"))
   }
 
@@ -2838,7 +2840,7 @@ object Dedup {
     }.reduce(_ unionByName _).stage()
     val histPaths = graft.tools.LogState.pathsAsOf(indexRoot, batchId - 1)
     val hist =
-      if (histPaths.nonEmpty) sp.read.parquet(histPaths: _*)
+      if (histPaths.nonEmpty) Tables.parquet(sp, histPaths: _*)
       else newRows.limit(0)
     // delta-side multi-probe: (table, sig) keys within Hamming ≤ probes
     // of each arriving vector's signature. DELIBERATELY LAZY: at
@@ -2895,7 +2897,7 @@ object Dedup {
       buckets.size.toLong)
     val aEmb =
       if (paths.isEmpty) arriving.limit(0)
-      else sp.read.parquet(paths: _*)
+      else Tables.parquet(sp, paths: _*)
         .join(candIds, Seq("vec_id"), "left_semi")
     val dupIds = cands
       .join(aEmb.select(col("vec_id").as("a_id"),
@@ -2956,7 +2958,7 @@ object Dedup {
     val cdir = Similarity.clusteredCorpusDir(spark)
     val base = graft.tools.StateCache.getOrBuild(
       "dedup_stream_embedding_clustered",
-      s"$cdir@${graft.tools.ArtifactCache.dirToken(cdir)}|$epochs") { root =>
+      s"$cdir@${graft.tools.ArtifactCache.pathToken(cdir)}|$epochs") { root =>
       val statePath = s"$root/state"
       val all = Tables.embeddings(spark, cdir)
         .select(col("vec_id"), col("embedding")).stage()
@@ -2971,7 +2973,7 @@ object Dedup {
     }
     val paths = graft.tools.LogState.pathsAsOf(s"$base/state/survivors",
       epochs - 1L)
-    spark.read.parquet(paths: _*).stage()
+    Tables.parquet(spark, paths: _*).stage()
       .orderBy(col("vec_id"))
   }
 
@@ -3819,7 +3821,7 @@ object Dedup {
       epoch - 1)
     val histOccs =
       if (histOccPaths.isEmpty) batchOccs.limit(0)
-      else sp.read.parquet(histOccPaths: _*)
+      else Tables.parquet(sp, histOccPaths: _*)
     val affected = histOccs
       .join(batchOccs.select(col("d1"), col("d2")).distinct(),
         Seq("d1", "d2"), "left_semi")
@@ -3838,7 +3840,7 @@ object Dedup {
       epoch - 1)
     val affectedDocs =
       if (histDocPaths.isEmpty) batchDocs.limit(0)
-      else sp.read.parquet(histDocPaths: _*)
+      else Tables.parquet(sp, histDocPaths: _*)
         .join(affected, Seq("doc_id"), "left_semi")
     val rDocs = affectedDocs.unionByName(batchDocs)
     val recomputed = substrCoverRebuild(substrToks(rDocs), starts, n)
@@ -3874,7 +3876,7 @@ object Dedup {
                            upTo: Long): Option[DataFrame] = {
     val paths = graft.tools.LogState.pathsAsOf(s"$statePath/results", upTo)
     if (paths.isEmpty) None
-    else Some(substringResultsFold(sp.read.parquet(paths: _*)))
+    else Some(substringResultsFold(Tables.parquet(sp, paths: _*)))
   }
 
   /** STREAMING substring dedup through the HASH GATE: deterministic
@@ -3889,7 +3891,7 @@ object Dedup {
                       epochs: Int = 4, byRange: Boolean = false): DataFrame = {
     val base = graft.tools.StateCache.getOrBuild(
       "dedup_stream_substring",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$epochs|$byRange") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs|$byRange") { root =>
       val statePath = s"$root/state"
       val all = Tables.documents(spark, dir)
         .select(col("doc_id"), col("text")).stage()
@@ -3949,7 +3951,7 @@ object Dedup {
                           latenessMicros: Long = 1500000L): DataFrame = {
     val base = graft.tools.StateCache.getOrBuild(
       "dedup_stream_substring_late",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$epochs|$latenessMicros") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs|$latenessMicros") { root =>
       val dedupState = s"$root/state"
       val lateState = s"$root/late"
       val all = lateEventTime(
@@ -4036,20 +4038,20 @@ object Dedup {
       graft.tools.LogState.pathsAsOf(s"$statePath/banned", epoch - 1)
     val banned =
       (if (histBannedPaths.isEmpty) newBanned
-       else sp.read.parquet(histBannedPaths: _*).unionByName(newBanned))
+       else Tables.parquet(sp, histBannedPaths: _*).unionByName(newBanned))
         .distinct()
     val histOccPaths =
       graft.tools.LogState.pathsAsOf(s"$statePath/occs", epoch - 1)
     val histOccs =
       if (histOccPaths.isEmpty) batchOccs.limit(0)
-      else sp.read.parquet(histOccPaths: _*)
+      else Tables.parquet(sp, histOccPaths: _*)
     val affected = histOccs.join(newBanned, Seq("d1", "d2"), "left_semi")
       .select(col("doc_id")).distinct().stage()
     val histDocPaths =
       graft.tools.LogState.pathsAsOf(s"$statePath/docs", epoch - 1)
     val affectedDocs =
       if (histDocPaths.isEmpty) batchDocs.limit(0)
-      else sp.read.parquet(histDocPaths: _*)
+      else Tables.parquet(sp, histDocPaths: _*)
         .join(affected, Seq("doc_id"), "left_semi")
     val rDocs = affectedDocs.unionByName(batchDocs)
     val rOccs = histOccs.join(affected, Seq("doc_id"), "left_semi")
@@ -4106,7 +4108,7 @@ object Dedup {
                           epochs: Int = 4): DataFrame = {
     val base = graft.tools.StateCache.getOrBuild(
       "dedup_stream_decontaminate",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$epochs") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs") { root =>
       val statePath = s"$root/state"
       val all = Tables.documents(spark, dir)
         .withColumn("bucket",

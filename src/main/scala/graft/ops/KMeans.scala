@@ -199,7 +199,7 @@ object KMeans {
 
   /** Load a quantizer persisted by saveIndex. */
   def loadIndex(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
 
   /** Nearest-centroid assignment: collect the ≤k centroid rows once, then
     * a single map-side kernel pass — no join, no window, no shuffle.

@@ -70,12 +70,12 @@ object Layout {
     try {
       Tables.documents(spark, dir).repartition(64)
         .write.mode("overwrite").parquet(s"$base/small")
-      val frag = spark.read.parquet(s"$base/small")
+      val frag = Tables.parquet(spark, s"$base/small")
       val totalBytes = new java.io.File(s"$base/small").listFiles()
         .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
       val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
       frag.repartition(nOut).write.mode("overwrite").parquet(s"$base/compact")
-      spark.read.parquet(s"$base/compact")
+      Tables.parquet(spark, s"$base/compact")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .orderBy(col("doc_id"))
         .stage() // materialize before the temp layout is deleted

@@ -685,7 +685,7 @@ object Multimodal {
           k, statePath, maxHamming = 3, maxBucket = 200, compactEvery = 2)
       }
     }
-    spark.read.parquet(graft.tools.LogState.pathsAsOf(
+    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
         s"$base/state/survivors", epochs - 1L): _*)
       .stage()
       .orderBy(col("doc_id"))
@@ -951,7 +951,7 @@ object Multimodal {
           k, statePath, span = 64, minAligned = 2, compactEvery = 2)
       }
     }
-    spark.read.parquet(graft.tools.LogState.pathsAsOf(
+    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
         s"$base/state/survivors", epochs - 1L): _*)
       .stage()
       .orderBy(col("doc_id"))
@@ -997,7 +997,7 @@ object Multimodal {
           k, statePath, maxHamming = 3, maxBucket = 200, compactEvery = 2)
       }
     }
-    spark.read.parquet(graft.tools.LogState.pathsAsOf(
+    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
         s"$base/state/survivors", epochs - 1L): _*)
       .stage()
       .orderBy(col("doc_id"))
@@ -1172,17 +1172,22 @@ object Multimodal {
     // persisted pair set, the caption flags and the attrition report —
     // stays fully timed: that is the recurring production term the gate
     // exists to measure. The corpus is synthesized (dir-independent), so
-    // the cache keys on the regime tag + split, as the stream form does.
+    // the cache keys on the regime tag + split, as the stream form does,
+    // plus the dedup parameters baked into the persisted pair set — read
+    // from the same vals as the build, so key and build cannot drift.
+    val maxHamming = 3
+    val maxBucket = 200
     val histBase = graft.tools.StateCache.getOrBuild(
-      "pipeline_mm_curation_incr_hist", s"clustered|$splitId") { root =>
+      "pipeline_mm_curation_incr_hist",
+      s"clustered|$splitId|$maxHamming|$maxBucket") { root =>
       pairFpsOf(mmPairImages(spark, 0, splitId))
         .write.mode("overwrite").parquet(s"$root/fp")
-      Dedup.fingerprintNearDup(spark.read.parquet(s"$root/fp"),
-          maxHamming = 3, maxBucket = 200, sorted = false)
+      Dedup.fingerprintNearDup(Tables.parquet(spark, s"$root/fp"),
+          maxHamming = maxHamming, maxBucket = maxBucket, sorted = false)
         .write.mode("overwrite").parquet(s"$root/pairs")
     }
-    val histFp = spark.read.parquet(s"$histBase/fp")
-    val histPairs = spark.read.parquet(s"$histBase/pairs")
+    val histFp = Tables.parquet(spark, s"$histBase/fp")
+    val histPairs = Tables.parquet(spark, s"$histBase/pairs")
     // captions are pure column arithmetic over the id range — no raster
     // synthesis on the per-iteration path for history rows
     val caps = withPairCaptions(graft.Tables.sizedRange(spark, 0, 140)
@@ -1191,7 +1196,7 @@ object Multimodal {
     val delta = caps.filter(col("pair_id") >= splitId)
     val deltaFp = pairFpsOf(mmPairImages(spark, splitId, 140)).stage()
     val laterDups = Dedup.fingerprintIncrementalFrom(histFp, histPairs,
-        deltaFp, maxHamming = 3, maxBucket = 200, sorted = false)
+        deltaFp, maxHamming = maxHamming, maxBucket = maxBucket, sorted = false)
       .select(col("b_id").as("pair_id")).distinct()
     def baseFlags(df: DataFrame): DataFrame = df
       .join(laterDups.withColumn("is_dup", lit(true)), Seq("pair_id"), "left")
@@ -1284,13 +1289,13 @@ object Multimodal {
           .toDF("doc_id", "fp").stage()
         Dedup.fingerprintStreamApplyBatch(fps, k, imgState,
           maxHamming = 3, maxBucket = 200, compactEvery = 2)
-        val surv = spark.read.parquet(graft.tools.LogState.pathsAsOf(
+        val surv = Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
             s"$imgState/survivors", k): _*)
           .select(col("doc_id").as("pair_id"), lit(true).as("s1x"))
         val capHist =
           if (k == 0) batch.select(col("caption"),
             lit(0L).as("hist_min")).limit(0)
-          else spark.read.parquet(graft.tools.LogState.pathsAsOf(
+          else Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
               capRoot, k - 1L): _*)
             .groupBy(col("caption")).agg(min(col("cap_id")).as("hist_min"))
         val flagged = batch
@@ -1322,7 +1327,7 @@ object Multimodal {
           .write.mode("overwrite").parquet(s"$repRoot/delta/v$k")
       }
     }
-    spark.read.parquet(graft.tools.LogState.pathsAsOf(
+    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
         s"$base/report", epochs - 1L): _*)
       .groupBy(col("stage"))
       .agg(sum(col("n_pairs")).as("n_pairs"), sum(col("id_sum")).as("id_sum"))

@@ -209,7 +209,7 @@ object Relational2 {
     * runs; with a bounded source its result equals the batch aggregation,
     * which is what the oracle computes. */
   def q33StreamTumbling(spark: SparkSession, dir: String): DataFrame = withStreamScopedConf(spark) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet") // the file source wants a directory
       .parquet(dir)
@@ -251,7 +251,7 @@ object Relational2 {
   def q50StreamFileSink(spark: SparkSession, dir: String): DataFrame = withStreamScopedConf(spark) {
     val base = graft.tools.TempDirs.createFast("graft-q50")
     try {
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
+      val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
       val stream = spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir)
@@ -271,7 +271,7 @@ object Relational2 {
       // eager localCheckpoint materializes the read-back so the sink/
       // checkpoint directories can be deleted before returning (repeated
       // bench/correctness runs would otherwise accumulate orphaned dirs)
-      spark.read.parquet(s"$base/out").stage()
+      Tables.parquet(spark, s"$base/out").stage()
         .orderBy(col("bucket"), col("event_type"))
     } finally graft.tools.TempDirs.deleteRecursively(base)
   }
@@ -297,7 +297,7 @@ object Relational2 {
   def q84StreamPagedSink(spark: SparkSession, dir: String): DataFrame = withStreamScopedConf(spark) {
     val base = graft.tools.TempDirs.createFast("graft-q84")
     try {
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
+      val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
       val stream = spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir)
@@ -345,7 +345,7 @@ object Relational2 {
     val base = graft.tools.TempDirs.createFast("graft-q85")
     try {
       val paged = s"$base/pages"
-      val ev = spark.read.parquet(s"$dir/events.parquet")
+      val ev = Tables.parquet(spark, s"$dir/events.parquet")
         .select(col("event_id"), col("event_type"),
           col("value").cast(DecimalType(18, 2)).cast("string").as("value"))
       def wave(rem: Int): Unit = ev
@@ -364,7 +364,7 @@ object Relational2 {
         wave(1)                 // ... then new pages appear ...
         q.processAllAvailable() // ... and the next poll must catch them
       } finally q.stop()
-      spark.read.parquet(s"$base/out")
+      Tables.parquet(spark, s"$base/out")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
@@ -393,7 +393,7 @@ object Relational2 {
   def q51StreamSessionSink(spark: SparkSession, dir: String): DataFrame = withStreamScopedConf(spark) {
     val base = graft.tools.TempDirs.createFast("graft-q51")
     try {
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
+      val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
       val stream = spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir)
@@ -411,7 +411,7 @@ object Relational2 {
         .outputMode("append")
         .start()
       try q.processAllAvailable() finally q.stop()
-      spark.read.parquet(s"$base/out").stage()
+      Tables.parquet(spark, s"$base/out").stage()
         .orderBy(col("event_type"), col("session_start"))
     } finally graft.tools.TempDirs.deleteRecursively(base)
   }
@@ -455,7 +455,7 @@ object Relational2 {
   def q53StreamDedupSink(spark: SparkSession, dir: String): DataFrame = withStreamScopedConf(spark) {
     val base = graft.tools.TempDirs.createFast("graft-q53")
     try {
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
+      val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
       val stream = spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir)
@@ -470,7 +470,7 @@ object Relational2 {
         .outputMode("append")
         .start()
       try q.processAllAvailable() finally q.stop()
-      spark.read.parquet(s"$base/out").stage()
+      Tables.parquet(spark, s"$base/out").stage()
         .orderBy(col("event_type"), col("bucket"))
     } finally graft.tools.TempDirs.deleteRecursively(base)
   }
@@ -493,7 +493,7 @@ object Relational2 {
   def q59StreamStreamJoin(spark: SparkSession, dir: String): DataFrame = withStreamScopedConf(spark) {
     val base = graft.tools.TempDirs.createFast("graft-q59")
     try {
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
+      val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
       val src = spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir)
@@ -519,7 +519,7 @@ object Relational2 {
         .outputMode("append")
         .start()
       try q.processAllAvailable() finally q.stop()
-      spark.read.parquet(s"$base/out").stage()
+      Tables.parquet(spark, s"$base/out").stage()
         .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
     } finally graft.tools.TempDirs.deleteRecursively(base)
   }
@@ -544,7 +544,7 @@ object Relational2 {
   def q60StreamOuterJoin(spark: SparkSession, dir: String): DataFrame = withStreamScopedConf(spark) {
     val base = graft.tools.TempDirs.createFast("graft-q60")
     try {
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
+      val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
       val src = spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir)
@@ -571,7 +571,7 @@ object Relational2 {
         .outputMode("append")
         .start()
       try q.processAllAvailable() finally q.stop()
-      spark.read.parquet(s"$base/out").stage()
+      Tables.parquet(spark, s"$base/out").stage()
         .orderBy(col("user_id"), col("click_id"),
           coalesce(col("purchase_id"), lit(-1L)))
     } finally graft.tools.TempDirs.deleteRecursively(base)
@@ -608,7 +608,7 @@ object Relational2 {
     try {
       Tables.documents(spark, dir)
         .write.mode("overwrite").partitionBy("lang").parquet(s"$base/docs")
-      spark.read.parquet(s"$base/docs")
+      Tables.parquet(spark, s"$base/docs")
         .filter(col("lang") === "en")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
@@ -714,7 +714,7 @@ object Relational2 {
           ev.filter(expr(s"(event_id - $lo) div $width") === k),
           k, statePath, compactEvery = 2)
       }
-      val folded = spark.read.parquet(graft.tools.LogState.pathsAsOf(
+      val folded = Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
           s"$statePath/sk", epochs - 1L): _*)
         .groupBy(col("event_type"))
         .agg(hll_sketch_estimate(hll_union_agg(col("sk")))
@@ -740,7 +740,7 @@ object Relational2 {
   def q63ForeachBatchSink(spark: SparkSession, dir: String): DataFrame = withStreamScopedConf(spark) {
     val base = graft.tools.TempDirs.createFast("graft-q63")
     try {
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
+      val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
       val stream = spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir)
@@ -770,7 +770,7 @@ object Relational2 {
       // multi-executor cluster would lose blocks on executor failure, so
       // there this would be a reliable checkpoint() or a copy-out before
       // the temp sink dir is deleted.
-      val out = spark.read.parquet(s"$base/out").stage()
+      val out = Tables.parquet(spark, s"$base/out").stage()
         .orderBy(col("bucket"), col("event_type"))
       graft.tools.PhaseTiming.record("readback", (System.nanoTime() - t1) / 1e9)
       out
@@ -815,7 +815,7 @@ object Relational2 {
     * emission-exact: 8298 of 8326 sessions at sf0.01. */
   def q65CustomSessionize(spark: SparkSession, dir: String): DataFrame = withStreamScopedConf(spark) {
     import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)
@@ -1218,7 +1218,7 @@ object Relational2 {
     * bounded source the result equals the batch join + aggregation, which
     * is what the oracle computes. */
   def q66StreamStaticJoin(spark: SparkSession, dir: String): DataFrame = withStreamScopedConf(spark) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
     val customers = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
     val stream = spark.readStream.schema(schema)
@@ -1315,7 +1315,7 @@ object Relational2 {
   def q68StreamSlidingSink(spark: SparkSession, dir: String): DataFrame = withStreamScopedConf(spark) {
     val base = graft.tools.TempDirs.createFast("graft-q68")
     try {
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
+      val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
       val stream = spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir)
@@ -1331,7 +1331,7 @@ object Relational2 {
         .outputMode("append")
         .start()
       try q.processAllAvailable() finally q.stop()
-      spark.read.parquet(s"$base/out").stage()
+      Tables.parquet(spark, s"$base/out").stage()
         .orderBy(col("bucket"), col("event_type"))
     } finally graft.tools.TempDirs.deleteRecursively(base)
   }
@@ -1597,13 +1597,13 @@ object Relational2 {
     // follows identically); iterations measure the versioned-table READ
     // the Rewrite layout is about (newest version as-is, zero merge).
     val base = graft.tools.StateCache.getOrBuild("q87_stream_upsert",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$chunks") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$chunks") { root =>
       val statePath = s"$root/state"
       Tables.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
           col("value"))
         .repartition(chunks).write.mode("overwrite").parquet(s"$root/in")
-      val schema = spark.read.parquet(s"$root/in").schema
+      val schema = Tables.parquetSchema(spark, s"$root/in")
       val q = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$root/in")
         .writeStream
@@ -1645,7 +1645,7 @@ object Relational2 {
     // iterations measure the AS-OF FOLD the time-travel feature is
     // about: range-pruned pathsAsOf + latest-wins merge.
     val base = graft.tools.StateCache.getOrBuild("q103_time_travel",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$epochs") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs") { root =>
       val statePath = s"$root/state"
       val ev = Tables.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -1737,13 +1737,13 @@ object Relational2 {
     // built once per JVM (VERDICT r18 #2, the q99 recipe); iterations
     // measure the merged base+delta READ the MOR layout is about.
     val base = graft.tools.StateCache.getOrBuild("q95_mor_upsert",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$chunks|$compactEvery") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$chunks|$compactEvery") { root =>
       val statePath = s"$root/state"
       Tables.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
           col("value"))
         .repartition(chunks).write.mode("overwrite").parquet(s"$root/in")
-      val schema = spark.read.parquet(s"$root/in").schema
+      val schema = Tables.parquetSchema(spark, s"$root/in")
       val q = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$root/in")
         .writeStream
@@ -1804,13 +1804,13 @@ object Relational2 {
                            maxDeltas: Int = 3): DataFrame =
     withStreamScopedConf(spark) {
       val base = graft.tools.StateCache.getOrBuild("q96_partitioned_upsert",
-        s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$chunks|$numPartitions|$maxDeltas") { root =>
+        s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$chunks|$numPartitions|$maxDeltas") { root =>
         val statePath = s"$root/state"
         Tables.events(spark, dir)
           .select(col("event_id"), col("ts"), col("user_id"),
             col("event_type"), col("value"))
           .repartition(chunks).write.mode("overwrite").parquet(s"$root/in")
-        val schema = spark.read.parquet(s"$root/in").schema
+        val schema = Tables.parquetSchema(spark, s"$root/in")
         val q = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(s"$root/in")
           .writeStream
@@ -1993,7 +1993,7 @@ object Relational2 {
     // measure the probe-key derivation plus the three PRUNED keyed
     // lookups the gate is about (one partition's base + deltas each).
     val base = graft.tools.StateCache.getOrBuild("q98_point_lookup",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$epochs|$numPartitions|$maxDeltas") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs|$numPartitions|$maxDeltas") { root =>
       val statePath = s"$root/state"
       val ev = Tables.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -2084,10 +2084,10 @@ object Relational2 {
     // stays visible as the q99_state.build phase). The maintenance
     // depth itself (tombstones across 4 epochs, fan-in compaction) is
     // unchanged — the gate's oracle still checks the full ingest.
-    // dirToken folded in so a corpus rebuilt in place under the same
+    // pathToken folded in so a corpus rebuilt in place under the same
     // path (ScaleProbe multiplier sweeps) re-ingests instead of serving
     // state built from the old contents (ADVICE r18).
-    val key = (s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}",
+    val key = (s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}",
       epochs, numPartitions, maxDeltas, indexBuckets)
     val policy = CdcUpsert.Indexed(
       CdcUpsert.Partitioned(numPartitions, maxDeltas), indexBuckets)
@@ -2176,7 +2176,7 @@ object Relational2 {
     // state read + join projection, i.e. the read path a lateness
     // monitor pays per question.
     val base = graft.tools.StateCache.getOrBuild("q100_late_quarantine",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$epochs|$latenessMicros") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs|$latenessMicros") { root =>
       val statePath = s"$root/state"
       val ev = Tables.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -2274,7 +2274,7 @@ object Relational2 {
     // its Rewrite arm GCs v(k−2) at apply time, so its per-epoch
     // observations only exist at apply time (rowsWrittenAt doc).
     val base = graft.tools.StateCache.getOrBuild("q101_sparse_touch",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$epochs|$numPartitions") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs|$numPartitions") { root =>
       val statePath = s"$root/state"
       val ev = Tables.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -2309,7 +2309,7 @@ object Relational2 {
         (0 to k).filter(hasDelta(p, _)).map(j => s"$p/delta/v$j"))
       val stateRows =
         if (asOfPaths.isEmpty) 0L
-        else CdcUpsert.fold(spark.read.parquet(asOfPaths: _*)).count()
+        else CdcUpsert.fold(Tables.parquet(spark, asOfPaths: _*)).count()
       (k.toLong, touched, totalAsOf, written, stateRows)
     }
     import spark.implicits._

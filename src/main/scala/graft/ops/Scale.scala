@@ -207,7 +207,7 @@ object Scale {
     // exchange-free catalog-read join the layout exists to serve. The
     // write cost stays visible as the q94_layout.build phase.
     graft.tools.StateCache.getOrBuild("q94_layout",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|b8") { _ =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|b8") { _ =>
       val t0 = System.nanoTime()
       bucketedJoin(spark, li, ord, "l_orderkey", buckets = 8,
         "graft_q94_lineitem", "graft_q94_orders")

@@ -585,7 +585,7 @@ object Similarity {
       .distinct().collect().map(_.getInt(0)).toSeq
     val vecPaths = graft.tools.RangeState.pathsForBuckets(vecRoot,
       touchedBuckets, batchId)
-    val edges = buildHnswEdges(sp.read.parquet(vecPaths: _*), 0L)
+    val edges = buildHnswEdges(Tables.parquet(sp, vecPaths: _*), 0L)
     graft.tools.RangeState.publishDelta(edgeRoot, batchId, edges,
       graft.tools.RangeState.bucketCol(bounds, col("src")))
     graft.tools.RangeState.maintainTouched(sp, touchedVec, batchId, 4)(identity)
@@ -622,7 +622,7 @@ object Similarity {
                      epochs: Int = 5): DataFrame = {
     val base = graft.tools.StateCache.getOrBuild(
       "sim_topk_hnsw_stream",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$epochs") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs") { root =>
       val statePath = s"$root/state"
       val vecs = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding")).stage()
@@ -634,8 +634,7 @@ object Similarity {
           k, statePath)
       }
     }
-    val edges = spark.read
-      .parquet(hnswEdgePathsAsOf(s"$base/state/edges", epochs - 1L): _*)
+    val edges = Tables.parquet(spark, hnswEdgePathsAsOf(s"$base/state/edges", epochs - 1L): _*)
       .stage()
     rerankSlim(spark, dir, hnswCandidatesOver(spark, dir, edges))
   }
@@ -656,8 +655,7 @@ object Similarity {
             (col("vec_id") < (k + 1) * width || lit(k == epochs - 1))),
           k, statePath)
       }
-      spark.read
-        .parquet(hnswEdgePathsAsOf(s"$statePath/edges", epochs - 1L): _*)
+      Tables.parquet(spark, hnswEdgePathsAsOf(s"$statePath/edges", epochs - 1L): _*)
         .stage()
     } finally graft.tools.TempDirs.deleteRecursively(base)
   }
@@ -1178,7 +1176,7 @@ object Similarity {
     // brute-force scan once, then measure INDEX search only (ADVICE
     // r10 — the measurement used to rerun ground truth + each tier's
     // candidate pipeline twice per iteration).
-    // driver-side memo (dirToken-keyed) around the per-iteration collect
+    // driver-side memo (pathToken-keyed) around the per-iteration collect
     // of the persisted truth set and the corpus-count metadata job: both
     // are deterministic functions of the immutable corpus, and paying a
     // dispatch-floored job per iteration to re-materialize them measured
@@ -1590,7 +1588,7 @@ object Similarity {
                            upTo: Long): Option[DataFrame] = {
     val paths = graft.tools.LogState.pathsAsOf(s"$statePath/stats", upTo)
     if (paths.isEmpty) None
-    else Some(embStatsFold(sp.read.parquet(paths: _*)).orderBy(col("dim")))
+    else Some(embStatsFold(Tables.parquet(sp, paths: _*)).orderBy(col("dim")))
   }
 
   /** STREAMING drift monitor through the HASH GATE: contiguous id-range

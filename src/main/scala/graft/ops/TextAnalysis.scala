@@ -773,7 +773,7 @@ object TextAnalysis {
       val paths = graft.tools.LogState.pathsAsOf(s"$statePath/$root",
         epoch - 1)
       if (paths.isEmpty) flags0.select(col("udig").as("dig")).limit(0)
-      else sp.read.parquet(paths: _*)
+      else Tables.parquet(sp, paths: _*)
     }
     val urlHist = histOf("urlwin")
     val newUrlWin = flags0.groupBy(col("udig"))
@@ -817,7 +817,7 @@ object TextAnalysis {
                           upTo: Long): Option[DataFrame] = {
     val paths = graft.tools.LogState.pathsAsOf(s"$statePath/flags", upTo)
     if (paths.isEmpty) None
-    else Some(funnelReport(sp.read.parquet(paths: _*)))
+    else Some(funnelReport(Tables.parquet(sp, paths: _*)))
   }
 
   /** STREAMING funnel through the HASH GATE: contiguous id-range
@@ -830,7 +830,7 @@ object TextAnalysis {
                     epochs: Int = 4): DataFrame = {
     val base = graft.tools.StateCache.getOrBuild(
       "pipeline_fineweb_stream",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$epochs") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs") { root =>
       val statePath = s"$root/state"
       val all = Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), col("text")).stage()
@@ -870,7 +870,7 @@ object TextAnalysis {
                         latenessMicros: Long = Corpus.StreamLatenessMicros): DataFrame = {
     val base = graft.tools.StateCache.getOrBuild(
       "pipeline_fineweb_stream_late",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$epochs|$latenessMicros") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs|$latenessMicros") { root =>
       val statePath = s"$root/state"
       val lateState = s"$root/late"
       val all = Tables.documents(spark, dir)
@@ -1167,9 +1167,9 @@ object TextAnalysis {
     val tEpoch = System.nanoTime()
     graft.tools.LogState.requireNoFuture(s"$statePath/results", epoch)
     val res = dsirScore(dsirGrams(batch),
-      sp.read.parquet(s"$modelPath/raw"),
-      sp.read.parquet(s"$modelPath/tgt"),
-      sp.read.parquet(s"$modelPath/totals"))
+      Tables.parquet(sp, s"$modelPath/raw"),
+      Tables.parquet(sp, s"$modelPath/tgt"),
+      Tables.parquet(sp, s"$modelPath/totals"))
       .withColumn("epoch", lit(epoch))
     res.write.mode("overwrite")
       .parquet(s"$statePath/results/delta/v$epoch")
@@ -1190,7 +1190,7 @@ object TextAnalysis {
                  epochs: Int = 4): DataFrame = {
     val base = graft.tools.StateCache.getOrBuild(
       "text_dsir_stream",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$epochs") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs") { root =>
       val modelPath = s"$root/model"
       val statePath = s"$root/state"
       dsirModelTrain(spark, dir, modelPath)
@@ -1205,7 +1205,7 @@ object TextAnalysis {
           k, statePath, modelPath, compactEvery = 2)
       }
     }
-    spark.read.parquet(graft.tools.LogState.pathsAsOf(
+    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
         s"$base/state/results", epochs - 1L): _*)
       .select(col("doc_id"), col("n_grams"), col("score_sum"),
         col("score_avg"), col("selected"))
@@ -1335,15 +1335,15 @@ object TextAnalysis {
     // stays visible as the dsir_model.build phase; text_dsir keeps
     // gating the inline-model batch form.
     val modelPath = graft.tools.StateCache.getOrBuild("dsir_model",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}") { root =>
       dsirModelTrain(spark, dir, root)
     }
     val scored = dsirScore(
       dsirGrams(s6.select(col("doc_id"), col("lang"),
         col("clean_text").as("text"))),
-      spark.read.parquet(s"$modelPath/raw"),
-      spark.read.parquet(s"$modelPath/tgt"),
-      spark.read.parquet(s"$modelPath/totals"))
+      Tables.parquet(spark, s"$modelPath/raw"),
+      Tables.parquet(spark, s"$modelPath/tgt"),
+      Tables.parquet(spark, s"$modelPath/totals"))
     val s7 = s6
       .join(scored.filter(col("selected")).select(col("doc_id")),
         Seq("doc_id"), "left_semi")

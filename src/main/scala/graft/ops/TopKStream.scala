@@ -56,7 +56,7 @@ private[ops] object TopKStream {
     val paths = graft.tools.LogState.pathsAsOf(s"$statePath/cand", upTo)
     if (paths.isEmpty) None
     else Some(TwoLevel.rank(
-      topK(sp.read.parquet(paths: _*), stratum, k)
+      topK(graft.Tables.parquet(sp, paths: _*), stratum, k)
         .withColumn("__cb",
           substring(col("ord"), 1, TwoLevel.Md5PrefixChars)),
       Seq(stratum), "__cb", Seq(col("ord"), col("doc_id")), "rk"))

@@ -244,7 +244,7 @@ object UrlCuration {
     val hist =
       if (histPaths.isEmpty)
         canon.select(col("digest"), col("doc_id").as("keep_id")).limit(0)
-      else sp.read.parquet(histPaths: _*)
+      else Tables.parquet(sp, histPaths: _*)
     val batchWinners = canon.groupBy(col("digest"))
       .agg(min(col("doc_id")).as("keep_id"))
       .join(hist.select(col("digest")), Seq("digest"), "left_anti")
@@ -274,7 +274,7 @@ object UrlCuration {
                      epochs: Int = 4): DataFrame = {
     val base = graft.tools.StateCache.getOrBuild(
       "text_url_dedup_stream",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$epochs") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs") { root =>
       val statePath = s"$root/state"
       val all = withUrl(spark, dir).select(col("doc_id"), col("url"))
         .stage()
@@ -287,7 +287,7 @@ object UrlCuration {
           k, statePath, compactEvery = 2)
       }
     }
-    spark.read.parquet(graft.tools.LogState.pathsAsOf(
+    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
         s"$base/state/results", epochs - 1L): _*)
       .select(col("doc_id"), col("canon_url"), col("keep"))
       .stage()
@@ -380,7 +380,7 @@ object UrlCuration {
                             k: Int = DomainCapK): Option[DataFrame] = {
     val ranked = TopKStream.rankedAsOf(sp, statePath, upTo, "domain", k)
       .getOrElse(return None)
-    val counts = sp.read.parquet(
+    val counts = Tables.parquet(sp, 
         graft.tools.LogState.pathsAsOf(s"$statePath/domcnt", upTo): _*)
       .groupBy(col("domain")).agg(sum(col("n")).as("n_domain"))
     Some(ranked.join(counts, Seq("domain"))
@@ -399,7 +399,7 @@ object UrlCuration {
                       epochs: Int = 4): DataFrame = {
     val base = graft.tools.StateCache.getOrBuild(
       "corpus_domain_cap_stream",
-      s"$dir@${graft.tools.ArtifactCache.dirToken(dir)}|$epochs") { root =>
+      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs") { root =>
       val statePath = s"$root/state"
       val all = withUrl(spark, dir).select(col("doc_id"), col("url"))
         .stage()

@@ -18,17 +18,19 @@ object ArtifactCache {
   private val paths =
     scala.collection.concurrent.TrieMap[(String, String), String]()
 
-  /** Deterministic content token of a directory: sorted (relative path,
-    * size, mtime-millis) over every regular file, MD5'd. Recomputed on
-    * every lookup — a fixture dir is tens of files, so the walk is
-    * microseconds against any artifact build; caching the token would
-    * re-open the stale-rebuild hole this exists to close. Per-file races
-    * (a file vanishing mid-walk) are folded in as `?` markers rather
-    * than thrown: a changing directory should yield a CHANGING token,
-    * never a crash. */
-  def dirToken(dir: String): String = {
-    val p = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(p)) return "absent"
+  /** Deterministic content token of a path: sorted (relative path,
+    * size, mtime-millis) over every regular file under it — a plain file
+    * is its own one entry — MD5'd; `"absent"` when nothing is there.
+    * Recomputed on every lookup — a fixture dir is tens of files, so the
+    * walk is microseconds against any artifact build; caching the token
+    * would re-open the stale-rebuild hole this exists to close. Per-file
+    * races (a file vanishing mid-walk) are folded in as `?` markers
+    * rather than thrown: a changing directory should yield a CHANGING
+    * token, never a crash. Shared with [[graft.Tables.parquet]]'s schema
+    * key. */
+  def pathToken(path: String): String = {
+    val p = java.nio.file.Paths.get(path)
+    if (!java.nio.file.Files.exists(p)) return "absent"
     val sb = new StringBuilder
     val walk = java.nio.file.Files.walk(p)
     try {
@@ -49,14 +51,14 @@ object ArtifactCache {
 
   def parquet(spark: SparkSession, key: String, kind: String)
              (build: String => Unit): DataFrame = {
-    val path = paths.getOrElseUpdate((s"$key@${dirToken(key)}", kind), {
-      val p = s"$root/${key.replaceAll("[^A-Za-z0-9]", "_")}_${dirToken(key)}/$kind"
+    val path = paths.getOrElseUpdate((s"$key@${pathToken(key)}", kind), {
+      val p = s"$root/${key.replaceAll("[^A-Za-z0-9]", "_")}_${pathToken(key)}/$kind"
       val t0 = System.nanoTime()
       build(p)
       PhaseTiming.record(s"$kind.build", (System.nanoTime() - t0) / 1e9)
       p
     })
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
   }
 
   /** The registered path of an already-built artifact — for builders
@@ -64,7 +66,7 @@ object ArtifactCache {
     * final word table beside its merge table). None until the artifact's
     * first build this session. */
   def pathOf(key: String, kind: String): Option[String] =
-    paths.get((s"$key@${dirToken(key)}", kind))
+    paths.get((s"$key@${pathToken(key)}", kind))
 
   private val driverSide =
     scala.collection.concurrent.TrieMap[(String, String), AnyRef]()
@@ -76,10 +78,10 @@ object ArtifactCache {
     * kilobyte-sized index (measured: the PQ search re-collected its 8
     * subspace codebooks every iteration, ~32 of sim_topk_pq's 44 jobs).
     * Same freshness contract as [[parquet]]: the key folds in
-    * [[dirToken]], so a corpus rebuilt in place re-collects. JVM-lifetime
+    * [[pathToken]], so a corpus rebuilt in place re-collects. JVM-lifetime
     * only — nothing persists across runs, and the first call still pays
     * (and phase-records, via the artifact build) the real cost. */
   def memo[T <: AnyRef](key: String, kind: String)(f: => T): T =
-    driverSide.getOrElseUpdate((s"$key@${dirToken(key)}", kind), f)
+    driverSide.getOrElseUpdate((s"$key@${pathToken(key)}", kind), f)
       .asInstanceOf[T]
 }

@@ -98,7 +98,7 @@ object LogState {
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
       val tc = System.nanoTime()
       roots.foreach { root =>
-        fold(sp.read.parquet(compactionInputs(root, batchId): _*))
+        fold(graft.Tables.parquet(sp, compactionInputs(root, batchId): _*))
           .write.mode("overwrite").parquet(s"$root/base/v$batchId")
       }
       PhaseTiming.record(f"compact$batchId%03d",
@@ -134,7 +134,7 @@ object LogState {
       versions(root, "delta", batchId).count(v => base.forall(_ < v))
     val compact = maxDeltas > 0 && pending >= maxDeltas
     if (compact)
-      fold(sp.read.parquet(compactionInputs(root, batchId): _*))
+      fold(graft.Tables.parquet(sp, compactionInputs(root, batchId): _*))
         .write.mode("overwrite").parquet(s"$root/base/v$batchId")
     gc(root, batchId)
     compact

@@ -34,7 +34,7 @@ object ScaleProbe {
   private def bpeRichCorpus(spark: SparkSession, outDir: String): String = {
     val bdir = s"$outDir/bpe_docs"
     if (!new java.io.File(s"$bdir/documents.parquet/_SUCCESS").exists()) {
-      spark.read.parquet(s"$outDir/documents.parquet")
+      graft.Tables.parquet(spark, s"$outDir/documents.parquet")
         .withColumn("toks",
           expr("filter(split(text, ' '), t -> t != '')"))
         .filter(expr("size(toks) >= 2"))
@@ -57,7 +57,7 @@ object ScaleProbe {
   private def embStreamArm(spark: SparkSession, sfDir: String,
                            reps: org.apache.spark.sql.DataFrame,
                            mult: Int, bits: Int): Long = {
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val e = graft.Tables.parquet(spark, s"$sfDir/embeddings.parquet")
     val nV = e.count()
     val vecs = e.crossJoin(broadcast(reps))
       .select((col("vec_id") * mult + col("rep")).as("vec_id"),
@@ -86,7 +86,7 @@ object ScaleProbe {
       }
       val paths = graft.tools.LogState.pathsAsOf(
         s"$statePath/survivors", 15L)
-      spark.read.parquet(paths: _*).count()
+      graft.Tables.parquet(spark, paths: _*).count()
     } finally TempDirs.deleteRecursively(base)
   }
 
@@ -174,7 +174,7 @@ object ScaleProbe {
     if (corpusReady) println(s"probe corpus reused at $outDir ($wantArgs)")
 
     // documents: MULT copies per doc; rep < MULT/2 exact, rest perturbed
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.Tables.parquet(spark, s"$sfDir/documents.parquet")
     val nDocs = docs.count()
     if (!corpusReady) {
     docs.crossJoin(broadcast(reps))
@@ -189,7 +189,7 @@ object ScaleProbe {
 
     // events: shifted ids/users, ts kept as NANOS LONG (fixture encoding)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val events = spark.read.parquet(s"$sfDir/events.parquet")
+    val events = graft.Tables.parquet(spark, s"$sfDir/events.parquet")
     val nEv = events.count()
     if (!corpusReady) {
     val maxUser = events.agg(max("user_id")).head.getLong(0) + 1
@@ -203,7 +203,7 @@ object ScaleProbe {
       .write.mode("overwrite").parquet(s"$outDir/events.parquet")
 
     // customer: shifted keys (q67 merges events into customer)
-    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
+    val cust = graft.Tables.parquet(spark, s"$sfDir/customer.parquet")
     val maxCust = cust.agg(max("c_custkey")).head.getLong(0) + 1
     cust.crossJoin(broadcast(reps))
       .select(
@@ -226,7 +226,7 @@ object ScaleProbe {
     val embReady = embSentinel.exists() &&
       java.nio.file.Files.readString(embSentinel.toPath).trim == wantArgs
     if (!embReady) {
-      val embT = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val embT = graft.Tables.parquet(spark, s"$sfDir/embeddings.parquet")
       val nVec = embT.count()
       embT.crossJoin(broadcast(reps))
         .select((col("vec_id") + col("rep") * nVec).as("vec_id"),
@@ -308,7 +308,7 @@ object ScaleProbe {
       * runs (and the incremental arm's ArtifactCache artifacts, which
       * live beside it) measure operators, not corpus writes. */
     def semEmbCorpus(): (String, Long) = {
-      val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val e = graft.Tables.parquet(spark, s"$sfDir/embeddings.parquet")
       val nV = e.count()
       val edir = s"$outDir/semprobe"
       val sent = new java.io.File(edir, ".corpus-args")
@@ -350,7 +350,7 @@ object ScaleProbe {
       val ck = s"$outDir/paged_ck"
       val waves = 5
       val pagesPerWave = 125
-      val ev = spark.read.parquet(s"$outDir/events.parquet")
+      val ev = graft.Tables.parquet(spark, s"$outDir/events.parquet")
         .select(col("event_id").cast("string").as("event_id"),
           col("user_id").cast("string").as("user_id"),
           col("event_type"),
@@ -499,7 +499,7 @@ object ScaleProbe {
       val wantD = s"$wantArgs|dominant-v1"
       if (!(sentD.exists() &&
           java.nio.file.Files.readString(sentD.toPath).trim == wantD)) {
-        spark.read.parquet(s"$outDir/documents.parquet")
+        graft.Tables.parquet(spark, s"$outDir/documents.parquet")
           .withColumn("lang",
             when(pmod(col("doc_id"), lit(100)) < 84, lit("en"))
               .otherwise(element_at(
@@ -512,7 +512,7 @@ object ScaleProbe {
           .write.mode("overwrite").parquet(s"$ddir/documents.parquet")
         java.nio.file.Files.writeString(sentD.toPath, wantD)
       }
-      val docsD = spark.read.parquet(s"$ddir/documents.parquet")
+      val docsD = graft.Tables.parquet(spark, s"$ddir/documents.parquet")
         .select(col("lang"), col("doc_id"))
       def maxTaskRows(keys: org.apache.spark.sql.Column*): Long =
         docsD.withColumn("__b",
@@ -557,7 +557,7 @@ object ScaleProbe {
       val wantM = s"$wantArgs|manysrc-v1"
       if (!(sentM.exists() &&
           java.nio.file.Files.readString(sentM.toPath).trim == wantM)) {
-        spark.read.parquet(s"$outDir/documents.parquet")
+        graft.Tables.parquet(spark, s"$outDir/documents.parquet")
           .withColumn("source", concat(lit("s"), pmod(col("doc_id"), lit(500))))
           // one 3-token shingle present in EVERY document of EVERY source
           .withColumn("text", concat(col("text"), lit(" uq vq wq")))
@@ -592,7 +592,7 @@ object ScaleProbe {
       "dedup_substring_n50" -> (() => {
         val ldir = s"$outDir/longdocs"
         if (!new java.io.File(s"$ldir/documents.parquet/_SUCCESS").exists()) {
-          spark.read.parquet(s"$outDir/documents.parquet")
+          graft.Tables.parquet(spark, s"$outDir/documents.parquet")
             .groupBy((col("doc_id") % lit(nDocs * mult / 8)).as("doc_id"))
             .agg(concat_ws(" ", collect_list(col("text"))).as("text"),
               first(col("lang")).as("lang"), first(col("source")).as("source"))
@@ -730,7 +730,7 @@ object ScaleProbe {
       "corpus_unigram8k"   -> (() => {
         val bdir = bpeRichCorpus(spark, outDir)
         graft.ops.Corpus.unigramTrainUncached(spark,
-          spark.read.parquet(s"$bdir/documents.parquet"),
+          graft.Tables.parquet(spark, s"$bdir/documents.parquet"),
           vocabSize = 8192, seedSize = 20000).size.toLong
       }),
       // unigram-LM with a LONG seed inventory (VERDICT r13 #8): maxLen
@@ -743,7 +743,7 @@ object ScaleProbe {
       "corpus_unigram_longseed" -> (() => {
         val bdir = bpeRichCorpus(spark, outDir)
         graft.ops.Corpus.unigramTrainUncached(spark,
-          spark.read.parquet(s"$bdir/documents.parquet"),
+          graft.Tables.parquet(spark, s"$bdir/documents.parquet"),
           vocabSize = 32768, seedMaxLen = 10, seedSize = 50000,
           emIters = 4).size.toLong
       }),

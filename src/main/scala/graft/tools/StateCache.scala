@@ -14,7 +14,7 @@ package graft.tools
   * (LogStateSpec, PartitionedStateSpec, the per-family stream specs),
   * which drive the apply functions directly, and by the first build.
   *
-  * Callers fold [[ArtifactCache.dirToken]] of the corpus dir into `key`
+  * Callers fold [[ArtifactCache.pathToken]] of the corpus dir into `key`
   * so a corpus rebuilt in place (ScaleProbe) can never be served state
   * built from the old contents. Dirs live on tmpfs for the JVM lifetime
   * ([[TempDirs.createFastForJvm]] deletes them at exit). */

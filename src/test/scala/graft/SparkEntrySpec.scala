@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Enforces the driver contract's shape invariants WITHOUT a
@@ -14,7 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - each named twin must exist and be hash-checkable (have oracleSql);
   *  - no stale map entries: a twin-map key that GAINED an oracle (or was
   *    removed) must be deleted from the map, keeping the dump an exact
-  *    census of the board's ○ rows.
+  *    census of the board's ○ rows;
+  *  - one batch parquet read path: `.read.parquet(` appears in no
+  *    `src/main` file but `Tables.scala`, so every table read goes
+  *    through [[Tables.parquet]]'s schema cache.
   */
 class SparkEntrySpec extends AnyFunSuite {
 
@@ -67,5 +73,20 @@ class SparkEntrySpec extends AnyFunSuite {
       SparkEntry.resolve(Seq("q1_pricing_summary", "q1_pricing_sumary", "nope")))
     assert(e.getMessage.contains("q1_pricing_sumary, nope"))
     intercept[IllegalArgumentException](SparkEntry.resolve(Seq(" ", "")))
+  }
+
+  test("grep invariant: no .read.parquet( outside Tables.scala") {
+    val walk = Files.walk(Paths.get("src/main"))
+    val offenders =
+      try walk.iterator().asScala
+        .filter(p => Files.isRegularFile(p) && p.getFileName.toString != "Tables.scala")
+        .flatMap { p =>
+          Files.readString(p).linesIterator.zipWithIndex.collect {
+            case (line, i) if line.contains(".read.parquet(") => s"$p:${i + 1}"
+          }
+        }.toList
+      finally walk.close()
+    assert(offenders.isEmpty,
+      s"batch parquet reads that bypass Tables.parquet: ${offenders.mkString(", ")}")
   }
 }
