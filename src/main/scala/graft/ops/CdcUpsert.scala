@@ -440,6 +440,20 @@ object CdcUpsert {
     if (dirs.isEmpty) None else Some(graft.Tables.parquet(sp, dirs.toIndexedSeq: _*))
   }
 
+  /** A late gate's output: the on-time `kept` rows with a null
+    * `quarantine_epoch`, UNION the rows quarantined under `statePath`
+    * through epoch `upTo` — each carries its `ids` columns and its
+    * quarantine epoch, every other column of `kept` as a typed null. */
+  def withQuarantine(kept: DataFrame, statePath: String, upTo: Long,
+                     ids: String*): DataFrame = {
+    val out = kept.withColumn("quarantine_epoch", lit(null).cast("long"))
+    quarantineAsOf(kept.sparkSession, statePath, upTo).fold(out)(q =>
+      out.unionByName(q.select(kept.schema.map(f =>
+        if (ids.contains(f.name)) col(f.name)
+        else lit(null).cast(f.dataType).as(f.name)) :+
+        col("quarantine_epoch").cast("long"): _*)))
+  }
+
   /** Merged view of the state as of epoch `upTo` (inclusive), `None`
     * before the first write lands. Rewrite reads the newest version at
     * or below `upTo` as-is (the read-optimized payoff: zero merge);

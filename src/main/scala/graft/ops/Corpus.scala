@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.tools.{LogState, StateCache}
 import graft.tools.Stage._
 
 /** Corpus-assembly operators — the steps between "filtered documents" and
@@ -239,23 +240,13 @@ object Corpus {
     * later doc's span and breaks the hash. */
   def packSequencesStream(spark: SparkSession, dir: String,
                           seqLen: Int = 64, epochs: Int = 4): DataFrame = {
-    val base = graft.tools.StateCache.getOrBuild(
-      "corpus_pack_stream",
-      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$seqLen|$epochs") { root =>
-      val statePath = s"$root/state"
-      val all = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("source"), col("text")).stage()
-      val mm = all.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val width = (hi - lo) / epochs + 1
-      (0 until epochs).foreach { k =>
-        packStreamApplyBatch(
-          all.filter(expr(s"(doc_id - $lo) div $width") === k),
-          k, statePath, seqLen, compactEvery = 2)
-      }
+    val base = StateCache.replay("corpus_pack_stream", Some(dir), epochs,
+        StateCache.Range("doc_id"), None, seqLen)(
+        Tables.documents(spark, dir)
+          .select(col("doc_id"), col("source"), col("text"))) {
+      (b, k, st) => packStreamApplyBatch(b, k, st, seqLen, compactEvery = 2)
     }
-    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-        s"$base/state/results", epochs - 1L): _*)
+    LogState.readAsOf(spark, s"$base/state/results", epochs - 1L)
       .select(col("source"), col("doc_id"), col("n_tokens"),
         col("cum_before"), col("seq_first"), col("seq_offset"),
         col("n_seqs"))
@@ -272,23 +263,13 @@ object Corpus {
   def budgetSelectStream(spark: SparkSession, dir: String,
                          budget: Long = 300L,
                          epochs: Int = 4): DataFrame = {
-    val base = graft.tools.StateCache.getOrBuild(
-      "corpus_budget_stream",
-      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$budget|$epochs") { root =>
-      val statePath = s"$root/state"
-      val all = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("source"), col("text")).stage()
-      val mm = all.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val width = (hi - lo) / epochs + 1
-      (0 until epochs).foreach { k =>
-        budgetStreamApplyBatch(
-          all.filter(expr(s"(doc_id - $lo) div $width") === k),
-          k, statePath, budget, compactEvery = 2)
-      }
+    val base = StateCache.replay("corpus_budget_stream", Some(dir), epochs,
+        StateCache.Range("doc_id"), None, budget)(
+        Tables.documents(spark, dir)
+          .select(col("doc_id"), col("source"), col("text"))) {
+      (b, k, st) => budgetStreamApplyBatch(b, k, st, budget, compactEvery = 2)
     }
-    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-        s"$base/state/results", epochs - 1L): _*)
+    LogState.readAsOf(spark, s"$base/state/results", epochs - 1L)
       .select(col("source"), col("doc_id"), col("n_tokens"),
         col("cum_before"))
       .stage()
@@ -331,47 +312,18 @@ object Corpus {
                              budget: Long = BudgetDefault,
                              epochs: Int = StreamLateEpochs,
                              latenessMicros: Long = StreamLatenessMicros): DataFrame = {
-    val base = graft.tools.StateCache.getOrBuild(
-      "corpus_budget_stream_late",
-      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$budget|$epochs|$latenessMicros") { root =>
-      val budState = s"$root/state"
-      val lateState = s"$root/late"
-      val all = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("source"), col("text")).stage()
-      val mm = all.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val width = (hi - lo) / epochs + 1
-      val staged = all
-        .withColumn("arr_epoch", expr(s"(doc_id - $lo) div $width"))
-        .withColumn("src_epoch",
-          when(col("doc_id") % 7 === 3 && col("arr_epoch") >= 2,
-            col("arr_epoch") - 2).otherwise(col("arr_epoch")))
-        .withColumn("ts_us",
-          col("src_epoch") * 1000000L + (col("doc_id") * 131 % 997) * 1000L)
-        .stage()
-      (0 until epochs).foreach { k =>
-        CdcUpsert.withLateness(
-          staged.filter(col("arr_epoch") === k)
-            .select(col("doc_id"), col("source"), col("text"), col("ts_us")),
-          k, lateState, latenessMicros, col("ts_us")) { onTime =>
-          budgetStreamApplyBatch(
-            onTime.select(col("doc_id"), col("source"), col("text")),
-            k, budState, budget, compactEvery = 2)
-        }
-      }
+    val base = StateCache.replay("corpus_budget_stream_late", Some(dir),
+        epochs, StateCache.Range("doc_id"), Some(latenessMicros), budget)(
+        Tables.documents(spark, dir)
+          .select(col("doc_id"), col("source"), col("text"))) {
+      (b, k, st) => budgetStreamApplyBatch(b, k, st, budget, compactEvery = 2)
     }
-    val kept = Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-        s"$base/state/results", epochs - 1L): _*)
-      .select(col("source"), col("doc_id"), col("n_tokens"),
-        col("cum_before"),
-        lit(null).cast("long").as("quarantine_epoch"))
-    val quar = CdcUpsert.quarantineAsOf(spark, s"$base/late", epochs - 1L)
-      .map(_.select(col("source"), col("doc_id"),
-        lit(null).cast("long").as("n_tokens"),
-        lit(null).cast("long").as("cum_before"),
-        col("quarantine_epoch").cast("long")))
-      .getOrElse(kept.limit(0))
-    kept.unionByName(quar).stage().orderBy(col("doc_id"))
+    CdcUpsert.withQuarantine(
+        LogState.readAsOf(spark, s"$base/state/results", epochs - 1L)
+          .select(col("source"), col("doc_id"), col("n_tokens"),
+            col("cum_before")),
+        s"$base/late", epochs - 1L, "source", "doc_id")
+      .stage().orderBy(col("doc_id"))
   }
 
   /** STREAMING sequence packing under EVENT-TIME LATENESS (r16 — the
@@ -387,51 +339,19 @@ object Corpus {
                               seqLen: Int = SeqLenDefault,
                               epochs: Int = StreamLateEpochs,
                               latenessMicros: Long = StreamLatenessMicros): DataFrame = {
-    val base = graft.tools.StateCache.getOrBuild(
-      "corpus_pack_stream_late",
-      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$seqLen|$epochs|$latenessMicros") { root =>
-      val packState = s"$root/state"
-      val lateState = s"$root/late"
-      val all = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("source"), col("text")).stage()
-      val mm = all.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val width = (hi - lo) / epochs + 1
-      val staged = all
-        .withColumn("arr_epoch", expr(s"(doc_id - $lo) div $width"))
-        .withColumn("src_epoch",
-          when(col("doc_id") % 7 === 3 && col("arr_epoch") >= 2,
-            col("arr_epoch") - 2).otherwise(col("arr_epoch")))
-        .withColumn("ts_us",
-          col("src_epoch") * 1000000L + (col("doc_id") * 131 % 997) * 1000L)
-        .stage()
-      (0 until epochs).foreach { k =>
-        CdcUpsert.withLateness(
-          staged.filter(col("arr_epoch") === k)
-            .select(col("doc_id"), col("source"), col("text"), col("ts_us")),
-          k, lateState, latenessMicros, col("ts_us")) { onTime =>
-          packStreamApplyBatch(
-            onTime.select(col("doc_id"), col("source"), col("text")),
-            k, packState, seqLen, compactEvery = 2)
-        }
-      }
+    val base = StateCache.replay("corpus_pack_stream_late", Some(dir),
+        epochs, StateCache.Range("doc_id"), Some(latenessMicros), seqLen)(
+        Tables.documents(spark, dir)
+          .select(col("doc_id"), col("source"), col("text"))) {
+      (b, k, st) => packStreamApplyBatch(b, k, st, seqLen, compactEvery = 2)
     }
-    val kept = Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-        s"$base/state/results", epochs - 1L): _*)
-      .select(col("source"), col("doc_id"), col("n_tokens"),
-        col("cum_before"), col("seq_first"), col("seq_offset"),
-        col("n_seqs"),
-        lit(null).cast("long").as("quarantine_epoch"))
-    val quar = CdcUpsert.quarantineAsOf(spark, s"$base/late", epochs - 1L)
-      .map(_.select(col("source"), col("doc_id"),
-        lit(null).cast("long").as("n_tokens"),
-        lit(null).cast("long").as("cum_before"),
-        lit(null).cast("long").as("seq_first"),
-        lit(null).cast("long").as("seq_offset"),
-        lit(null).cast("long").as("n_seqs"),
-        col("quarantine_epoch").cast("long")))
-      .getOrElse(kept.limit(0))
-    kept.unionByName(quar).stage().orderBy(col("doc_id"))
+    CdcUpsert.withQuarantine(
+        LogState.readAsOf(spark, s"$base/state/results", epochs - 1L)
+          .select(col("source"), col("doc_id"), col("n_tokens"),
+            col("cum_before"), col("seq_first"), col("seq_offset"),
+            col("n_seqs")),
+        s"$base/late", epochs - 1L, "source", "doc_id")
+      .stage().orderBy(col("doc_id"))
   }
 
   /** Oracle of [[packSequencesStreamLate]]: the budget-late watermark
@@ -1516,20 +1436,10 @@ object Corpus {
     * double-publish breaks the hash. */
   def balanceByLangStream(spark: SparkSession, dir: String,
                           perLang: Int = 40, epochs: Int = 4): DataFrame = {
-    val base = graft.tools.StateCache.getOrBuild(
-      "corpus_balance_stream",
-      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$perLang|$epochs") { root =>
-      val statePath = s"$root/state"
-      val all = Tables.documents(spark, dir)
-        .select(col("lang"), col("doc_id")).stage()
-      val mm = all.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val width = (hi - lo) / epochs + 1
-      (0 until epochs).foreach { k =>
-        balanceStreamApplyBatch(
-          all.filter(expr(s"(doc_id - $lo) div $width") === k),
-          k, statePath, perLang, compactEvery = 2)
-      }
+    val base = StateCache.replay("corpus_balance_stream", Some(dir), epochs,
+        StateCache.Range("doc_id"), None, perLang)(
+        Tables.documents(spark, dir).select(col("lang"), col("doc_id"))) {
+      (b, k, st) => balanceStreamApplyBatch(b, k, st, perLang, compactEvery = 2)
     }
     TopKStream.rankedAsOf(spark, s"$base/state", epochs - 1L, "lang", perLang)
       .getOrElse(sys.error("balance stream: no state"))

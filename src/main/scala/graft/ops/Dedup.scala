@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.tools.{LogState, StateCache}
 import graft.tools.Stage._
 
 /** Deduplication suite over `documents` — exact, keyed, MinHash-LSH,
@@ -708,27 +709,12 @@ object Dedup {
   def simhashStreamClustered(spark: SparkSession, dir: String,
                              epochs: Int = 4): DataFrame = {
     val cdir = clusteredDocsDir(spark)
-    // Ingested state is a pure function of (corpus, epochs) — built once
-    // per JVM (VERDICT r18 #2, the q99 recipe); iterations measure the
-    // range-pruned fold + gate projection, the build cost stays visible
-    // as a *.build phase.
-    val base = graft.tools.StateCache.getOrBuild(
-      "dedup_stream_simhash_clustered",
-      s"$cdir@${graft.tools.ArtifactCache.pathToken(cdir)}|$epochs") { b =>
-      val statePath = s"$b/state"
-      val all = Tables.documents(spark, cdir)
-        .select(col("doc_id"), col("text")).stage()
-      val width = ClusteredCorpusDocs / epochs
-      (0 until epochs).foreach { k =>
-        simhashStreamApplyBatch(
-          all.filter(col("doc_id") >= k * width &&
-            (col("doc_id") < (k + 1) * width || lit(k == epochs - 1))),
-          k, statePath, compactEvery = 2)
-      }
+    val base = StateCache.replay("dedup_stream_simhash_clustered",
+        Some(cdir), epochs, StateCache.Range("doc_id"), None)(
+        Tables.documents(spark, cdir).select(col("doc_id"), col("text"))) {
+      (b, k, st) => simhashStreamApplyBatch(b, k, st, compactEvery = 2)
     }
-    val paths = graft.tools.LogState.pathsAsOf(s"$base/state/survivors",
-      epochs - 1L)
-    Tables.parquet(spark, paths: _*).stage()
+    LogState.readAsOf(spark, s"$base/state/survivors", epochs - 1L).stage()
       .orderBy(col("doc_id"))
   }
 
@@ -754,24 +740,14 @@ object Dedup {
   def minhashStreamClustered(spark: SparkSession, dir: String,
                              epochs: Int = 4): DataFrame = {
     val cdir = clusteredDocsDir(spark)
-    val base = graft.tools.StateCache.getOrBuild(
-      "dedup_stream_minhash_clustered",
-      s"$cdir@${graft.tools.ArtifactCache.pathToken(cdir)}|$epochs") { b =>
-      val statePath = s"$b/state"
-      val all = Tables.documents(spark, cdir)
-        .select(col("doc_id"), col("text")).stage()
-      val width = ClusteredCorpusDocs / epochs
-      (0 until epochs).foreach { k =>
-        minhashStreamApplyBatch(
-          all.filter(col("doc_id") >= k * width &&
-            (col("doc_id") < (k + 1) * width || lit(k == epochs - 1))),
-          k, statePath, jaccardThreshold = 0.5,
-          maxBucket = MinhashMaxBucket, compactEvery = 2, idSpan = ClusteredCorpusDocs)
-      }
+    val base = StateCache.replay("dedup_stream_minhash_clustered",
+        Some(cdir), epochs, StateCache.Range("doc_id"), None)(
+        Tables.documents(spark, cdir).select(col("doc_id"), col("text"))) {
+      (b, k, st) => minhashStreamApplyBatch(b, k, st, jaccardThreshold = 0.5,
+        maxBucket = MinhashMaxBucket, compactEvery = 2,
+        idSpan = ClusteredCorpusDocs)
     }
-    val paths = graft.tools.LogState.pathsAsOf(s"$base/state/survivors",
-      epochs - 1L)
-    Tables.parquet(spark, paths: _*).stage()
+    LogState.readAsOf(spark, s"$base/state/survivors", epochs - 1L).stage()
       .orderBy(col("doc_id"))
   }
 
@@ -796,37 +772,17 @@ object Dedup {
       epochs: Int = Corpus.StreamLateEpochs,
       latenessMicros: Long = Corpus.StreamLatenessMicros): DataFrame = {
     val cdir = clusteredDocsDir(spark)
-    val base = graft.tools.StateCache.getOrBuild(
-      "dedup_stream_minhash_late",
-      s"$cdir@${graft.tools.ArtifactCache.pathToken(cdir)}|$epochs|$latenessMicros") { b =>
-      val dedupState = s"$b/state"
-      val lateState = s"$b/late"
-      val width = ClusteredCorpusDocs / epochs
-      val all = Tables.documents(spark, cdir)
-        .select(col("doc_id"), col("text"))
-        .withColumn("arr_epoch", expr(s"doc_id div $width"))
-        .withColumn("src_epoch",
-          when(col("doc_id") % 7 === 3 && col("arr_epoch") >= 2,
-            col("arr_epoch") - 2).otherwise(col("arr_epoch")))
-        .withColumn("ts_us",
-          col("src_epoch") * 1000000L + (col("doc_id") * 131 % 997) * 1000L)
-        .stage()
-      (0 until epochs).foreach { k =>
-        minhashStreamLateApplyBatch(
-          all.filter(col("arr_epoch") === k)
-            .select(col("doc_id"), col("text"), col("ts_us")),
-          k, lateState, dedupState, latenessMicros,
-          compactEvery = 2, idSpan = ClusteredCorpusDocs)
-      }
+    val base = StateCache.replay("dedup_stream_minhash_late", Some(cdir),
+        epochs, StateCache.Range("doc_id"), Some(latenessMicros))(
+        Tables.documents(spark, cdir).select(col("doc_id"), col("text"))) {
+      (b, k, st) => minhashStreamApplyBatch(b, k, st, jaccardThreshold = 0.5,
+        maxBucket = MinhashMaxBucket, compactEvery = 2,
+        idSpan = ClusteredCorpusDocs)
     }
-    val surv = Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-        s"$base/state/survivors", epochs - 1L): _*)
-      .select(col("doc_id"),
-        lit(null).cast("long").as("quarantine_epoch"))
-    val quar = CdcUpsert.quarantineAsOf(spark, s"$base/late", epochs - 1L)
-      .map(_.select(col("doc_id"), col("quarantine_epoch").cast("long")))
-      .getOrElse(surv.limit(0))
-    surv.unionByName(quar).stage().orderBy(col("doc_id"))
+    CdcUpsert.withQuarantine(
+        LogState.readAsOf(spark, s"$base/state/survivors", epochs - 1L),
+        s"$base/late", epochs - 1L, "doc_id")
+      .stage().orderBy(col("doc_id"))
   }
 
   /** Oracle of [[minhashStreamLateClustered]]: the dense watermark
@@ -878,36 +834,15 @@ object Dedup {
       epochs: Int = Corpus.StreamLateEpochs,
       latenessMicros: Long = Corpus.StreamLatenessMicros): DataFrame = {
     val cdir = clusteredDocsDir(spark)
-    val base = graft.tools.StateCache.getOrBuild(
-      "dedup_stream_simhash_late",
-      s"$cdir@${graft.tools.ArtifactCache.pathToken(cdir)}|$epochs|$latenessMicros") { b =>
-      val dedupState = s"$b/state"
-      val lateState = s"$b/late"
-      val width = ClusteredCorpusDocs / epochs
-      val all = Tables.documents(spark, cdir)
-        .select(col("doc_id"), col("text"))
-        .withColumn("arr_epoch", expr(s"doc_id div $width"))
-        .withColumn("src_epoch",
-          when(col("doc_id") % 7 === 3 && col("arr_epoch") >= 2,
-            col("arr_epoch") - 2).otherwise(col("arr_epoch")))
-        .withColumn("ts_us",
-          col("src_epoch") * 1000000L + (col("doc_id") * 131 % 997) * 1000L)
-        .stage()
-      (0 until epochs).foreach { k =>
-        simhashStreamLateApplyBatch(
-          all.filter(col("arr_epoch") === k)
-            .select(col("doc_id"), col("text"), col("ts_us")),
-          k, lateState, dedupState, latenessMicros)
-      }
+    val base = StateCache.replay("dedup_stream_simhash_late", Some(cdir),
+        epochs, StateCache.Range("doc_id"), Some(latenessMicros))(
+        Tables.documents(spark, cdir).select(col("doc_id"), col("text"))) {
+      (b, k, st) => simhashStreamApplyBatch(b, k, st)
     }
-    val surv = Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-        s"$base/state/survivors", epochs - 1L): _*)
-      .select(col("doc_id"),
-        lit(null).cast("long").as("quarantine_epoch"))
-    val quar = CdcUpsert.quarantineAsOf(spark, s"$base/late", epochs - 1L)
-      .map(_.select(col("doc_id"), col("quarantine_epoch").cast("long")))
-      .getOrElse(surv.limit(0))
-    surv.unionByName(quar).stage().orderBy(col("doc_id"))
+    CdcUpsert.withQuarantine(
+        LogState.readAsOf(spark, s"$base/state/survivors", epochs - 1L),
+        s"$base/late", epochs - 1L, "doc_id")
+      .stage().orderBy(col("doc_id"))
   }
 
   /** [[embeddingStreamClustered]] under the shared event-time lateness
@@ -927,38 +862,16 @@ object Dedup {
       epochs: Int = Corpus.StreamLateEpochs,
       latenessMicros: Long = Corpus.StreamLatenessMicros): DataFrame = {
     val cdir = Similarity.clusteredCorpusDir(spark)
-    val base = graft.tools.StateCache.getOrBuild(
-      "dedup_stream_embedding_late",
-      s"$cdir@${graft.tools.ArtifactCache.pathToken(cdir)}|$epochs|$latenessMicros") { b =>
-      val dedupState = s"$b/state"
-      val lateState = s"$b/late"
-      val width = 200 / epochs
-      val all = Tables.embeddings(spark, cdir)
-        .select(col("vec_id"), col("embedding"))
-        .withColumn("arr_epoch", expr(s"vec_id div $width"))
-        .withColumn("src_epoch",
-          when(col("vec_id") % 7 === 3 && col("arr_epoch") >= 2,
-            col("arr_epoch") - 2).otherwise(col("arr_epoch")))
-        .withColumn("ts_us",
-          col("src_epoch") * 1000000L + (col("vec_id") * 131 % 997) * 1000L)
-        .stage()
-      (0 until epochs).foreach { k =>
-        embeddingStreamLateApplyBatch(
-          all.filter(col("arr_epoch") === k)
-            .select(col("vec_id"), col("embedding"), col("ts_us")),
-          k, lateState, dedupState, latenessMicros,
-          threshold = 0.5, tables = 4, bits = 10, probes = 2,
-          compactEvery = 2, idSpan = 200)
-      }
+    val base = StateCache.replay("dedup_stream_embedding_late", Some(cdir),
+        epochs, StateCache.Range("vec_id"), Some(latenessMicros))(
+        Tables.embeddings(spark, cdir).select(col("vec_id"), col("embedding"))) {
+      (b, k, st) => embeddingStreamApplyBatch(b, k, st, threshold = 0.5,
+        tables = 4, bits = 10, probes = 2, compactEvery = 2, idSpan = 200)
     }
-    val surv = Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-        s"$base/state/survivors", epochs - 1L): _*)
-      .select(col("vec_id"),
-        lit(null).cast("long").as("quarantine_epoch"))
-    val quar = CdcUpsert.quarantineAsOf(spark, s"$base/late", epochs - 1L)
-      .map(_.select(col("vec_id"), col("quarantine_epoch").cast("long")))
-      .getOrElse(surv.limit(0))
-    surv.unionByName(quar).stage().orderBy(col("vec_id"))
+    CdcUpsert.withQuarantine(
+        LogState.readAsOf(spark, s"$base/state/survivors", epochs - 1L),
+        s"$base/late", epochs - 1L, "vec_id")
+      .stage().orderBy(col("vec_id"))
   }
 
   /** Oracle of [[embeddingStreamLateClustered]]: watermark recurrence
@@ -1069,29 +982,19 @@ object Dedup {
     * scale). */
   def exactStreamTtlClustered(spark: SparkSession, dir: String,
       epochs: Int = ExactTtlEpochs, ttl: Int = ExactTtl): DataFrame = {
-    // The Scala batching gives the LAST epoch a catch-all tail while the
-    // oracle assigns epochs as doc_id // width — those agree only when
-    // the widths are exact (ADVICE r17); a non-divisor epoch count would
-    // silently shift the tail ids' TTL windows between the two engines.
+    // The oracle assigns epochs as doc_id // (N / epochs); the Range
+    // slicing agrees with it only when the widths are exact (ADVICE
+    // r17) — a non-divisor epoch count would silently shift some ids'
+    // TTL windows between the two engines.
     require(ClusteredCorpusDocs % epochs == 0,
       s"epochs must divide the $ClusteredCorpusDocs-doc planted corpus, got $epochs")
     val cdir = clusteredDocsDir(spark)
-    val base = graft.tools.StateCache.getOrBuild(
-      "dedup_stream_exact_ttl",
-      s"$cdir@${graft.tools.ArtifactCache.pathToken(cdir)}|$epochs|$ttl") { b =>
-      val statePath = s"$b/state"
-      val all = Tables.documents(spark, cdir)
-        .select(col("doc_id"), col("text")).stage()
-      val width = ClusteredCorpusDocs / epochs
-      (0 until epochs).foreach { k =>
-        exactStreamTtlApplyBatch(
-          all.filter(col("doc_id") >= k * width &&
-            (col("doc_id") < (k + 1) * width || lit(k == epochs - 1))),
-          k, statePath, ttl)
-      }
+    val base = StateCache.replay("dedup_stream_exact_ttl", Some(cdir),
+        epochs, StateCache.Range("doc_id"), None, ttl)(
+        Tables.documents(spark, cdir).select(col("doc_id"), col("text"))) {
+      (b, k, st) => exactStreamTtlApplyBatch(b, k, st, ttl)
     }
-    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-        s"$base/state/survivors", epochs - 1L): _*)
+    LogState.readAsOf(spark, s"$base/state/survivors", epochs - 1L)
       .stage().orderBy(col("doc_id"))
   }
 
@@ -2658,24 +2561,13 @@ object Dedup {
   def semanticStreamClustered(spark: SparkSession, dir: String,
                               epochs: Int = 4): DataFrame = {
     val cdir = Similarity.clusteredCorpusDir(spark)
-    val base = graft.tools.StateCache.getOrBuild(
-      "dedup_stream_semantic_clustered",
-      s"$cdir@${graft.tools.ArtifactCache.pathToken(cdir)}|$epochs") { root =>
-      val statePath = s"$root/state"
-      val all = Tables.embeddings(spark, cdir)
-        .select(col("vec_id"), col("embedding")).stage()
-      val width = 200 / epochs
-      (0 until epochs).foreach { b =>
-        semanticStreamApplyBatch(
-          all.filter(col("vec_id") >= b * width &&
-            (col("vec_id") < (b + 1) * width || lit(b == epochs - 1))),
-          b, statePath, k = 10, iterations = 2, eps = 0.99999,
-          compactEvery = 2)
-      }
+    val base = StateCache.replay("dedup_stream_semantic_clustered",
+        Some(cdir), epochs, StateCache.Range("vec_id"), None)(
+        Tables.embeddings(spark, cdir).select(col("vec_id"), col("embedding"))) {
+      (b, e, st) => semanticStreamApplyBatch(b, e, st, k = 10,
+        iterations = 2, eps = 0.99999, compactEvery = 2)
     }
-    val paths = graft.tools.LogState.pathsAsOf(s"$base/state/survivors",
-      epochs - 1L)
-    Tables.parquet(spark, paths: _*).stage()
+    LogState.readAsOf(spark, s"$base/state/survivors", epochs - 1L).stage()
       .orderBy(col("vec_id"))
   }
 
@@ -2956,24 +2848,13 @@ object Dedup {
   def embeddingStreamClustered(spark: SparkSession, dir: String,
                                epochs: Int = 4): DataFrame = {
     val cdir = Similarity.clusteredCorpusDir(spark)
-    val base = graft.tools.StateCache.getOrBuild(
-      "dedup_stream_embedding_clustered",
-      s"$cdir@${graft.tools.ArtifactCache.pathToken(cdir)}|$epochs") { root =>
-      val statePath = s"$root/state"
-      val all = Tables.embeddings(spark, cdir)
-        .select(col("vec_id"), col("embedding")).stage()
-      val width = 200 / epochs
-      (0 until epochs).foreach { k =>
-        embeddingStreamApplyBatch(
-          all.filter(col("vec_id") >= k * width &&
-            (col("vec_id") < (k + 1) * width || lit(k == epochs - 1))),
-          k, statePath, threshold = 0.5, tables = 4, bits = 10,
-          probes = 2, compactEvery = 2, idSpan = 200)
-      }
+    val base = StateCache.replay("dedup_stream_embedding_clustered",
+        Some(cdir), epochs, StateCache.Range("vec_id"), None)(
+        Tables.embeddings(spark, cdir).select(col("vec_id"), col("embedding"))) {
+      (b, k, st) => embeddingStreamApplyBatch(b, k, st, threshold = 0.5,
+        tables = 4, bits = 10, probes = 2, compactEvery = 2, idSpan = 200)
     }
-    val paths = graft.tools.LogState.pathsAsOf(s"$base/state/survivors",
-      epochs - 1L)
-    Tables.parquet(spark, paths: _*).stage()
+    LogState.readAsOf(spark, s"$base/state/survivors", epochs - 1L).stage()
       .orderBy(col("vec_id"))
   }
 
@@ -3889,26 +3770,15 @@ object Dedup {
     * coverage drift anywhere in the log protocol breaks the hash. */
   def substringStream(spark: SparkSession, dir: String,
                       epochs: Int = 4, byRange: Boolean = false): DataFrame = {
-    val base = graft.tools.StateCache.getOrBuild(
-      "dedup_stream_substring",
-      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs|$byRange") { root =>
-      val statePath = s"$root/state"
-      val all = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text")).stage()
-      // pmod batches (the gate): worst-case cross-epoch affectedness.
-      // byRange (probes): contiguous id slices — the id-local ingest
-      // regime where affected sets stay near the batch's own range.
-      val batchOf: Int => DataFrame =
-        if (byRange) {
-          val mm = all.agg(min(col("doc_id")), max(col("doc_id"))).head()
-          val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-          val width = (hi - lo) / epochs + 1
-          k => all.filter(expr(s"(doc_id - $lo) div $width") === k)
-        } else
-          k => all.filter(pmod(col("doc_id"), lit(epochs)) === k)
-      (0 until epochs).foreach { k =>
-        substringStreamApplyBatch(batchOf(k), k, statePath, compactEvery = 2)
-      }
+    // pmod batches (the gate): worst-case cross-epoch affectedness.
+    // byRange (probes): contiguous id slices — the id-local ingest
+    // regime where affected sets stay near the batch's own range.
+    val slicing =
+      if (byRange) StateCache.Range("doc_id") else StateCache.Mod("doc_id")
+    val base = StateCache.replay("dedup_stream_substring", Some(dir), epochs,
+        slicing, None)(
+        Tables.documents(spark, dir).select(col("doc_id"), col("text"))) {
+      (b, k, st) => substringStreamApplyBatch(b, k, st, compactEvery = 2)
     }
     substringStreamState(spark, s"$base/state", epochs - 1)
       .getOrElse(sys.error("substring stream: no state"))
@@ -3918,21 +3788,23 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** Deterministic event-time columns for the lateness gates: arrival
-    * epoch = doc_id % epochs; docs with doc_id % 7 == 3 arriving in
+  /** The planted event-time schedule of every lateness gate — its one
+    * Scala definition, applied by [[StateCache.replay]]: `arr_epoch` =
+    * `arrEpoch` (the replay slice); rows with id % 7 == 3 arriving in
     * epoch ≥ 2 carry a ts from TWO EPOCHS AGO (planted disorder); the
-    * within-epoch spread (doc_id·131 % 997, in millis) makes roughly
-    * half the planted docs fall below the carried watermark — the other
-    * half are old-but-tolerated, so the gate separates "late" from
-    * merely "out of order". Mirrored verbatim in the oracle. */
-  private def lateEventTime(docs: DataFrame, epochs: Int): DataFrame =
+    * within-epoch spread (id·131 % 997, in millis) makes roughly half
+    * the planted rows fall below the carried watermark — the other half
+    * are old-but-tolerated, so the gate separates "late" from merely
+    * "out of order". Mirrored verbatim in each gate's oracle. */
+  private[graft] def lateEventTime(docs: DataFrame, id: Column,
+                                   arrEpoch: Column): DataFrame =
     docs
-      .withColumn("arr_epoch", col("doc_id") % epochs)
+      .withColumn("arr_epoch", arrEpoch)
       .withColumn("src_epoch",
-        when(col("doc_id") % 7 === 3 && col("arr_epoch") >= 2,
+        when(id % 7 === 3 && col("arr_epoch") >= 2,
           col("arr_epoch") - 2).otherwise(col("arr_epoch")))
       .withColumn("ts_us",
-        col("src_epoch") * 1000000L + (col("doc_id") * 131 % 997) * 1000L)
+        col("src_epoch") * 1000000L + (id * 131 % 997) * 1000L)
 
   /** STREAMING substring dedup under EVENT-TIME LATENESS (VERDICT r11
     * #5): each epoch batch passes through the shared watermark wrapper
@@ -3949,38 +3821,18 @@ object Dedup {
   def substringStreamLate(spark: SparkSession, dir: String,
                           epochs: Int = 4,
                           latenessMicros: Long = 1500000L): DataFrame = {
-    val base = graft.tools.StateCache.getOrBuild(
-      "dedup_stream_substring_late",
-      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs|$latenessMicros") { root =>
-      val dedupState = s"$root/state"
-      val lateState = s"$root/late"
-      val all = lateEventTime(
-        Tables.documents(spark, dir).select(col("doc_id"), col("text")),
-        epochs).stage()
-      (0 until epochs).foreach { k =>
-        val batch = all.filter(col("arr_epoch") === k)
-          .select(col("doc_id"), col("text"), col("ts_us"))
-        CdcUpsert.withLateness(batch, k, lateState, latenessMicros,
-          col("ts_us")) { onTime =>
-          substringStreamApplyBatch(
-            onTime.select(col("doc_id"), col("text")),
-            k, dedupState, compactEvery = 2)
-        }
-      }
+    val base = StateCache.replay("dedup_stream_substring_late", Some(dir),
+        epochs, StateCache.Mod("doc_id"), Some(latenessMicros))(
+        Tables.documents(spark, dir).select(col("doc_id"), col("text"))) {
+      (b, k, st) => substringStreamApplyBatch(b, k, st, compactEvery = 2)
     }
-    val state = substringStreamState(spark, s"$base/state", epochs - 1)
-      .getOrElse(sys.error("substring stream late: no state"))
-      .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-        col("clean_text"),
-        lit(null).cast("long").as("quarantine_epoch"))
-    val quar = CdcUpsert.quarantineAsOf(spark, s"$base/late", epochs - 1L)
-      .map(_.select(col("doc_id"),
-        lit(null).cast("long").as("n_tokens"),
-        lit(null).cast("long").as("n_removed"),
-        lit(null).cast("string").as("clean_text"),
-        col("quarantine_epoch").cast("long")))
-      .getOrElse(state.limit(0))
-    state.unionByName(quar).stage().orderBy(col("doc_id"))
+    CdcUpsert.withQuarantine(
+        substringStreamState(spark, s"$base/state", epochs - 1)
+          .getOrElse(sys.error("substring stream late: no state"))
+          .select(col("doc_id"), col("n_tokens"), col("n_removed"),
+            col("clean_text")),
+        s"$base/late", epochs - 1L, "doc_id")
+      .stage().orderBy(col("doc_id"))
   }
 
   // ---------------------------------------------------------------------
@@ -4106,23 +3958,15 @@ object Dedup {
     * hash. */
   def decontaminateStream(spark: SparkSession, dir: String,
                           epochs: Int = 4): DataFrame = {
-    val base = graft.tools.StateCache.getOrBuild(
-      "dedup_stream_decontaminate",
-      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs") { root =>
-      val statePath = s"$root/state"
-      val all = Tables.documents(spark, dir)
-        .withColumn("bucket",
-          substring(md5(col("doc_id").cast("string")), 1, 1))
-      val test = all.filter(col("bucket").isin("0", "1"))
-        .select(col("doc_id"), col("text")).stage()
-      val train = all.filter(!col("bucket").isin("0", "1"))
-        .select(col("doc_id"), col("text")).stage()
-      (0 until epochs).foreach { k =>
-        decontaminateStreamApplyBatch(
-          train.filter(pmod(col("doc_id"), lit(epochs)) === k),
-          test.filter(pmod(col("doc_id"), lit(epochs)) === k),
-          k, statePath, compactEvery = 2)
-      }
+    val base = StateCache.replay("dedup_stream_decontaminate", Some(dir),
+        epochs, StateCache.Mod("doc_id"), None)(
+        Tables.documents(spark, dir).select(col("doc_id"), col("text"),
+          substring(md5(col("doc_id").cast("string")), 1, 1)
+            .isin("0", "1").as("is_test"))) { (b, k, st) =>
+      decontaminateStreamApplyBatch(
+        b.filter(!col("is_test")).select(col("doc_id"), col("text")),
+        b.filter(col("is_test")).select(col("doc_id"), col("text")),
+        k, st, compactEvery = 2)
     }
     substringStreamState(spark, s"$base/state", epochs - 1)
       .getOrElse(sys.error("decontaminate stream: no state"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.tools.{LogState, StateCache}
 import graft.tools.Stage._
 
 /** Multimodal column plumbing: opaque `binary` payloads + typed metadata,
@@ -670,23 +671,13 @@ object Multimodal {
     * the hash. */
   def imageDHashStreamClustered(spark: SparkSession, dir: String,
                                 epochs: Int = 4): DataFrame = {
-    // Planted corpus is generated (not read from `dir`) — the state is
-    // a pure function of epochs alone; built once per JVM (VERDICT r18
-    // #2, the q99 recipe), iterations measure the fold + projection.
-    val base = graft.tools.StateCache.getOrBuild(
-      "mm_dedup_phash_stream", s"clustered|$epochs") { root =>
-      val statePath = s"$root/state"
-      val fps = imageFps(spark).stage()
-      val width = 140 / epochs
-      (0 until epochs).foreach { k =>
-        graft.ops.Dedup.fingerprintStreamApplyBatch(
-          fps.filter(col("doc_id") >= k * width &&
-            (col("doc_id") < (k + 1) * width || lit(k == epochs - 1))),
-          k, statePath, maxHamming = 3, maxBucket = 200, compactEvery = 2)
-      }
+    // the planted corpus is generated, not read from `dir`
+    val base = StateCache.replay("mm_dedup_phash_stream", None, epochs,
+        StateCache.Range("doc_id"), None)(imageFps(spark)) {
+      (b, k, st) => Dedup.fingerprintStreamApplyBatch(b, k, st,
+        maxHamming = 3, maxBucket = 200, compactEvery = 2)
     }
-    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-        s"$base/state/survivors", epochs - 1L): _*)
+    LogState.readAsOf(spark, s"$base/state/survivors", epochs - 1L)
       .stage()
       .orderBy(col("doc_id"))
   }
@@ -938,21 +929,13 @@ object Multimodal {
     * and audio stream gates. */
   def videoDHashStreamClustered(spark: SparkSession, dir: String,
                                 epochs: Int = 4): DataFrame = {
-    val base = graft.tools.StateCache.getOrBuild(
-      "mm_dedup_video_stream", s"clustered|$epochs") { root =>
-      val statePath = s"$root/state"
-      val fps = videoFrameFps(spark).stage()
-      val width = 140 / epochs
-      (0 until epochs).foreach { k =>
-        graft.ops.Dedup.sequenceFingerprintStreamApplyBatch(
-          fps.filter(col("doc_id") >= k.toLong * width * 64 &&
-            (col("doc_id") < (k + 1).toLong * width * 64 ||
-              lit(k == epochs - 1))),
-          k, statePath, span = 64, minAligned = 2, compactEvery = 2)
-      }
+    // sliced on the clip id, so a clip's frames never straddle epochs
+    val base = StateCache.replay("mm_dedup_video_stream", None, epochs,
+        StateCache.Range("doc_id div 64"), None)(videoFrameFps(spark)) {
+      (b, k, st) => Dedup.sequenceFingerprintStreamApplyBatch(b, k, st,
+        span = 64, minAligned = 2, compactEvery = 2)
     }
-    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-        s"$base/state/survivors", epochs - 1L): _*)
+    LogState.readAsOf(spark, s"$base/state/survivors", epochs - 1L)
       .stage()
       .orderBy(col("doc_id"))
   }
@@ -985,20 +968,12 @@ object Multimodal {
     * breaks the hash. */
   def audioHashStreamClustered(spark: SparkSession, dir: String,
                                epochs: Int = 4): DataFrame = {
-    val base = graft.tools.StateCache.getOrBuild(
-      "mm_dedup_audiohash_stream", s"clustered|$epochs") { root =>
-      val statePath = s"$root/state"
-      val fps = audioFps(spark).stage()
-      val width = 140 / epochs
-      (0 until epochs).foreach { k =>
-        graft.ops.Dedup.fingerprintStreamApplyBatch(
-          fps.filter(col("doc_id") >= k * width &&
-            (col("doc_id") < (k + 1) * width || lit(k == epochs - 1))),
-          k, statePath, maxHamming = 3, maxBucket = 200, compactEvery = 2)
-      }
+    val base = StateCache.replay("mm_dedup_audiohash_stream", None, epochs,
+        StateCache.Range("doc_id"), None)(audioFps(spark)) {
+      (b, k, st) => Dedup.fingerprintStreamApplyBatch(b, k, st,
+        maxHamming = 3, maxBucket = 200, compactEvery = 2)
     }
-    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-        s"$base/state/survivors", epochs - 1L): _*)
+    LogState.readAsOf(spark, s"$base/state/survivors", epochs - 1L)
       .stage()
       .orderBy(col("doc_id"))
   }
@@ -1289,14 +1264,12 @@ object Multimodal {
           .toDF("doc_id", "fp").stage()
         Dedup.fingerprintStreamApplyBatch(fps, k, imgState,
           maxHamming = 3, maxBucket = 200, compactEvery = 2)
-        val surv = Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-            s"$imgState/survivors", k): _*)
+        val surv = LogState.readAsOf(spark, s"$imgState/survivors", k)
           .select(col("doc_id").as("pair_id"), lit(true).as("s1x"))
         val capHist =
           if (k == 0) batch.select(col("caption"),
             lit(0L).as("hist_min")).limit(0)
-          else Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-              capRoot, k - 1L): _*)
+          else LogState.readAsOf(spark, capRoot, k - 1L)
             .groupBy(col("caption")).agg(min(col("cap_id")).as("hist_min"))
         val flagged = batch
           .join(surv, Seq("pair_id"), "left")
@@ -1327,8 +1300,7 @@ object Multimodal {
           .write.mode("overwrite").parquet(s"$repRoot/delta/v$k")
       }
     }
-    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-        s"$base/report", epochs - 1L): _*)
+    LogState.readAsOf(spark, s"$base/report", epochs - 1L)
       .groupBy(col("stage"))
       .agg(sum(col("n_pairs")).as("n_pairs"), sum(col("id_sum")).as("id_sum"))
       .stage()

@@ -714,8 +714,8 @@ object Relational2 {
           ev.filter(expr(s"(event_id - $lo) div $width") === k),
           k, statePath, compactEvery = 2)
       }
-      val folded = Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-          s"$statePath/sk", epochs - 1L): _*)
+      val folded = graft.tools.LogState.readAsOf(spark,
+          s"$statePath/sk", epochs - 1L)
         .groupBy(col("event_type"))
         .agg(hll_sketch_estimate(hll_union_agg(col("sk")))
           .as("approx_users"))

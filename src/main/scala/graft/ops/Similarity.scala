@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.tools.StateCache
 import graft.tools.Stage._
 
 /** Similarity search over `embeddings.embedding` (array<float>, dim 64).
@@ -619,45 +620,23 @@ object Similarity {
     * [[clusteredCorpusDir]] — that pinning lives in the lambda, not in
     * this function (ADVICE r17 docstring fix). */
   def hnswTopKStream(spark: SparkSession, dir: String,
-                     epochs: Int = 5): DataFrame = {
-    val base = graft.tools.StateCache.getOrBuild(
-      "sim_topk_hnsw_stream",
-      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs") { root =>
-      val statePath = s"$root/state"
-      val vecs = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding")).stage()
-      val width = 200 / epochs
-      (0 until epochs).foreach { k =>
-        hnswStreamApplyBatch(
-          vecs.filter(col("vec_id") >= k * width &&
-            (col("vec_id") < (k + 1) * width || lit(k == epochs - 1))),
-          k, statePath)
-      }
-    }
-    val edges = Tables.parquet(spark, hnswEdgePathsAsOf(s"$base/state/edges", epochs - 1L): _*)
-      .stage()
-    rerankSlim(spark, dir, hnswCandidatesOver(spark, dir, edges))
-  }
+                     epochs: Int = 5): DataFrame =
+    rerankSlim(spark, dir,
+      hnswCandidatesOver(spark, dir, hnswStreamEdges(spark, dir, epochs)))
 
-  /** The maintained edge set as-of the final epoch — split out for the
-    * bitwise equality-with-rebuild spec. */
+  /** The maintained edge set as-of the final epoch — the one replayed
+    * build [[hnswTopKStream]] searches and the spec compares bitwise
+    * with the rebuild. */
   private[graft] def hnswStreamEdges(spark: SparkSession, dir: String,
                                      epochs: Int = 5): DataFrame = {
-    val base = graft.tools.TempDirs.createFast("graft-hnswse")
-    try {
-      val statePath = s"$base/state"
-      val vecs = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding")).stage()
-      val width = 200 / epochs
-      (0 until epochs).foreach { k =>
-        hnswStreamApplyBatch(
-          vecs.filter(col("vec_id") >= k * width &&
-            (col("vec_id") < (k + 1) * width || lit(k == epochs - 1))),
-          k, statePath)
-      }
-      Tables.parquet(spark, hnswEdgePathsAsOf(s"$statePath/edges", epochs - 1L): _*)
-        .stage()
-    } finally graft.tools.TempDirs.deleteRecursively(base)
+    val base = StateCache.replay("sim_topk_hnsw_stream", Some(dir), epochs,
+        StateCache.Range("vec_id"), None)(
+        Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))) {
+      (b, k, st) => hnswStreamApplyBatch(b, k, st)
+    }
+    Tables.parquet(spark,
+        hnswEdgePathsAsOf(s"$base/state/edges", epochs - 1L): _*)
+      .stage()
   }
 
   /** Graph dispatch floor for [[annTopK]]: the graph tier wins once the

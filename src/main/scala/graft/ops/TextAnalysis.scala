@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.tools.{LogState, StateCache}
 import graft.tools.Stage._
 
 /** Text-analysis operators over the `documents` table — the LLM-data-
@@ -828,20 +829,11 @@ object TextAnalysis {
     * and break the hash. */
   def finewebStream(spark: SparkSession, dir: String,
                     epochs: Int = 4): DataFrame = {
-    val base = graft.tools.StateCache.getOrBuild(
-      "pipeline_fineweb_stream",
-      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs") { root =>
-      val statePath = s"$root/state"
-      val all = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("lang"), col("text")).stage()
-      val mm = all.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val width = (hi - lo) / epochs + 1
-      (0 until epochs).foreach { k =>
-        finewebStreamApplyBatch(
-          all.filter(expr(s"(doc_id - $lo) div $width") === k),
-          k, statePath, compactEvery = 2)
-      }
+    val base = StateCache.replay("pipeline_fineweb_stream", Some(dir), epochs,
+        StateCache.Range("doc_id"), None)(
+        Tables.documents(spark, dir)
+          .select(col("doc_id"), col("lang"), col("text"))) {
+      (b, k, st) => finewebStreamApplyBatch(b, k, st, compactEvery = 2)
     }
     finewebStreamReport(spark, s"$base/state", epochs - 1L)
       .getOrElse(sys.error("fineweb stream: no state"))
@@ -868,34 +860,11 @@ object TextAnalysis {
   def finewebStreamLate(spark: SparkSession, dir: String,
                         epochs: Int = Corpus.StreamLateEpochs,
                         latenessMicros: Long = Corpus.StreamLatenessMicros): DataFrame = {
-    val base = graft.tools.StateCache.getOrBuild(
-      "pipeline_fineweb_stream_late",
-      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs|$latenessMicros") { root =>
-      val statePath = s"$root/state"
-      val lateState = s"$root/late"
-      val all = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("lang"), col("text")).stage()
-      val mm = all.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val width = (hi - lo) / epochs + 1
-      val staged = all
-        .withColumn("arr_epoch", expr(s"(doc_id - $lo) div $width"))
-        .withColumn("src_epoch",
-          when(col("doc_id") % 7 === 3 && col("arr_epoch") >= 2,
-            col("arr_epoch") - 2).otherwise(col("arr_epoch")))
-        .withColumn("ts_us",
-          col("src_epoch") * 1000000L + (col("doc_id") * 131 % 997) * 1000L)
-        .stage()
-      (0 until epochs).foreach { k =>
-        CdcUpsert.withLateness(
-          staged.filter(col("arr_epoch") === k)
-            .select(col("doc_id"), col("lang"), col("text"), col("ts_us")),
-          k, lateState, latenessMicros, col("ts_us")) { onTime =>
-          finewebStreamApplyBatch(
-            onTime.select(col("doc_id"), col("lang"), col("text")),
-            k, statePath, compactEvery = 2)
-        }
-      }
+    val base = StateCache.replay("pipeline_fineweb_stream_late", Some(dir),
+        epochs, StateCache.Range("doc_id"), Some(latenessMicros))(
+        Tables.documents(spark, dir)
+          .select(col("doc_id"), col("lang"), col("text"))) {
+      (b, k, st) => finewebStreamApplyBatch(b, k, st, compactEvery = 2)
     }
     val report = finewebStreamReport(spark, s"$base/state", epochs - 1L)
       .getOrElse(sys.error("fineweb stream late: no state"))
@@ -1188,25 +1157,16 @@ object TextAnalysis {
     * breaks the hash. */
   def dsirStream(spark: SparkSession, dir: String,
                  epochs: Int = 4): DataFrame = {
-    val base = graft.tools.StateCache.getOrBuild(
-      "text_dsir_stream",
-      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs") { root =>
-      val modelPath = s"$root/model"
-      val statePath = s"$root/state"
-      dsirModelTrain(spark, dir, modelPath)
-      val all = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("lang"), col("text")).stage()
-      val mm = all.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val width = (hi - lo) / epochs + 1
-      (0 until epochs).foreach { k =>
-        dsirStreamApplyBatch(
-          all.filter(expr(s"(doc_id - $lo) div $width") === k),
-          k, statePath, modelPath, compactEvery = 2)
-      }
+    val base = StateCache.replay("text_dsir_stream", Some(dir), epochs,
+        StateCache.Range("doc_id"), None)(
+        Tables.documents(spark, dir)
+          .select(col("doc_id"), col("lang"), col("text"))) { (b, k, st) =>
+      // the reference-corpus step: the model trains once, before the
+      // first epoch scores against it
+      if (k == 0) dsirModelTrain(spark, dir, s"$st/model")
+      dsirStreamApplyBatch(b, k, st, s"$st/model", compactEvery = 2)
     }
-    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-        s"$base/state/results", epochs - 1L): _*)
+    LogState.readAsOf(spark, s"$base/state/results", epochs - 1L)
       .select(col("doc_id"), col("n_grams"), col("score_sum"),
         col("score_avg"), col("selected"))
       .stage()

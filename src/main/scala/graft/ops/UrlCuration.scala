@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.tools.{LogState, StateCache}
 import graft.tools.Stage._
 
 /** URL/domain-level curation — the stage real web pipelines run BEFORE
@@ -272,23 +273,12 @@ object UrlCuration {
     * hash. */
   def urlDedupStream(spark: SparkSession, dir: String,
                      epochs: Int = 4): DataFrame = {
-    val base = graft.tools.StateCache.getOrBuild(
-      "text_url_dedup_stream",
-      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs") { root =>
-      val statePath = s"$root/state"
-      val all = withUrl(spark, dir).select(col("doc_id"), col("url"))
-        .stage()
-      val mm = all.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val width = (hi - lo) / epochs + 1
-      (0 until epochs).foreach { k =>
-        urlDedupStreamApplyBatch(
-          all.filter(expr(s"(doc_id - $lo) div $width") === k),
-          k, statePath, compactEvery = 2)
-      }
+    val base = StateCache.replay("text_url_dedup_stream", Some(dir), epochs,
+        StateCache.Range("doc_id"), None)(
+        withUrl(spark, dir).select(col("doc_id"), col("url"))) {
+      (b, k, st) => urlDedupStreamApplyBatch(b, k, st, compactEvery = 2)
     }
-    Tables.parquet(spark, graft.tools.LogState.pathsAsOf(
-        s"$base/state/results", epochs - 1L): _*)
+    LogState.readAsOf(spark, s"$base/state/results", epochs - 1L)
       .select(col("doc_id"), col("canon_url"), col("keep"))
       .stage()
       .orderBy(col("doc_id"))
@@ -380,8 +370,7 @@ object UrlCuration {
                             k: Int = DomainCapK): Option[DataFrame] = {
     val ranked = TopKStream.rankedAsOf(sp, statePath, upTo, "domain", k)
       .getOrElse(return None)
-    val counts = Tables.parquet(sp, 
-        graft.tools.LogState.pathsAsOf(s"$statePath/domcnt", upTo): _*)
+    val counts = LogState.readAsOf(sp, s"$statePath/domcnt", upTo)
       .groupBy(col("domain")).agg(sum(col("n")).as("n_domain"))
     Some(ranked.join(counts, Seq("domain"))
       .select(col("doc_id"), col("domain"), col("rk"),
@@ -397,20 +386,10 @@ object UrlCuration {
     * hash. */
   def domainCapStream(spark: SparkSession, dir: String,
                       epochs: Int = 4): DataFrame = {
-    val base = graft.tools.StateCache.getOrBuild(
-      "corpus_domain_cap_stream",
-      s"$dir@${graft.tools.ArtifactCache.pathToken(dir)}|$epochs") { root =>
-      val statePath = s"$root/state"
-      val all = withUrl(spark, dir).select(col("doc_id"), col("url"))
-        .stage()
-      val mm = all.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val width = (hi - lo) / epochs + 1
-      (0 until epochs).foreach { kk =>
-        domainCapStreamApplyBatch(
-          all.filter(expr(s"(doc_id - $lo) div $width") === kk),
-          kk, statePath, compactEvery = 2)
-      }
+    val base = StateCache.replay("corpus_domain_cap_stream", Some(dir),
+        epochs, StateCache.Range("doc_id"), None)(
+        withUrl(spark, dir).select(col("doc_id"), col("url"))) {
+      (b, k, st) => domainCapStreamApplyBatch(b, k, st, compactEvery = 2)
     }
     domainCapStreamReport(spark, s"$base/state", epochs - 1L)
       .getOrElse(sys.error("domain cap stream: no state"))

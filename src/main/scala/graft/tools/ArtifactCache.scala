@@ -80,7 +80,13 @@ object ArtifactCache {
     * Same freshness contract as [[parquet]]: the key folds in
     * [[pathToken]], so a corpus rebuilt in place re-collects. JVM-lifetime
     * only — nothing persists across runs, and the first call still pays
-    * (and phase-records, via the artifact build) the real cost. */
+    * (and phase-records, via the artifact build) the real cost.
+    *
+    * Contract: a memoized value is SHARED — every caller on every thread
+    * gets the same instance for the JVM lifetime, so no caller may
+    * mutate it (an in-place edit of a codebook or a collected row array
+    * would corrupt every later user). Treat it as read-only; copy before
+    * changing anything. */
   def memo[T <: AnyRef](key: String, kind: String)(f: => T): T =
     driverSide.getOrElseUpdate((s"$key@${pathToken(key)}", kind), f)
       .asInstanceOf[T]

@@ -62,6 +62,12 @@ object LogState {
     paths
   }
 
+  /** The state under `root` as of batch `upTo` as one frame — the
+    * plain-union fold of [[pathsAsOf]], the read-back of the
+    * append-only logs the streaming gates publish. */
+  def readAsOf(sp: SparkSession, root: String, upTo: Long): DataFrame =
+    graft.Tables.parquet(sp, pathsAsOf(root, upTo): _*)
+
   /** Apply-time guard: state NEWER than the batch being applied means the
     * stream went backwards — a wiped checkpoint reusing a stale
     * statePath. A replay may find its own batch's leftovers (they get

@@ -84,9 +84,7 @@ object ScaleProbe {
           k, statePath, threshold = 0.9, tables = 4, bits = b,
           probes = 2, compactEvery = 4, idSpan = span)
       }
-      val paths = graft.tools.LogState.pathsAsOf(
-        s"$statePath/survivors", 15L)
-      graft.Tables.parquet(spark, paths: _*).count()
+      LogState.readAsOf(spark, s"$statePath/survivors", 15L).count()
     } finally TempDirs.deleteRecursively(base)
   }
 

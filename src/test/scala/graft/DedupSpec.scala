@@ -828,6 +828,17 @@ class DedupSpec extends SparkSpec {
       "a vector cannot be both quarantined and a survivor")
   }
 
+  test("late clustered gates replay the id tail when epochs does not " +
+      "divide the corpus: every probe is a survivor or a quarantine row") {
+    for (gate <- Seq(Dedup.minhashStreamLateClustered _,
+                     Dedup.simhashStreamLateClustered _)) {
+      val ids = gate(spark, "", 3, graft.ops.Corpus.StreamLatenessMicros)
+        .collect().map(_.getLong(0)).toSet
+      val missing = (120L until 140L).filterNot(ids.contains)
+      assert(missing.isEmpty, s"probes neither kept nor quarantined: $missing")
+    }
+  }
+
   test("exact dedup under TTL: expired epochs physically evicted, a " +
       "re-sighting refreshes the window, replay idempotent, and the " +
       "gate's rescued cohort is exactly the planted one") {

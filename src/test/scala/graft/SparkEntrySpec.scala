@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,7 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    census of the board's ○ rows;
   *  - one batch parquet read path: `.read.parquet(` appears in no
   *    `src/main` file but `Tables.scala`, so every table read goes
-  *    through [[Tables.parquet]]'s schema cache.
+  *    through [[Tables.parquet]]'s schema cache;
+  *  - one planted late schedule: its Scala form appears once under
+  *    `src/main` ([[graft.ops.Dedup.lateEventTime]]).
   */
 class SparkEntrySpec extends AnyFunSuite {
 
@@ -88,5 +91,17 @@ class SparkEntrySpec extends AnyFunSuite {
       finally walk.close()
     assert(offenders.isEmpty,
       s"batch parquet reads that bypass Tables.parquet: ${offenders.mkString(", ")}")
+  }
+
+  test("grep invariant: the planted late schedule has one Scala definition") {
+    val walk = Files.walk(Paths.get("src/main"))
+    val copies =
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => Regex.quote("131 % 997) * 1000L").r
+          .findAllIn(Files.readString(p)).size)
+        .sum
+      finally walk.close()
+    assert(copies == 1, s"the Scala planted event-time schedule appears " +
+      s"$copies times under src/main — derive it from Dedup.lateEventTime")
   }
 }
