@@ -362,16 +362,21 @@ object Dedup {
         graft.functions.TextKernels.simhashUdf(col("text")).as("fp"))
       .filter(col("fp").isNotNull)
 
-  /** The 4×16-bit band rows of a fingerprint frame, named (band,
-    * band_sig) so the shared candidate kernel and crossing-retraction
-    * machinery apply unchanged. */
-  private def simhashBandRows(fps: DataFrame): DataFrame = {
+  /** The banded-Hamming family's ONE band definition: each 64-bit
+    * fingerprint becomes four 16-bit band rows (doc_id, fp, band,
+    * band_sig) — Hamming ≤ 3 collides on ≥1 band by pigeonhole. The
+    * 8-byte fp rides its band rows, so a verify needs no separate
+    * fingerprint store; the (band, band_sig) naming lets the shared
+    * candidate kernel and crossing retraction apply unchanged. The
+    * batch kernel, the incremental refresh and the stream state all
+    * band through here. */
+  private def hammingBandRows(fps: DataFrame): DataFrame = {
     val bands = (0 until 4).map { b =>
       struct(lit(b).as("band"),
         expr(s"shiftright(fp, ${b * 16}) & 65535").as("band_sig"))
     }
-    fps.select(col("doc_id"), explode(array(bands: _*)).as("bs"))
-      .select(col("doc_id"),
+    fps.select(col("doc_id"), col("fp"), explode(array(bands: _*)).as("bs"))
+      .select(col("doc_id"), col("fp"),
         col("bs.band").as("band"), col("bs.band_sig").as("band_sig"))
   }
 
@@ -382,21 +387,14 @@ object Dedup {
     fingerprintNearDup(simhashFps(docs), maxHamming, maxBucket, sorted)
 
   /** Near-dup pairs over ANY 64-bit fingerprint frame (doc_id, fp) —
-    * the banding + exact-Hamming-verify kernel shared by text simhash
-    * and the perceptual image hash ([[Multimodal]]'s dHash bridges into
-    * this): 4×16-bit band buckets (Hamming ≤ 3 collides on ≥1 band by
-    * pigeonhole), per-bucket skew cap, bit_count(xor) verify. */
+    * the batch form of the banded-Hamming family, shared by text
+    * simhash and the image, audio and video hashes ([[Multimodal]]
+    * bridges into this): [[hammingBandRows]] buckets, per-bucket skew
+    * cap, bit_count(xor) verify. */
   private[graft] def fingerprintNearDup(withFp: DataFrame, maxHamming: Int,
                                         maxBucket: Int,
                                         sorted: Boolean): DataFrame = {
-    val bands = (0 until 4).map { b =>
-      struct(lit(b).as("band"),
-        expr(s"shiftright(fp, ${b * 16}) & 65535").as("band_sig"))
-    }
-    val banded = withFp
-      .select(col("doc_id"), col("fp"), explode(array(bands: _*)).as("bs"))
-      .select(col("doc_id"), col("fp"),
-        col("bs.band").as("band"), col("bs.band_sig").as("band_sig"))
+    val banded = hammingBandRows(withFp)
       .withColumn("bucket_n", count(lit(1))
         .over(org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("band_sig"))))
       .filter(col("bucket_n") <= maxBucket)
@@ -413,291 +411,213 @@ object Dedup {
     if (sorted) verified.orderBy(col("a_id"), col("b_id")) else verified
   }
 
-  /** Incremental SIMHASH band-index maintenance — completes the
-    * incremental axis for the third near-dup tier (minhash and the
-    * span tier already have theirs): the historical corpus persists its
-    * fingerprint frame (8 B/doc + id — the band rows derive from it as
-    * a narrow map, so ONE artifact serves both index and verify); a new
-    * batch fingerprints only its own docs and goes through the shared
-    * candidate kernel ([[deltaCandidatePairs]]: touched-slice pruning,
-    * COMBINED-bucket skew cap, crossing detection) with an exact
-    * Hamming verify. Cap-crossing buckets retract their historical
-    * pairs exactly as the minhash path does — incremental == full
-    * rebuild unconditionally. Fixture form is hash-family-specific
-    * (rows-only semantics); the GATED entry runs on the planted
-    * corpus where the pair set is exact. */
+  /** Incremental SIMHASH band-index maintenance: the historical corpus
+    * persists its fingerprint frame (8 B/doc + id — the band rows derive
+    * from it as a narrow map, so ONE artifact serves both index and
+    * verify) and its pair set, each a build-once artifact; a new batch
+    * fingerprints only its own docs and refreshes through
+    * [[fingerprintIncrementalFrom]], the family's one refresh body
+    * (touched-slice pruning, COMBINED-bucket cap, crossing retraction,
+    * exact Hamming verify) — incremental == full rebuild
+    * unconditionally. `deltaOnly = true` returns just the delta pairs
+    * (unsorted) and never builds the history pair artifact. Fixture
+    * form is hash-family-specific (rows-only semantics); the GATED
+    * entry runs on the planted corpus where the pair set is exact. */
   def simhashIncremental(spark: SparkSession, dir: String,
                          splitId: Long = 400, maxHamming: Int = 3,
                          maxBucket: Int = 200,
                          deltaOnly: Boolean = false): DataFrame = {
     val all = Tables.rebalanced(Tables.documents(spark, dir))
     val oldDocs = all.filter(col("doc_id") < splitId)
-    val newDocs = all.filter(col("doc_id") >= splitId)
     val histFp = graft.tools.ArtifactCache.parquet(spark, dir,
       s"simhash_fp_lt$splitId") { p =>
       simhashFps(oldDocs).write.mode("overwrite").parquet(p)
     }
-    val deltaFp = simhashFps(newDocs).stage()
-    val histIdx = simhashBandRows(histFp)
-    val deltaIdx = simhashBandRows(deltaFp)
-    val dp = deltaHammingPairs(histIdx, deltaIdx,
-      histFp.unionByName(deltaFp), maxHamming, maxBucket)
-    if (deltaOnly) dp.pairs
-    else {
-      val histPairs = graft.tools.ArtifactCache.parquet(spark, dir,
+    val deltaFp = simhashFps(all.filter(col("doc_id") >= splitId)).stage()
+    val histPairs =
+      if (deltaOnly) None
+      else Some(graft.tools.ArtifactCache.parquet(spark, dir,
         s"pairs_simhash_lt${splitId}_h${maxHamming}_b$maxBucket") { p =>
         simhashOf(oldDocs, maxHamming, maxBucket, sorted = false)
           .write.mode("overwrite").parquet(p)
-      }
-      retractCrossedPairs(histPairs, histIdx, deltaIdx,
-        dp.crossingKeys, maxBucket)
-        .unionByName(dp.pairs)
-        .orderBy(col("a_id"), col("b_id"))
-    }
+      })
+    fingerprintIncrementalFrom(histFp, histPairs, deltaFp, maxHamming,
+      maxBucket)
   }
 
   /** INCREMENTAL near-dup refresh over ANY injectable (doc_id, fp)
-    * frames (r16 — the fingerprint-generic twin of
-    * [[simhashIncremental]]'s refresh body, so the multimodal tiers
-    * complete their incremental axis through the same machinery):
-    * history pairs + delta-involved pairs through the shared candidate
-    * kernel (touched-slice pruning, COMBINED-bucket cap, crossing
-    * retraction), exact Hamming verify. Returns the FULL pair set,
-    * equal to a from-scratch [[fingerprintNearDup]] over hist ∪ delta
-    * — the incremental form's defining claim. Callers with a real
-    * history cache the hist side (ArtifactCache); the planted
-    * multimodal corpora are synthesized per run, so their gates
-    * compute it inline. */
+    * frames with the history pair set computed inline — for the planted
+    * multimodal corpora, which are synthesized per run, so there is no
+    * history to cache. Returns the FULL pair set, equal to a
+    * from-scratch [[fingerprintNearDup]] over hist ∪ delta. */
   private[graft] def fingerprintIncremental(histFp: DataFrame,
                                             deltaFp: DataFrame,
                                             maxHamming: Int = 3,
                                             maxBucket: Int = 200,
                                             sorted: Boolean = true): DataFrame =
     fingerprintIncrementalFrom(histFp,
-      fingerprintNearDup(histFp, maxHamming, maxBucket, sorted = false),
+      Some(fingerprintNearDup(histFp, maxHamming, maxBucket, sorted = false)),
       deltaFp, maxHamming, maxBucket, sorted)
 
-  /** [[fingerprintIncremental]] with the HISTORY PAIR SET supplied by the
-    * caller — the maintained-artifact posture: history owns its
-    * fingerprint index and pair set, so a caller that persists them
-    * (ArtifactCache/StateCache) pays the O(hist)-bounded build once and
-    * the recurring delta ingest never recomputes it. `histPairs` must
-    * equal `fingerprintNearDup(histFp, maxHamming, maxBucket,
-    * sorted=false)` over the same history (the builders guarantee this
-    * by constructing it exactly so); the cap-crossing retraction still
-    * runs against the supplied set, so incremental == full rebuild holds
-    * unconditionally, exactly as the inline form. */
+  /** The banded-Hamming family's ONE refresh body: delta-involved pairs
+    * through the shared candidate kernel ([[deltaHammingPairs]]:
+    * touched-slice pruning, COMBINED-bucket cap, exact Hamming verify),
+    * plus the history pair set with cap-crossing retraction
+    * ([[retractCrossedPairs]]) — the maintained-artifact posture:
+    * history owns its fingerprint index and pair set, so a caller that
+    * persists them (ArtifactCache/StateCache) pays the O(hist)-bounded
+    * build once and the recurring delta ingest never recomputes it.
+    * `histPairs` must equal `fingerprintNearDup(histFp, maxHamming,
+    * maxBucket, sorted=false)` over the same history (the artifact builds
+    * construct it exactly so); the retraction runs against the supplied
+    * set, so the result equals a full rebuild unconditionally. With
+    * `histPairs = None` only the delta pairs come back (unsorted): the
+    * additions feed, which cannot express retractions. */
   private[graft] def fingerprintIncrementalFrom(histFp: DataFrame,
-                                                histPairs: DataFrame,
+                                                histPairs: Option[DataFrame],
                                                 deltaFp: DataFrame,
                                                 maxHamming: Int = 3,
                                                 maxBucket: Int = 200,
                                                 sorted: Boolean = true): DataFrame = {
-    val histIdx = simhashBandRows(histFp)
-    val deltaIdx = simhashBandRows(deltaFp)
-    val dp = deltaHammingPairs(histIdx, deltaIdx,
-      histFp.unionByName(deltaFp), maxHamming, maxBucket)
-    val full = retractCrossedPairs(histPairs, histIdx, deltaIdx,
-        dp.crossingKeys, maxBucket)
-      .unionByName(dp.pairs)
-    if (sorted) full.orderBy(col("a_id"), col("b_id")) else full
+    val histIdx = hammingBandRows(histFp)
+    val deltaIdx = hammingBandRows(deltaFp)
+    val dp = deltaHammingPairs(histIdx, deltaIdx, maxHamming, maxBucket)
+    histPairs.fold(dp.pairs) { hp =>
+      val full = retractCrossedPairs(hp, histIdx, deltaIdx,
+          dp.crossingKeys, maxBucket)
+        .unionByName(dp.pairs)
+      if (sorted) full.orderBy(col("a_id"), col("b_id")) else full
+    }
   }
 
-  /** One micro-batch of STREAMING simhash dedup — the third near-dup
-    * tier's ingest-time form, completing its axis (batch/incremental
-    * exist; minhash and the span tier already stream). State is TWO
-    * append-only [[graft.tools.LogState]] logs: `index` rows carry
-    * (doc_id, band, band_sig, fp) — the 8-byte fingerprint rides the
-    * band rows, so the exact-Hamming verify needs NO separate
-    * fingerprint store and no corpus re-read after ingest — and
-    * `survivors` accretes each batch's keepers. Per batch: fingerprint
-    * the arrivals once (cost ∝ batch), prune the historical index to
-    * touched band keys via a broadcast semi-join, cap on COMBINED
-    * bucket sizes (ingest-time semantics, as minhash streaming: a
-    * later-crossing bucket keeps already-published decisions), verify
-    * batch×hist ∪ batch×batch candidates by `bit_count(xor)`, and keep
-    * arrivals that are never the LATER side of a verified pair — with
-    * id-ordered arrival this equals the batch rule "keep d iff no
-    * verified pair (a, d) with a < d". Writes are epoch-keyed
-    * overwrites derived from state < batchId: replay-idempotent. */
+  /** One micro-batch of STREAMING simhash dedup: the text tier's feed
+    * into [[fingerprintStreamApplyBatch]] with doc-level keep-first.
+    * survivorIds = ALL arriving ids: a null-fingerprint doc (empty or
+    * punctuation-only text) can never appear in a verified pair, so
+    * under the batch keep-rule it SURVIVES — deriving survivors from the
+    * fp-filtered frame would silently drop it from the log. The slim
+    * (doc_id, text) projection is checkpointed ONCE and both consumers
+    * (fingerprint input, survivor ids) derive from it: a
+    * non-deterministic foreachBatch source evaluated twice could
+    * otherwise log a survivor that was never indexed, or vice versa. */
   private[graft] def simhashStreamApplyBatch(batch: DataFrame,
                                              batchId: Long, statePath: String,
                                              maxHamming: Int = 3,
                                              maxBucket: Int = 200,
-                                             compactEvery: Int = 4): Unit =
-    // survivorIds = ALL arriving ids: a null-fp doc (empty/punctuation-
-    // only text) can never appear in a verified pair, so under the
-    // batch keep-rule it SURVIVES — deriving survivors from the
-    // fp-filtered frame would silently drop it from the log. The slim
-    // (doc_id, text) projection is checkpointed ONCE and both consumers
-    // (fingerprint input, survivor ids) derive from it: a
-    // non-deterministic foreachBatch source evaluated twice could
-    // otherwise log a survivor that was never indexed, or vice versa
-    // (ADVICE r15).
-    {
-      val slim = batch.select(col("doc_id"), col("text")).stage()
-      fingerprintStreamApplyBatch(
-        simhashFps(slim),
-        batchId, statePath, maxHamming, maxBucket, compactEvery,
-        survivorIds = Some(slim.select(col("doc_id"))))
-    }
-
-  /** The fingerprint-generic core of the streaming banded-Hamming dedup:
-    * takes an already-fingerprinted batch (doc_id, fp) — simhash feeds
-    * it text fingerprints, the multimodal tier feeds it dHash/audioHash
-    * fingerprints; the banding, touched-key prune, bucket cap, and
-    * keep-first survivor rule are identical (an 8-byte fp rides its band
-    * rows — the slim-index discipline). `survivorIds` overrides the id
-    * frame survivors derive from, for callers whose fingerprint step can
-    * DROP rows (simhash's null-fp filter): such docs pair with nothing
-    * and must still survive. */
-  private[graft] def fingerprintStreamApplyBatch(fps0: DataFrame,
-                                                 batchId: Long, statePath: String,
-                                                 maxHamming: Int = 3,
-                                                 maxBucket: Int = 200,
-                                                 compactEvery: Int = 4,
-                                                 survivorIds: Option[DataFrame] = None): Unit = {
-    val sp = fps0.sparkSession
-    val indexRoot = s"$statePath/index"
-    val survRoot = s"$statePath/survivors"
-    Seq(indexRoot, survRoot)
-      .foreach(graft.tools.LogState.requireNoFuture(_, batchId))
-    val fps = fps0.select(col("doc_id"), col("fp")).stage()
-    val bands = (0 until 4).map { b =>
-      struct(lit(b).as("band"),
-        expr(s"shiftright(fp, ${b * 16}) & 65535").as("band_sig"))
-    }
-    val newRows = fps
-      .select(col("doc_id"), col("fp"), explode(array(bands: _*)).as("bs"))
-      .select(col("doc_id"), col("fp"),
-        col("bs.band").as("band"), col("bs.band_sig").as("band_sig"))
-      .stage()
-    val histPaths = graft.tools.LogState.pathsAsOf(indexRoot, batchId - 1)
-    val hist =
-      if (histPaths.nonEmpty) Tables.parquet(sp, histPaths: _*)
-      else newRows.limit(0)
-    val bandCols = Seq("band", "band_sig")
-    val newKeys = newRows.groupBy(bandCols.map(col): _*)
-      .agg(count(lit(1)).as("d_n")).stage()
-    val touchedHist = hist
-      .join(broadcast(newKeys.select(bandCols.map(col): _*)),
-        bandCols, "left_semi")
-      .stage()
-    val okKeys = broadcast(newKeys
-      .join(touchedHist.groupBy(bandCols.map(col): _*)
-          .agg(count(lit(1)).as("h_n")),
-        bandCols, "left_outer")
-      .filter(coalesce(col("h_n"), lit(0L)) + col("d_n") <= maxBucket)
-      .select(bandCols.map(col): _*))
-    val hOk = touchedHist.join(okKeys, bandCols, "left_semi")
-    val dOk = newRows.join(okKeys, bandCols, "left_semi")
-    val dupIds = hOk
-      .select(col("band"), col("band_sig"),
-        col("doc_id").as("a_id"), col("fp").as("a_fp"))
-      .join(dOk.select(col("band"), col("band_sig"),
-        col("doc_id").as("b_id"), col("fp").as("b_fp")), bandCols)
-      .unionByName(dOk
-        .select(col("band"), col("band_sig"),
-          col("doc_id").as("a_id"), col("fp").as("a_fp"))
-        .join(dOk.select(col("band"), col("band_sig"),
-          col("doc_id").as("b_id"), col("fp").as("b_fp")), bandCols))
-      .filter(col("a_id") < col("b_id"))
-      .dropDuplicates("a_id", "b_id")
-      .filter(expr("bit_count(a_fp ^ b_fp)") <= maxHamming)
-      .select(col("b_id").as("doc_id")).distinct()
-    val batchSurvivors = survivorIds.getOrElse(fps.select(col("doc_id")))
-      .join(dupIds, Seq("doc_id"), "left_anti")
-    newRows.write.mode("overwrite").parquet(s"$indexRoot/delta/v$batchId")
-    batchSurvivors.write.mode("overwrite")
-      .parquet(s"$survRoot/delta/v$batchId")
-    graft.tools.LogState.maintain(sp, Seq(indexRoot, survRoot), batchId,
-      compactEvery)(identity)
+                                             compactEvery: Int = 4): Unit = {
+    val slim = batch.select(col("doc_id"), col("text")).stage()
+    fingerprintStreamApplyBatch(simhashFps(slim),
+      batchId, statePath, maxHamming, maxBucket, compactEvery,
+      survivorIds = Some(slim.select(col("doc_id"))))
   }
 
-  /** SEQUENCE-level variant of the fingerprint stream core (r16 — the
-    * streaming form of the video near-dup tier): rows are MEMBER
-    * fingerprints under composite keys (entity·span + position, fp);
-    * the banding, touched-key prune, combined bucket cap, and exact
-    * Hamming verify are the shared machinery verbatim, but the
-    * keep-first rule lifts to ENTITIES: an arriving entity is a dup iff
-    * ≥ `minAligned` of its members collide AT THE SAME POSITION with
-    * one earlier-arriving entity (the temporal banded rule
-    * [[graft.ops.Multimodal.videoDHashClustered]] gates in batch).
-    * State: `index` = member band rows (fp rides its band rows),
-    * `survivors` = entity ids. Id-ordered ENTITY arrival (batches
-    * partition entity ranges) makes the rule prefix-closed; writes are
-    * epoch-keyed overwrites derived from state < batchId —
-    * replay-idempotent. */
-  private[graft] def sequenceFingerprintStreamApplyBatch(
-      memberFps: DataFrame, batchId: Long, statePath: String,
-      span: Int = 64, minAligned: Int = 2,
-      maxHamming: Int = 3, maxBucket: Int = 200,
-      compactEvery: Int = 4): Unit = {
-    val sp = memberFps.sparkSession
-    val indexRoot = s"$statePath/index"
-    val survRoot = s"$statePath/survivors"
-    Seq(indexRoot, survRoot)
-      .foreach(graft.tools.LogState.requireNoFuture(_, batchId))
-    val fps = memberFps.select(col("doc_id"), col("fp")).stage()
-    val bands = (0 until 4).map { b =>
-      struct(lit(b).as("band"),
-        expr(s"shiftright(fp, ${b * 16}) & 65535").as("band_sig"))
-    }
-    val newRows = fps
-      .select(col("doc_id"), col("fp"), explode(array(bands: _*)).as("bs"))
-      .select(col("doc_id"), col("fp"),
-        col("bs.band").as("band"), col("bs.band_sig").as("band_sig"))
-      .stage()
-    val histPaths = graft.tools.LogState.pathsAsOf(indexRoot, batchId - 1)
-    val hist =
-      if (histPaths.nonEmpty) Tables.parquet(sp, histPaths: _*)
-      else newRows.limit(0)
-    val bandCols = Seq("band", "band_sig")
-    val newKeys = newRows.groupBy(bandCols.map(col): _*)
-      .agg(count(lit(1)).as("d_n")).stage()
-    val touchedHist = hist
-      .join(broadcast(newKeys.select(bandCols.map(col): _*)),
-        bandCols, "left_semi")
-      .stage()
-    val okKeys = broadcast(newKeys
-      .join(touchedHist.groupBy(bandCols.map(col): _*)
-          .agg(count(lit(1)).as("h_n")),
-        bandCols, "left_outer")
-      .filter(coalesce(col("h_n"), lit(0L)) + col("d_n") <= maxBucket)
-      .select(bandCols.map(col): _*))
-    val hOk = touchedHist.join(okKeys, bandCols, "left_semi")
-    val dOk = newRows.join(okKeys, bandCols, "left_semi")
-    val dupVids = hOk
-      .select(col("band"), col("band_sig"),
-        col("doc_id").as("a_id"), col("fp").as("a_fp"))
-      .join(dOk.select(col("band"), col("band_sig"),
-        col("doc_id").as("b_id"), col("fp").as("b_fp")), bandCols)
-      .unionByName(dOk
-        .select(col("band"), col("band_sig"),
-          col("doc_id").as("a_id"), col("fp").as("a_fp"))
-        .join(dOk.select(col("band"), col("band_sig"),
-          col("doc_id").as("b_id"), col("fp").as("b_fp")), bandCols))
-      .filter(col("a_id") < col("b_id"))
-      .dropDuplicates("a_id", "b_id")
-      .filter(col("a_id") % span === col("b_id") % span) // ALIGNED members
-      .filter(expr("bit_count(a_fp ^ b_fp)") <= maxHamming)
+  /** The keep-first rule of the banded-Hamming stream core: given the
+    * batch's arriving ids (a `doc_id` frame) and its verified pairs
+    * (a_id, b_id, hamming), the surviving unit ids (a `doc_id` frame). */
+  private[graft] type KeepFirst = (DataFrame, DataFrame) => DataFrame
+
+  /** Doc-level keep-first: an arrival is a dup iff it is the LATER side
+    * (b_id) of a verified pair — with id-ordered arrival this equals the
+    * batch rule "keep d iff no verified pair (a, d) with a < d". */
+  private val keepFirstDoc: KeepFirst = (arrivals, verified) =>
+    arrivals.join(verified.select(col("b_id").as("doc_id")).distinct(),
+      Seq("doc_id"), "left_anti")
+
+  /** Entity-level keep-first over member keys (entity·span + position):
+    * an arriving entity is a dup iff ≥ `minAligned` of its members
+    * collide AT THE SAME POSITION with one earlier entity
+    * ([[alignedEntityPairs]] — the temporal rule the video gates share);
+    * survivors are entity ids. */
+  private def keepFirstEntity(span: Int, minAligned: Int): KeepFirst =
+    (arrivals, verified) =>
+      arrivals.select(expr(s"doc_id div $span").as("doc_id")).distinct()
+        .join(alignedEntityPairs(verified, span, minAligned)
+            .select(col("b_id").as("doc_id")).distinct(),
+          Seq("doc_id"), "left_anti")
+
+  /** Member pairs → entity pairs over composite keys (entity·span +
+    * position): aligned filter, per-entity-pair collision count,
+    * threshold; (a_id, b_id, n_aligned), unsorted. A pure function of
+    * the member pair set — which is what lets the video incremental
+    * form inherit the frame kernel's equality-with-rebuild claim and
+    * the stream form reuse the batch rule. */
+  private[graft] def alignedEntityPairs(memberPairs: DataFrame, span: Int,
+                                        minAligned: Int): DataFrame =
+    memberPairs
+      .filter(col("a_id") % span === col("b_id") % span) // aligned only
       .select(expr(s"a_id div $span").as("va"),
         expr(s"b_id div $span").as("vb"))
       .filter(col("va") =!= col("vb"))
       .groupBy(col("va"), col("vb"))
       .agg(count(lit(1)).as("n_aligned"))
       .filter(col("n_aligned") >= minAligned)
-      .select(col("vb").as("vid")).distinct()
-    val batchSurvivors = fps
-      .select(expr(s"doc_id div $span").as("doc_id")).distinct()
-      .join(dupVids.select(col("vid").as("doc_id")), Seq("doc_id"),
-        "left_anti")
+      .select(col("va").as("a_id"), col("vb").as("b_id"), col("n_aligned"))
+
+  /** The banded-Hamming family's ONE stream body: one micro-batch of an
+    * already-fingerprinted batch (doc_id, fp) — simhash feeds it text
+    * fingerprints, the multimodal tier image/audio hashes and video
+    * frames. State is TWO append-only [[graft.tools.LogState]] logs:
+    * `index` = [[hammingBandRows]] (the fp rides its band rows, so the
+    * verify reads no corpus after ingest) and `survivors` = each
+    * batch's keepers. Per batch: band the arrivals once (cost ∝ batch),
+    * then the shared candidate kernel ([[deltaCandidatePairs]] via
+    * [[deltaHammingPairs]]: touched-key prune, COMBINED bucket cap,
+    * batch×hist ∪ batch×batch candidates, each carrying both
+    * fingerprints off the band rows) and the `bit_count(xor)` verify.
+    * `keepFirst` turns the verified pairs into survivors:
+    * [[keepFirstDoc]] by default, [[keepFirstEntity]] for sequences.
+    * Arrival ids are the batch's band-0 rows (exactly one per doc);
+    * `survivorIds` overrides them for callers whose fingerprint step
+    * can DROP rows (simhash's null-fp filter): such docs pair with
+    * nothing and must still survive.
+    *
+    * Cap semantics are INGEST-TIME, as minhash streaming: each batch
+    * caps on the combined (index-so-far + batch) bucket size, so a
+    * bucket that crosses the cap in a later batch keeps the decisions
+    * already published. Writes are epoch-keyed overwrites derived from
+    * state < batchId: replay-idempotent. */
+  private[graft] def fingerprintStreamApplyBatch(fps: DataFrame,
+                                                 batchId: Long, statePath: String,
+                                                 maxHamming: Int = 3,
+                                                 maxBucket: Int = 200,
+                                                 compactEvery: Int = 4,
+                                                 survivorIds: Option[DataFrame] = None,
+                                                 keepFirst: KeepFirst = keepFirstDoc): Unit = {
+    val sp = fps.sparkSession
+    val indexRoot = s"$statePath/index"
+    val survRoot = s"$statePath/survivors"
+    Seq(indexRoot, survRoot)
+      .foreach(graft.tools.LogState.requireNoFuture(_, batchId))
+    val newRows = hammingBandRows(fps).stage()
+    val histPaths = graft.tools.LogState.pathsAsOf(indexRoot, batchId - 1)
+    val hist =
+      if (histPaths.nonEmpty) Tables.parquet(sp, histPaths: _*)
+      else newRows.limit(0)
+    val verified =
+      deltaHammingPairs(hist, newRows, maxHamming, maxBucket).pairs
+    val batchSurvivors = keepFirst(survivorIds.getOrElse(
+      newRows.filter(col("band") === 0).select(col("doc_id"))), verified)
     newRows.write.mode("overwrite").parquet(s"$indexRoot/delta/v$batchId")
     batchSurvivors.write.mode("overwrite")
       .parquet(s"$survRoot/delta/v$batchId")
     graft.tools.LogState.maintain(sp, Seq(indexRoot, survRoot), batchId,
       compactEvery)(identity)
   }
+
+  /** The sequence (video) form of [[fingerprintStreamApplyBatch]]: rows
+    * are MEMBER fingerprints under composite keys (entity·span +
+    * position, fp) and keep-first is entity-level ([[keepFirstEntity]]):
+    * an arriving entity is a dup iff ≥ `minAligned` of its members
+    * collide at the same position with one earlier entity. Id-ordered
+    * ENTITY arrival (batches partition entity ranges) makes the rule
+    * prefix-closed. */
+  private[graft] def sequenceFingerprintStreamApplyBatch(
+      memberFps: DataFrame, batchId: Long, statePath: String,
+      span: Int = 64, minAligned: Int = 2,
+      maxHamming: Int = 3, maxBucket: Int = 200,
+      compactEvery: Int = 4): Unit =
+    fingerprintStreamApplyBatch(memberFps, batchId, statePath, maxHamming,
+      maxBucket, compactEvery, keepFirst = keepFirstEntity(span, minAligned))
 
   /** STREAMING simhash through the HASH GATE on the planted corpus:
     * four contiguous id-range batches (arrival order = id order, so the
@@ -1479,8 +1399,10 @@ object Dedup {
                                  verifyShingles: DataFrame => DataFrame,
                                  jaccardThreshold: Double,
                                  maxBucket: Int): DeltaPairs = {
-    val (candidates, crossingKeys) =
+    val (unstaged, crossingKeys) =
       deltaCandidatePairs(histIndex, deltaIndex, maxBucket)
+    // staged: both the candidate-id broadcast and the verify join read it
+    val candidates = unstaged.stage()
     // the distinct runs inside the broadcast exchange build itself — an
     // eager staging job before the broadcast bought nothing but one more
     // scheduler round-trip (candidates is already materialized)
@@ -1498,18 +1420,18 @@ object Dedup {
     DeltaPairs(pairs, crossingKeys)
   }
 
-  /** Hamming analogue of [[deltaVerifiedPairs]] for the SIMHASH tier:
-    * same candidate kernel (touched-slice pruning, combined-bucket cap,
-    * crossing detection), verification = exact `bit_count(xor)` against
-    * the fingerprint frame instead of shingle Jaccard. */
+  /** Hamming analogue of [[deltaVerifiedPairs]] for the banded-Hamming
+    * family (the incremental refresh and the stream core): same
+    * candidate kernel (touched-slice pruning, combined-bucket cap,
+    * crossing detection), verification = exact `bit_count(xor)`. Both
+    * indexes are [[hammingBandRows]], so each candidate carries its two
+    * fingerprints out of the kernel — no fingerprint lookup join. */
   private def deltaHammingPairs(histIndex: DataFrame, deltaIndex: DataFrame,
-                                fps: DataFrame, maxHamming: Int,
+                                maxHamming: Int,
                                 maxBucket: Int): DeltaPairs = {
     val (candidates, crossingKeys) =
-      deltaCandidatePairs(histIndex, deltaIndex, maxBucket)
+      deltaCandidatePairs(histIndex, deltaIndex, maxBucket, carry = Seq("fp"))
     val pairs = candidates
-      .join(fps.select(col("doc_id").as("a_id"), col("fp").as("a_fp")), Seq("a_id"))
-      .join(fps.select(col("doc_id").as("b_id"), col("fp").as("b_fp")), Seq("b_id"))
       .withColumn("hamming", expr("bit_count(a_fp ^ b_fp)"))
       .filter(col("hamming") <= maxHamming)
       .select(col("a_id"), col("b_id"), col("hamming"))
@@ -1517,15 +1439,19 @@ object Dedup {
   }
 
   /** Shared candidate kernel of the incremental/streaming refresh paths
-    * (split out of [[deltaVerifiedPairs]] so the simhash tier reuses it
-    * with a Hamming verify): candidate (a_id, b_id) pairs between a
+    * (minhash through [[deltaVerifiedPairs]], the banded-Hamming family
+    * through [[deltaHammingPairs]]): candidate (a_id, b_id) pairs between a
     * delta's band rows and the historical band index, plus delta×delta,
     * with the historical index pruned to touched keys and the skew cap
     * applied on COMBINED bucket sizes; also returns the (tiny) crossing
-    * key set. */
+    * key set. Each `carry` column of the index rows (a per-doc value,
+    * such as the Hamming family's fp) rides out as `a_<c>` / `b_<c>`.
+    * The candidates come back unstaged: a caller that reads them twice
+    * stages them, a single consumer folds them into its own job. */
   private def deltaCandidatePairs(histIndex: DataFrame,
                                   deltaIndex: DataFrame,
-                                  maxBucket: Int): (DataFrame, DataFrame) = {
+                                  maxBucket: Int,
+                                  carry: Seq[String] = Nil): (DataFrame, DataFrame) = {
     val bandCols = Seq("band", "band_sig")
     val deltaCounts = deltaIndex.groupBy(bandCols.map(col): _*)
       .agg(count(lit(1)).as("d_n"))
@@ -1562,18 +1488,16 @@ object Dedup {
     // corpus size, and the hist-side join runs with NO exchange of the
     // touched index slice (2 fewer shuffles, each of which AQE would
     // otherwise materialize as its own dispatch-floored stage job).
-    val dOkB = broadcast(
-      dOk.select(col("band"), col("band_sig"), col("doc_id").as("b_id")))
-    val candidates = hOk
-      .select(col("band"), col("band_sig"), col("doc_id").as("a_id"))
-      .join(dOkB, bandCols)
-      .unionByName(dOk
-        .select(col("band"), col("band_sig"), col("doc_id").as("a_id"))
-        .join(dOkB, bandCols))
+    def side(rows: DataFrame, s: String): DataFrame =
+      rows.select(Seq(col("band"), col("band_sig"), col("doc_id").as(s"${s}_id")) ++
+        carry.map(c => col(c).as(s"${s}_$c")): _*)
+    val dOkB = broadcast(side(dOk, "b"))
+    val candidates = side(hOk, "a").join(dOkB, bandCols)
+      .unionByName(side(dOk, "a").join(dOkB, bandCols))
       .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"))
+      .select((Seq("a_id", "b_id") ++
+        carry.flatMap(c => Seq(s"a_$c", s"b_$c"))).map(col): _*)
       .dropDuplicates("a_id", "b_id")
-      .stage()
     (candidates, crossingKeys)
   }
 
@@ -3996,9 +3920,10 @@ object Dedup {
         compactEvery = compactEvery, idSpan = idSpan)
     }
 
-  /** [[simhashStreamApplyBatch]] under the same lateness wrapper — all
-    * three streaming dedup tiers now share one watermark/quarantine
-    * protocol. */
+  /** [[simhashStreamApplyBatch]] under the shared lateness wrapper
+    * ([[CdcUpsert.withLateness]]) — the one watermark/quarantine
+    * protocol of every streaming near-dup tier (minhash, simhash,
+    * embedding, substring). */
   private[graft] def simhashStreamLateApplyBatch(
       batch: DataFrame, epoch: Long, lateState: String,
       dedupState: String, latenessMicros: Long,

@@ -873,19 +873,20 @@ object Multimodal {
     * shared incremental kernel ([[Dedup.fingerprintIncremental]] over
     * frame-composite keys — hist pairs + delta-involved pairs with
     * crossing retraction), then the SAME aligned-count aggregation as
-    * the batch gate; the aggregation is a pure function of the frame
-    * pair set, so frame-level equality-with-rebuild lifts to the video
-    * pairs. History = clips with vid < 100, delta = the rest (the
+    * the batch gate ([[Dedup.alignedEntityPairs]]); the aggregation is a
+    * pure function of the frame pair set, so frame-level
+    * equality-with-rebuild lifts to the video pairs. History = clips with vid < 100, delta = the rest (the
     * mid-family split). Same closed-form oracle as the batch gate. */
   def videoDHashIncrClustered(spark: SparkSession, dir: String,
                               splitVid: Long = 100,
                               minAligned: Int = 2): DataFrame = {
     val fps = videoFrameFps(spark).stage()
     val cut = splitVid * 64
-    aggregateAligned(
-      Dedup.fingerprintIncremental(fps.filter(col("doc_id") < cut),
-        fps.filter(col("doc_id") >= cut), sorted = false),
-      span = 64, minAligned = minAligned)
+    Dedup.alignedEntityPairs(
+        Dedup.fingerprintIncremental(fps.filter(col("doc_id") < cut),
+          fps.filter(col("doc_id") >= cut), sorted = false),
+        span = 64, minAligned = minAligned)
+      .orderBy(col("a_id"), col("b_id"))
   }
 
   /** The sequence-banding stage over frame-composite-keyed fingerprints
@@ -895,36 +896,20 @@ object Multimodal {
     * indices) and prove the temporal rule rejects it. */
   private[graft] def videoNearDupPairs(frameFps: DataFrame,
                                        minAligned: Int): DataFrame =
-    aggregateAligned(
-      Dedup.fingerprintNearDup(frameFps, maxHamming = 3, maxBucket = 200,
-        sorted = false),
-      span = 64, minAligned = minAligned)
-
-  /** Frame pairs → clip pairs: aligned filter, per-pair collision
-    * count, threshold. A pure function of the frame pair set — which
-    * is what lets the incremental form inherit the frame kernel's
-    * equality-with-rebuild claim. */
-  private def aggregateAligned(framePairs: DataFrame, span: Int,
-                               minAligned: Int): DataFrame =
-    framePairs
-      .filter(col("a_id") % span === col("b_id") % span) // aligned only
-      .select(expr(s"a_id div $span").as("va"),
-        expr(s"b_id div $span").as("vb"))
-      .filter(col("va") =!= col("vb"))
-      .groupBy(col("va"), col("vb"))
-      .agg(count(lit(1)).as("n_aligned"))
-      .filter(col("n_aligned") >= minAligned)
-      .select(col("va").as("a_id"), col("vb").as("b_id"), col("n_aligned"))
+    Dedup.alignedEntityPairs(
+        Dedup.fingerprintNearDup(frameFps, maxHamming = 3, maxBucket = 200,
+          sorted = false),
+        span = 64, minAligned = minAligned)
       .orderBy(col("a_id"), col("b_id"))
 
   /** STREAMING video near-dup through the HASH GATE — the video tier
     * joins the streaming matrix the epoch its batch form lands: the
     * same 140-clip corpus arrives in four contiguous VIDEO-id-range
     * batches; each batch's real GIF round-trip feeds per-frame dHashes
-    * under composite keys into the SEQUENCE stream core
-    * ([[Dedup.sequenceFingerprintStreamApplyBatch]] — shared banding /
-    * prune / cap / verify, entity-level keep-first under the ≥k-aligned
-    * temporal rule). Survivors are exactly the first copy of each clip
+    * under composite keys into the banded-Hamming stream core
+    * ([[Dedup.sequenceFingerprintStreamApplyBatch]] — the image/audio
+    * core with the entity-level keep-first rule: ≥k aligned frame pairs,
+    * the batch gate's [[Dedup.alignedEntityPairs]]). Survivors are exactly the first copy of each clip
     * family plus the uniques — the SAME synthesized oracle as the image
     * and audio stream gates. */
   def videoDHashStreamClustered(spark: SparkSession, dir: String,
@@ -1043,7 +1028,7 @@ object Multimodal {
   }
 
   /** Real-codec dHash per pair over a (pair_id, img) frame — the shared
-    * fingerprint kernel of the batch/incremental curation forms. */
+    * fingerprint kernel of the batch/incremental/stream curation forms. */
   private def pairFpsOf(df: DataFrame): DataFrame = {
     import df.sparkSession.implicits._
     df.select(col("pair_id"), col("img")).as[(Long, Array[Byte])]
@@ -1069,14 +1054,11 @@ object Multimodal {
     * is |distinct claimed seeds| ≤ corpus — broadcast at gate scale,
     * an equi-join at any scale. */
   def mmCuration(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val W = org.apache.spark.sql.expressions.Window
     val pairs = mmPairCorpus(spark).stage()
     // image modality: real-codec dHash per pair, keep-first via the
     // shared banded kernel (drop any pair with an earlier near-dup mate)
-    val fps = pairs.select(col("pair_id"), col("img")).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, png) => (id, dHash(decodePng(png))) })
-      .toDF("doc_id", "fp").stage()
+    val fps = pairFpsOf(pairs).stage()
     val laterDups = Dedup.fingerprintNearDup(fps, maxHamming = 3,
         maxBucket = 200, sorted = false)
       .select(col("b_id").as("pair_id")).distinct()
@@ -1098,9 +1080,16 @@ object Multimodal {
     * image side went encode→decode, so an honest pair's Hamming-0 score
     * additionally witnesses that the codec round trip is the identity
     * (the mm_decode_real claim, re-asserted inside this gate). */
-  private def mmScoreAndReport(flagged: DataFrame, fps: DataFrame): DataFrame = {
-    val scored = mmScoreAndReportFlags(flagged,
-      fps.withColumnRenamed("doc_id", "pair_id")).stage()
+  private def mmScoreAndReport(flagged: DataFrame, fps: DataFrame): DataFrame =
+    attritionReport(mmScoreAndReportFlags(flagged,
+      fps.withColumnRenamed("doc_id", "pair_id")).stage())
+      .orderBy(col("stage"))
+
+  /** The curation attrition report over a scored s1–s4 frame: one
+    * (stage, n_pairs, id_sum) row per cumulative stage, unsorted — the
+    * batch/incremental tail and the stream form's per-epoch
+    * contribution (an integer sum over epochs) share this one list. */
+  private def attritionReport(scored: DataFrame): DataFrame = {
     def row(stage: String, flag: org.apache.spark.sql.Column): DataFrame =
       scored.agg(
         count(when(flag, 1)).as("n_pairs"),
@@ -1111,7 +1100,6 @@ object Multimodal {
       .unionByName(row("2_cap_quality", col("s2")))
       .unionByName(row("3_cap_dedup", col("s3")))
       .unionByName(row("4_pair_score", col("s4")))
-      .orderBy(col("stage"))
   }
 
   /** INCREMENTAL cross-modal curation — [[mmCuration]]'s maintained
@@ -1119,8 +1107,8 @@ object Multimodal {
     * history (pair_id < splitId) owns its modality artifacts — the
     * image fingerprint index and the caption keep-first map
     * (caption → min surviving id); a delta ingest pays delta-bound
-    * work — delta fingerprints pair against history through the shared
-    * incremental candidate kernel ([[Dedup.fingerprintIncremental]]),
+    * work — delta fingerprints pair against history through the
+    * banded-Hamming refresh body ([[Dedup.fingerprintIncrementalFrom]]),
     * delta captions consult the history map (ids are monotone across
     * the split, so no delta arrival can unseat a history min — the
     * keep-first invariant that makes the map sufficient), and the
@@ -1170,7 +1158,7 @@ object Multimodal {
     val hist = caps.filter(col("pair_id") < splitId)
     val delta = caps.filter(col("pair_id") >= splitId)
     val deltaFp = pairFpsOf(mmPairImages(spark, splitId, 140)).stage()
-    val laterDups = Dedup.fingerprintIncrementalFrom(histFp, histPairs,
+    val laterDups = Dedup.fingerprintIncrementalFrom(histFp, Some(histPairs),
         deltaFp, maxHamming = maxHamming, maxBucket = maxBucket, sorted = false)
       .select(col("b_id").as("pair_id")).distinct()
     def baseFlags(df: DataFrame): DataFrame = df
@@ -1242,10 +1230,14 @@ object Multimodal {
     * Epoch-keyed overwrites throughout: replay-idempotent. */
   def mmCurationStream(spark: SparkSession, dir: String,
                        epochs: Int = 4): DataFrame = {
-    import spark.implicits._
     val W = org.apache.spark.sql.expressions.Window
+    // the dedup parameters baked into the image state, read from the same
+    // vals as the stream core below, so key and build cannot drift
+    val maxHamming = 3
+    val maxBucket = 200
     val base = graft.tools.StateCache.getOrBuild(
-      "pipeline_mm_curation_stream", s"clustered|$epochs") { root =>
+      "pipeline_mm_curation_stream",
+      s"clustered|$epochs|$maxHamming|$maxBucket") { root =>
       val imgState = s"$root/img"
       val capRoot = s"$root/caps"
       val repRoot = s"$root/report"
@@ -1257,13 +1249,9 @@ object Multimodal {
         val batch = pairs.filter(col("pair_id") >= k * width &&
           (col("pair_id") < (k + 1) * width || lit(k == epochs - 1)))
           .stage()
-        val fps = batch.select(col("pair_id"), col("img"))
-          .as[(Long, Array[Byte])]
-          .mapPartitions(_.map { case (id, png) =>
-            (id, dHash(decodePng(png))) })
-          .toDF("doc_id", "fp").stage()
+        val fps = pairFpsOf(batch).stage()
         Dedup.fingerprintStreamApplyBatch(fps, k, imgState,
-          maxHamming = 3, maxBucket = 200, compactEvery = 2)
+          maxHamming = maxHamming, maxBucket = maxBucket, compactEvery = 2)
         val surv = LogState.readAsOf(spark, s"$imgState/survivors", k)
           .select(col("doc_id").as("pair_id"), lit(true).as("s1x"))
         val capHist =
@@ -1288,15 +1276,7 @@ object Multimodal {
           .select(col("caption"), col("pair_id").as("cap_id"))
           .write.mode("overwrite").parquet(s"$capRoot/delta/v$k")
         // epoch-keyed report contribution (commutative integer fold)
-        def row(stage: String, flag: org.apache.spark.sql.Column) =
-          scored.agg(count(when(flag, 1)).as("n_pairs"),
-            coalesce(sum(when(flag, col("pair_id"))), lit(0L)).as("id_sum"))
-            .select(lit(stage).as("stage"), col("n_pairs"), col("id_sum"))
-        row("0_total", lit(true))
-          .unionByName(row("1_img_dedup", col("s1")))
-          .unionByName(row("2_cap_quality", col("s2")))
-          .unionByName(row("3_cap_dedup", col("s3")))
-          .unionByName(row("4_pair_score", col("s4")))
+        attritionReport(scored)
           .write.mode("overwrite").parquet(s"$repRoot/delta/v$k")
       }
     }
@@ -1308,7 +1288,8 @@ object Multimodal {
   }
 
   /** The s4 scoring step of [[mmScoreAndReport]] without the report
-    * tail — the stream form folds its report across epochs instead. */
+    * tail — the stream form folds its [[attritionReport]] across epochs
+    * instead. */
   private def mmScoreAndReportFlags(flagged: DataFrame,
                                     fps: DataFrame): DataFrame = {
     val spark = flagged.sparkSession

@@ -23,7 +23,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `src/main` file but `Tables.scala`, so every table read goes
   *    through [[Tables.parquet]]'s schema cache;
   *  - one planted late schedule: its Scala form appears once under
-  *    `src/main` ([[graft.ops.Dedup.lateEventTime]]).
+  *    `src/main` ([[graft.ops.Dedup.lateEventTime]]);
+  *  - one banded-Hamming band definition: the 4×16-bit band expression
+  *    appears once under `src/main` (`Dedup.hammingBandRows`).
   */
 class SparkEntrySpec extends AnyFunSuite {
 
@@ -103,5 +105,18 @@ class SparkEntrySpec extends AnyFunSuite {
       finally walk.close()
     assert(copies == 1, s"the Scala planted event-time schedule appears " +
       s"$copies times under src/main — derive it from Dedup.lateEventTime")
+  }
+
+  test("grep invariant: the 4×16-bit Hamming band expression has one " +
+      "definition") {
+    val walk = Files.walk(Paths.get("src/main"))
+    val copies =
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => Regex.quote("& 65535").r
+          .findAllIn(Files.readString(p)).size)
+        .sum
+      finally walk.close()
+    assert(copies == 1, s"the 16-bit band expression appears $copies " +
+      s"times under src/main — band through Dedup.hammingBandRows")
   }
 }
