@@ -1,7 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.functions.{array_remove, lit, split, udf}
 import org.apache.spark.unsafe.Platform
 
 /** Compiled per-row kernels for the hashing-heavy dedup operators.
@@ -20,6 +21,17 @@ import org.apache.spark.unsafe.Platform
 object TextKernels {
 
   private val Seed = 42L
+
+  /** Whitespace tokens, empty strings dropped (Spark's split is
+    * regex-based and emits empties on repeated separators) — the one
+    * column tokenizer of the text, dedup and corpus operators.
+    * `array_remove` is codegen'd, where a `filter` lambda is interpreted
+    * per element; null text gives null, and the type is split's
+    * `array<string>` with no null elements. */
+  def tokens(c: Column): Column = array_remove(split(c, " "), lit(""))
+
+  /** The oracle (DuckDB) form of [[tokens]] over a `text` column. */
+  val tokensSql: String = "list_filter(string_split(text, ' '), t -> t <> '')"
 
   /** xxhash64 of a UTF-8 string. */
   private def hashString(s: String, seed: Long): Long = {

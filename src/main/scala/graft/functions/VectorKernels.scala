@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
@@ -102,20 +103,28 @@ object VectorKernels {
     var best = Double.NegativeInfinity
     var c = 0
     while (c < m.length) {
-      val row = m(c)
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      val n = math.min(v.length, row.length)
-      while (i < n) {
-        val a = v(i); val b = row(i)
-        dot += a * b; na += a * a; nb += b * b
-        i += 1
-      }
-      val cos = dot / (math.sqrt(na) * math.sqrt(nb))
+      val cos = cosine(v, m(c))
       if (cos > best) { best = cos; bestIdx = c }
       c += 1
     }
     (bestIdx, best)
+  }
+
+  /** Cosine of two driver- or task-side vectors over their common
+    * prefix, in [[CosineSimilarity]]'s operation sequence — dot, ‖a‖²
+    * and ‖b‖² accumulated in index order, then
+    * `dot / (sqrt(na) * sqrt(nb))` — so on equal-length vectors it is
+    * bit-identical to `cosine_sim`; NaN when either norm is zero. */
+  def cosine(a: Array[Double], b: Array[Double]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) {
+      val x = a(i); val y = b(i)
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
   /** Multi-probe LSH: all signatures within Hamming distance ≤ d of `sig`
@@ -178,6 +187,43 @@ object VectorKernels {
   /** (argmax index, max cosine) as a struct column — fields `_1`, `_2`. */
   def nearestUdf(m: Array[Array[Double]]): UserDefinedFunction =
     udf((v: Array[Double]) => nearest(v, m))
+
+  /** IVF probe-cell ranking: the `nprobe` cells whose centroid is most
+    * cosine-similar to `v`, best first — the per-query replacement for a
+    * queries × centroids cross join plus a `row_number` window.
+    *
+    * It orders exactly as that window did, `c_cos DESC, cluster_id ASC`
+    * under Spark's double ordering ([[SQLOrderingUtil.compareDoubles]]:
+    * NaN sorts highest, so a zero-norm centroid's NaN cosine ranks FIRST;
+    * -0.0 equals 0.0 and falls to the id tie-break). Each cosine is the
+    * operation sequence of [[CosineSimilarity]] ([[cosine]]), so the
+    * probed cell set is the one the window picked. A null `v` (all
+    * cosines null) ranks the cells by id alone, as the window's ties
+    * did. `ids` is row-aligned with `m`; lengths must match, as for
+    * `cosine_sim`. */
+  def probeCells(v: Array[Double], ids: Array[Int], m: Array[Array[Double]],
+                 nprobe: Int): Array[Int] = {
+    val cos = new Array[Double](m.length)
+    if (v != null) {
+      var c = 0
+      while (c < m.length) {
+        require(m(c).length == v.length,
+          s"probeCells: length mismatch ${v.length} vs ${m(c).length}")
+        cos(c) = cosine(v, m(c))
+        c += 1
+      }
+    }
+    m.indices.sortWith { (a, b) =>
+      val byCos = SQLOrderingUtil.compareDoubles(cos(b), cos(a))
+      if (byCos != 0) byCos < 0 else ids(a) < ids(b)
+    }.take(nprobe).map(ids).toArray
+  }
+
+  /** [[probeCells]] as a column: array<int> of cell ids, best first; the
+    * matrix is closed over like [[nearestUdf]]'s. */
+  def probeCellsUdf(ids: Array[Int], m: Array[Array[Double]],
+                    nprobe: Int): UserDefinedFunction =
+    udf((v: Array[Double]) => probeCells(v, ids, m, nprobe))
 
   /** Max cosine of `v` against the candidate matrix (k-means|| cost term). */
   def maxCosUdf(m: Array[Array[Double]]): UserDefinedFunction =

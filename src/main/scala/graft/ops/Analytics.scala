@@ -176,7 +176,7 @@ object Analytics {
                       d: Int = 4, w: Int = 512): DataFrame = {
     import org.apache.spark.sql.Encoders
     val toks = Tables.documents(spark, dir)
-      .select(explode(filter(split(col("text"), " "), t => t =!= lit(""))).as("token"))
+      .select(explode(graft.functions.TextKernels.tokens(col("text"))).as("token"))
     val cms = udaf(new graft.functions.CountMinAggregator(d, w), Encoders.STRING)
     // one-row scalar aggregate — driver-side by design (KMeans k-row precedent)
     val sk = toks.agg(cms(col("token")).as("sk"))

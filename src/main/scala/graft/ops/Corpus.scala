@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.TextKernels.{tokens, tokensSql}
 import graft.tools.{LogState, StateCache}
 import graft.tools.Stage._
 
@@ -27,13 +28,6 @@ import graft.tools.Stage._
   * single-level: shard cardinality and balance are writer-chosen.
   */
 object Corpus {
-
-  /** Whitespace tokens, empties dropped — same tokenizer as TextAnalysis. */
-  private def tokens(c: Column): Column =
-    filter(split(c, " "), t => t =!= lit(""))
-
-  private val tokensSql =
-    "list_filter(string_split(text, ' '), t -> t <> '')"
 
   /** Tunables shared between the lateness/shard queries and their SQL
     * oracles — the q103 `Q103Epochs` pattern (ADVICE r16): each value

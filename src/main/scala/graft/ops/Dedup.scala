@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.TextKernels.{tokens, tokensSql}
 import graft.tools.{LogState, StateCache}
 import graft.tools.Stage._
 
@@ -27,12 +28,6 @@ import graft.tools.Stage._
   * PAPERS.md (e.g. "Incremental ... Top-K Similarity Search", EDBT 2020).
   */
 object Dedup {
-
-  private def tokens(c: Column): Column =
-    filter(split(c, " "), t => t =!= lit(""))
-
-  private val tokensSql =
-    "list_filter(string_split(text, ' '), t -> t <> '')"
 
   // ---------------------------------------------------------------------
   // Exact dedup (SURVEY §2.4 U2 parity, keyed variant)
@@ -2101,21 +2096,20 @@ object Dedup {
     // with no directory identity keep the inline fit. The cached index
     // trains on `embeddings(d)` itself, not on `corpus`, so it is by
     // construction the index its key names.
-    val centroids = indexDir match {
+    val quantizer = indexDir match {
       case Some(d) =>
-        graft.tools.ArtifactCache.parquet(spark, d,
-          s"semdedup_c${k}_i$iterations") { p =>
-          KMeans.saveIndex(KMeans.fit(spark, Tables.embeddings(spark, d), k, iterations), p)
+        KMeans.frozen(spark, d, s"semdedup_c${k}_i$iterations") {
+          KMeans.fit(spark, Tables.embeddings(spark, d), k, iterations)
         }
-      case None => KMeans.fit(spark, corpus, k, iterations)
+      case None => KMeans.Quantizer.of(KMeans.fit(spark, corpus, k, iterations))
     }
     val vecs = corpus.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      col("embedding").cast("array<double>").as("v"))
     // localCheckpoint: the assignment map is consumed THREE times (skew
     // aggregate + both sides of the pair join) — without it the eager
     // skew .head would force a full extra k-means assignment pass per
     // call, inflating the very probe timing the metric exists to explain.
-    val assigned = KMeans.assign(vecs, centroids)
+    val assigned = KMeans.assign(vecs, quantizer)
       .select(col("vec_id"), col("v"), col("cluster_id"))
       .stage()
     // Cluster-size SKEW, recorded per call (drained into bench routing /
@@ -2229,20 +2223,19 @@ object Dedup {
                                splitId: Long): DataFrame = {
     val all = Tables.embeddings(spark, dir)
       .select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+        col("embedding").cast("array<double>").as("v"))
     val tag = s"lt${splitId}_k${k}_i$iterations"
-    val centroids = graft.tools.ArtifactCache.parquet(spark, dir,
-      s"semdedup_centroids_$tag") { p =>
-      KMeans.saveIndex(KMeans.fit(spark,
+    val quantizer = KMeans.frozen(spark, dir, s"semdedup_centroids_$tag") {
+      KMeans.fit(spark,
         Tables.embeddings(spark, dir).filter(col("vec_id") < splitId),
-        k, iterations), p)
+        k, iterations)
     }
     // slim history artifacts: assignment carries NO vector payload (the
     // corpus table re-supplies v by equi-join — the store stays
     // O(16 B/row) however wide the embeddings are)
     val histAssigned = graft.tools.ArtifactCache.parquet(spark, dir,
       s"semdedup_assign_$tag") { p =>
-      KMeans.assign(all.filter(col("vec_id") < splitId), centroids)
+      KMeans.assign(all.filter(col("vec_id") < splitId), quantizer)
         .select(col("vec_id"), col("cluster_id"))
         .write.mode("overwrite").parquet(p)
     }
@@ -2256,7 +2249,7 @@ object Dedup {
         .write.mode("overwrite").parquet(p)
     }
     val deltaAssigned = KMeans.assign(
-      all.filter(col("vec_id") >= splitId), centroids)
+      all.filter(col("vec_id") >= splitId), quantizer)
       .select(col("cluster_id"), col("vec_id"), col("v"))
       .stage()
     val deltaDups = semanticDupIds(
@@ -2323,7 +2316,7 @@ object Dedup {
       .limit(1).collect().nonEmpty
     if (drifted) {
       val all = embs.select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+        col("embedding").cast("array<double>").as("v"))
       val centroids = KMeans.fit(spark, embs, kRefresh, iterations)
       val assigned = KMeans.assign(all, centroids)
         .select(col("cluster_id"), col("vec_id"), col("v"))
@@ -2437,7 +2430,7 @@ object Dedup {
     graft.tools.RangeState.requireNoFuture(memberRoot, batchId)
     val t0 = System.nanoTime()
     val arriving = batch.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      col("embedding").cast("array<double>").as("v"))
       .stage()
     val cpath = s"$statePath/centroids"
     if (batchId == 0L)

@@ -183,6 +183,15 @@ object EtlPipeline {
       .orderBy(col("direccion"), col("localidad"), col("rubro"), col("localizar"))
   }
 
+  /** One JVM-lifetime scratch root for the round trips' page dirs,
+    * created on first use and deleted at JVM exit: the returned frames
+    * read their pages lazily, so a call cannot delete its own dir. */
+  private lazy val pagesRoot =
+    java.nio.file.Paths.get(graft.tools.TempDirs.createFastForJvm("graft-etl-pages"))
+
+  private def pagesDirFor(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(pagesRoot, prefix).toString
+
   /** DSv2 source round-trip, oracle-checked: materialize "scraped pages"
     * from customer ⋈ nation as TSV page files (distributed CSV write, one
     * header per page file — exactly the paged-table shape), then scan them
@@ -203,7 +212,7 @@ object EtlPipeline {
             lit(-34.0) - (col("c_custkey") % 100) / 100.0,
             lit(-58.0) - (col("c_custkey") % 100) / 100.0))
           .otherwise(lit("sin datos")).as("localizar"))
-    val pagesDir = java.nio.file.Files.createTempDirectory("graft-pages").toString
+    val pagesDir = pagesDirFor("graft-pages")
     // the DSv2 WRITE path: tasks stage pages, the driver commit renames
     // them into the visible layout + `_count` sidecar — so the sink's
     // two-phase commit protocol sits inside the hash gate along with the
@@ -241,7 +250,7 @@ object EtlPipeline {
             lit(-34.0) - (col("c_custkey") % 100) / 100.0,
             lit(-58.0) - (col("c_custkey") % 100) / 100.0))
           .otherwise(lit("sin datos")).as("localizar"))
-    val pagesDir = java.nio.file.Files.createTempDirectory("graft-hpages").toString
+    val pagesDir = pagesDirFor("graft-hpages")
     raw.repartition(4).write.mode("overwrite")
       .format("graft.sources.PagedTableSource")
       .option("path", pagesDir)

@@ -221,7 +221,7 @@ object Graph {
     * is HUGEINT, so the per-step contribution sum is cast back (parity
     * rule). */
   private val graphBaseSql: String = {
-    val tokensSql = "list_filter(string_split(text, ' '), t -> t <> '')"
+    val tokensSql = graft.functions.TextKernels.tokensSql
     s"""toks AS (
        |  SELECT lang, source, n_chars // 100 AS len_bucket, doc_id,
        |         list_distinct($tokensSql) AS toks
@@ -348,7 +348,7 @@ object Graph {
   /** DuckDB twin: the same canonical pair set (CTE text shared with the
     * pagerank oracle) closed with the same two joins. */
   val trianglesSql: String = {
-    val tokensSql = "list_filter(string_split(text, ' '), t -> t <> '')"
+    val tokensSql = graft.functions.TextKernels.tokensSql
     s"""WITH toks AS (
        |  SELECT lang, source, n_chars // 100 AS len_bucket, doc_id,
        |         list_distinct($tokensSql) AS toks

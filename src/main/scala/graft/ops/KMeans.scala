@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.VectorKernels
+import graft.tools.ArtifactCache
 import graft.tools.Stage._
 
 /** Distributed k-means over the embedding corpus — the coarse quantizer a
@@ -27,15 +28,6 @@ import graft.tools.Stage._
   * hash-deterministic — no RNG, so retries and re-runs are safe.
   */
 object KMeans {
-
-  /** Cosine between two driver-side vectors (candidate bookkeeping). */
-  private def cosLocal(a: Array[Double], b: Array[Double]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
 
   private def asMatrix(rows: Seq[Seq[Double]]): Array[Array[Double]] =
     rows.map(_.toArray).toArray
@@ -102,7 +94,7 @@ object KMeans {
   private[graft] def pickK(cands: Vector[Seq[Double]], weights: Array[Long],
                            k: Int): Vector[Seq[Double]] = {
     def distTo(a: Array[Double], b: Array[Double]): Double = {
-      val c = cosLocal(a, b)
+      val c = VectorKernels.cosine(a, b)
       if (c.isNaN) 0.0 else math.max(1.0 - c, 0.0)
     }
     // one up-front conversion to primitive arrays: the inner loops below
@@ -153,7 +145,7 @@ object KMeans {
     // no direction in cosine space (every cosine NaN) and would poison the
     // init sampling — filtered out of the training corpus up front.
     val vecs = corpus.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      col("embedding").cast("array<double>").as("v"))
       .filter(VectorKernels.normSqUdf(col("v")) > lit(0.0))
       .stage()
 
@@ -201,20 +193,65 @@ object KMeans {
   def loadIndex(spark: SparkSession, path: String): DataFrame =
     Tables.parquet(spark, path)
 
-  /** Nearest-centroid assignment: collect the ≤k centroid rows once, then
-    * a single map-side kernel pass — no join, no window, no shuffle.
+  /** A trained coarse quantizer held driver-side: cell ids in ascending
+    * order and, row for row, their `dim`-wide centroids. Assignment
+    * ([[assign]]) and IVF probe ranking ([[VectorKernels.probeCellsUdf]])
+    * close over it, so both run map-side with no join against a
+    * centroid frame and no collect of their own.
+    *
+    * A value from [[frozen]] is SHARED for the JVM lifetime (the
+    * [[graft.tools.ArtifactCache.memo]] contract): never mutate `ids` or
+    * a centroid row in place. */
+  final case class Quantizer(ids: Array[Int], centroids: Array[Array[Double]])
+
+  object Quantizer {
+    /** Collect a (cluster_id, centroid) frame: one collect, sorted by
+      * cluster_id on the driver — the frame is k rows, so a distributed
+      * sort would only add its sample and shuffle jobs. */
+    def of(centroids: DataFrame): Quantizer = {
+      val rows = centroids.select(col("cluster_id"), col("centroid"))
+        .collect().sortBy(_.getInt(0))
+      Quantizer(rows.map(_.getInt(0)), rows.map(_.getSeq[Double](1).toArray))
+    }
+  }
+
+  /** The frozen quantizer of a persisted index: the (key, kind) artifact
+    * from [[graft.tools.ArtifactCache.parquet]] (trained by `train` and
+    * saved through [[saveIndex]] on first use), collected once per JVM.
+    *
+    * This is the trained-artifact side of the caching line: the memo
+    * holds the driver-side copy of an index that is already persisted
+    * and never changes under its key, so re-collecting it per call only
+    * bought the sort and collect jobs back. It is keyed exactly like the
+    * parquet artifact — the same `key` directory (folded with its
+    * `pathToken`, so a corpus rewritten in place re-trains and
+    * re-collects) and a `kind` that must name every training parameter
+    * (cells, iterations, split) — so different parameters never share a
+    * matrix. Freshly fitted centroids (refresh retrains, stream state)
+    * do not come through here: they go through [[Quantizer.of]] on
+    * every call. */
+  def frozen(spark: SparkSession, key: String, kind: String)
+            (train: => DataFrame): Quantizer =
+    ArtifactCache.memo(key, s"$kind.quantizer") {
+      Quantizer.of(ArtifactCache.parquet(spark, key, kind)(saveIndex(train, _)))
+    }
+
+  /** Nearest-centroid assignment: a single map-side kernel pass over the
+    * quantizer's matrix — no join, no window, no shuffle.
     * Output: (vec_id, v, cluster_id, sim). */
-  def assign(vecs: DataFrame, centroids: DataFrame): DataFrame = {
-    val rows = centroids.orderBy(col("cluster_id"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
-    val ids = rows.map(_._1)
-    val nc = VectorKernels.nearestUdf(rows.map(_._2.toArray))(col("v"))
+  def assign(vecs: DataFrame, q: Quantizer): DataFrame = {
+    val nc = VectorKernels.nearestUdf(q.centroids)(col("v"))
     vecs
       .withColumn("nc", nc)
       .select(col("vec_id"), col("v"),
-        element_at(typedLit(ids), col("nc").getField("_1") + 1).as("cluster_id"),
+        element_at(typedLit(q.ids), col("nc").getField("_1") + 1).as("cluster_id"),
         col("nc").getField("_2").as("sim"))
   }
+
+  /** [[assign]] over a freshly fitted or loaded centroid frame, collected
+    * once for this call. */
+  def assign(vecs: DataFrame, centroids: DataFrame): DataFrame =
+    assign(vecs, Quantizer.of(centroids))
 
   /** Query surface: cluster sizes + intra-cluster mean similarity after a
     * short training run — deterministic but hash-family-specific
@@ -224,7 +261,7 @@ object KMeans {
     val corpus = Tables.embeddings(spark, dir)
     val centroids = fit(spark, corpus, k, iterations)
     val vecs = corpus.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      col("embedding").cast("array<double>").as("v"))
     assign(vecs, centroids)
       .groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n_members"),
@@ -253,7 +290,7 @@ object KMeans {
     val corpus = Tables.embeddings(spark, cdir)
     val centroids = fit(spark, corpus, k = 10, iterations = 2)
     val vecs = corpus.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      col("embedding").cast("array<double>").as("v"))
     val sizes = assign(vecs, centroids)
       .groupBy(col("cluster_id")).agg(count(lit(1)).as("n_members"))
     centroids.join(sizes, Seq("cluster_id"))

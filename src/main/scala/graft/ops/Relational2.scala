@@ -1139,7 +1139,7 @@ object Relational2 {
   def q56Posexplode(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        posexplode(expr("slice(filter(split(text, ' '), t -> t != ''), 1, 5)"))
+        posexplode(slice(graft.functions.TextKernels.tokens(col("text")), 1, 5))
           .as(Seq("pos", "tok")))
       .orderBy(col("doc_id"), col("pos"))
 

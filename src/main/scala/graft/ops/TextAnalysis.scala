@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.TextKernels.{tokens, tokensSql}
 import graft.tools.{LogState, StateCache}
 import graft.tools.Stage._
 
@@ -18,14 +19,6 @@ import graft.tools.Stage._
   * O(distinct tokens), not O(rows).
   */
 object TextAnalysis {
-
-  /** Whitespace tokens, empty strings dropped (Spark split is regex-based
-    * and can emit empties on repeated separators). */
-  private def tokens(c: Column): Column =
-    filter(split(c, " "), t => t =!= lit(""))
-
-  private val tokensSql =
-    "list_filter(string_split(text, ' '), t -> t <> '')"
 
   // ---------------------------------------------------------------------
 
@@ -303,7 +296,7 @@ object TextAnalysis {
   def repRatio(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.documents(spark, dir)
       .select(col("doc_id"),
-        filter(split(col("text"), " "), t => t =!= lit("")).as("toks"))
+        tokens(col("text")).as("toks"))
       .withColumn("n", size(col("toks")))
       .filter(col("n") >= 3)
       .withColumn("grams", expr(
@@ -565,7 +558,7 @@ object TextAnalysis {
       lit("it also works well today!"))
     val keepLine = (l: Column) =>
       substring(l, -1, 1).isin(".", "!", "?", "\"") &&
-        size(filter(split(l, " "), w => w =!= lit(""))) >= 3 &&
+        size(tokens(l)) >= 3 &&
         !l.contains("javascript")
     Tables.documents(spark, dir)
       .select(col("doc_id"),
@@ -1589,7 +1582,7 @@ object TextAnalysis {
       .withColumn("clean", trim(regexp_replace(
         regexp_replace(col("text"), "<[^>]*>", " "), "\\s+", " ")))
       .withColumn("n_tokens",
-        size(filter(split(col("clean"), " "), t => t =!= lit(""))))
+        size(tokens(col("clean"))))
       .filter(col("n_tokens") >= 30)
     val keep = cleaned.groupBy(col("clean"))
       .agg(min(col("doc_id")).as("doc_id"))

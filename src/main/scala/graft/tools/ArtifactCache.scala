@@ -13,8 +13,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * invalidates the old artifacts instead of silently serving state built
   * from the previous contents (ADVICE r18). */
 object ArtifactCache {
-  private lazy val root =
-    java.nio.file.Files.createTempDirectory("graft-artifacts").toString
+  // on the default temp dir, not tmpfs: artifacts can be large; deleted
+  // at JVM exit, since no artifact is read across runs
+  private lazy val root = {
+    val d = java.nio.file.Files.createTempDirectory("graft-artifacts").toString
+    Runtime.getRuntime.addShutdownHook(
+      new Thread(() => TempDirs.deleteRecursively(d), "graft-clean-artifacts"))
+    d
+  }
   private val paths =
     scala.collection.concurrent.TrieMap[(String, String), String]()
 

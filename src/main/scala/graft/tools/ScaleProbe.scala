@@ -35,8 +35,7 @@ object ScaleProbe {
     val bdir = s"$outDir/bpe_docs"
     if (!new java.io.File(s"$bdir/documents.parquet/_SUCCESS").exists()) {
       graft.Tables.parquet(spark, s"$outDir/documents.parquet")
-        .withColumn("toks",
-          expr("filter(split(text, ' '), t -> t != '')"))
+        .withColumn("toks", graft.functions.TextKernels.tokens(col("text")))
         .filter(expr("size(toks) >= 2"))
         .select(col("doc_id"),
           expr("array_join(transform(sequence(1, size(toks) - 1)," +

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -112,6 +114,21 @@ class EtlPipelineSpec extends SparkSpec {
     df.write.mode("append").jdbc(url, "orders_sink", new java.util.Properties)
     assert(spark.read.jdbc(url, "orders_sink", new java.util.Properties).count()
       == 2 * df.count())
+  }
+
+  test("the source round trips leave no page dir in java.io.tmpdir") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def pageDirs(): Set[String] = {
+      val names = java.nio.file.Files.list(tmp)
+      try names.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("graft-pages") || n.startsWith("graft-hpages"))
+        .toSet
+      finally names.close()
+    }
+    val before = pageDirs()
+    for (_ <- 1 to 2; q <- Seq("etl_source_scan", "etl_source_scan_html"))
+      assert(SparkEntry.queries(q)(spark, sf).count() > 0)
+    assert(pageDirs() -- before == Set.empty)
   }
 
   test("smoke check: SparkEntry.entry returns rows") {

@@ -256,4 +256,14 @@ class PlanRegressionSpec extends SparkSpec {
     assert(!p.contains("ExistingRDD"),
       s"beam staging reappeared in the hnsw search plan:\n${p.take(2000)}")
   }
+
+  test("ivf probe ranks cells map-side: no nested-loop join, one window " +
+      "(rankTail's)") {
+    val p = plan("sim_topk_ivf")
+    assert(!p.contains("BroadcastNestedLoopJoin"),
+      s"the queries × centroids cross join is back:\n${p.take(2000)}")
+    val windows = "\\bWindow \\[".r.findAllIn(p).size
+    assert(windows == 1, s"expected only rankTail's window, found $windows:\n" +
+      p.take(2000))
+  }
 }

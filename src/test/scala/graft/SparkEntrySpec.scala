@@ -119,4 +119,28 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(copies == 1, s"the 16-bit band expression appears $copies " +
       s"times under src/main — band through Dedup.hammingBandRows")
   }
+
+  /** Occurrences of `literal` summed over every file under `src/main`. */
+  private def mainCount(literal: String): Int = {
+    val walk = Files.walk(Paths.get("src/main"))
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => Regex.quote(literal).r.findAllIn(Files.readString(p)).size)
+      .sum
+    finally walk.close()
+  }
+
+  test("grep invariant: no interpreted per-element double widening") {
+    val copies = mainCount("x -> CAST(x AS DOUBLE)")
+    assert(copies == 0, s"a transform(..., x -> CAST(x AS DOUBLE)) lambda " +
+      s"appears $copies times under src/main — widen with " +
+      ".cast(\"array<double>\")")
+  }
+
+  test("grep invariant: the column tokenizer has one definition") {
+    assert(mainCount("array_remove(split(") == 1,
+      "the whitespace tokenizer must be defined once (TextKernels.tokens)")
+    assert(mainCount("filter(split(") == 0,
+      "an interpreted filter-lambda tokenizer copy is back — use " +
+        "TextKernels.tokens")
+  }
 }
