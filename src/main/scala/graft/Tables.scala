@@ -79,12 +79,18 @@ object Tables {
     if (!local || tokens.contains("absent")) None
     else {
       val md = java.security.MessageDigest.getInstance("MD5")
-      spark.conf.getAll.filter(kv => inferenceConf(kv._1)).toSeq.sorted
-        .foreach { case (k, v) => md.update(s"$k=$v\n".getBytes("UTF-8")) }
+      md.update(inferenceConfs(spark).getBytes("UTF-8"))
       paths.zip(tokens).foreach { case (p, t) => md.update(s"$p@$t\n".getBytes("UTF-8")) }
       Some(md.digest().map("%02x".format(_)).mkString)
     }
   }
+
+  /** The session's parquet schema-inference confs, one `k=v` line each —
+    * part of every cached schema's key (here and in
+    * [[graft.tools.LogState.read]]). */
+  private[graft] def inferenceConfs(spark: SparkSession): String =
+    spark.conf.getAll.filter(kv => inferenceConf(kv._1)).toSeq.sorted
+      .map { case (k, v) => s"$k=$v\n" }.mkString
 
   /** Round-robin rebalance to the session's full parallelism. The fixture
     * files are single-row-group parquet — one input split — so any heavy

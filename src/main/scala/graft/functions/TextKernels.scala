@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.api.java.{UDF1, UDF3, UDF4}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.{array_remove, lit, split, udf}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.Platform
 
 /** Compiled per-row kernels for the hashing-heavy dedup operators.
@@ -162,6 +164,126 @@ object TextKernels {
     }
   }
 
+  /** Exact shingle Jaccard of two texts — the near-dup verify in one
+    * compiled call per candidate pair: `jaccardDistinct(shingles(a, n),
+    * shingles(b, n))`, so the ratio is bit-identical to verifying two
+    * shingle-array columns, but no shingle array is ever a column (none
+    * is built for a document outside a candidate pair, none crosses an
+    * exchange). Null when neither text has a shingle. */
+  def shingleJaccard(a: String, b: String, n: Int): java.lang.Double =
+    jaccardDistinct(shingles(a, n), shingles(b, n))
+
+  /** LSH band keys of a signature: key b is exactly Spark's `xxhash64`
+    * over elements [b·r, (b+1)·r) of the signature, r = |sig| / bands — XXH64
+    * `hashLong` chained over the band's members from seed 42 — so band
+    * indexes and stream states persisted by the expression form stay
+    * valid. One pass over the signature, where the expression form
+    * builds a sliced array per band and compiles each of them into the
+    * generated class. A null signature (no shingles) has no bands. */
+  def bandKeys(sig: Array[Long], bands: Int): Array[Long] =
+    if (sig == null) null
+    else {
+      val rows = sig.length / bands
+      val out = new Array[Long](bands)
+      var b = 0
+      while (b < bands) {
+        var h = Seed
+        var i = b * rows
+        while (i < (b + 1) * rows) { h = hashLong(sig(i), h); i += 1 }
+        out(b) = h
+        b += 1
+      }
+      out
+    }
+
+  /** Candidate pairs of one LSH bucket: every (a, b) of its ids with
+    * a < b — the rule of a band-key self-join filtered on `a_id < b_id`,
+    * without the join. Repeated ids pair with nothing (a < b is strict). */
+  def bucketPairs(ids: Array[Long]): Array[(Long, Long)] = {
+    val s = ids.clone()
+    java.util.Arrays.sort(s)
+    val out = Array.newBuilder[(Long, Long)]
+    var i = 0
+    while (i < s.length) {
+      var j = i + 1
+      while (j < s.length) { if (s(i) < s(j)) out += ((s(i), s(j))); j += 1 }
+      i += 1
+    }
+    out.result()
+  }
+
+  /** Per-document term frequencies: each distinct token of [[tokens]]
+    * once, with its occurrence count. One hash-map pass per document,
+    * where explode + groupBy(doc, token) shuffles every occurrence. */
+  def termFreqs(text: String): Array[(String, Long)] = {
+    val counts = new java.util.HashMap[String, Array[Long]]()
+    val toks = tokenize(text)
+    var i = 0
+    while (i < toks.length) {
+      val c = counts.get(toks(i))
+      if (c == null) counts.put(toks(i), Array(1L)) else c(0) += 1
+      i += 1
+    }
+    val out = new Array[(String, Long)](counts.size)
+    var k = 0
+    val it = counts.entrySet().iterator()
+    while (it.hasNext) { val e = it.next(); out(k) = (e.getKey, e.getValue()(0)); k += 1 }
+    out
+  }
+
+  // The UDFs of the lean minhash and tf-idf plans use Spark's Java UDF
+  // form with an explicit result type: values convert through Catalyst's
+  // type converters, where a typed Scala UDF over a string or array
+  // builds an encoder (de)serializer — one more generated class per
+  // argument and result type, in a workload whose generated classes
+  // already fill Spark's code cache (BASELINE.md).
+
+  /** `array<struct<token, tf>>`, both fields and the elements non-null —
+    * the types `tokens` + `count` give. */
+  val TermFreqType: ArrayType = ArrayType(StructType(Seq(
+    StructField("token", StringType, nullable = false),
+    StructField("tf", LongType, nullable = false))), containsNull = false)
+
+  /** text → [[termFreqs]]. */
+  val termFreqUdf: UserDefinedFunction =
+    udf(new UDF1[String, Array[(String, Long)]] {
+      def call(text: String): Array[(String, Long)] = termFreqs(text)
+    }, TermFreqType)
+
+  /** (a, b, n) → [[shingleJaccard]]. */
+  val shingleJaccardUdf: UserDefinedFunction =
+    udf(new UDF3[String, String, Integer, java.lang.Double] {
+      def call(a: String, b: String, n: Integer): java.lang.Double = shingleJaccard(a, b, n)
+    }, DoubleType)
+
+  /** Band keys: `array<bigint>`, non-null elements, one per band. */
+  private val BandKeysType = ArrayType(LongType, containsNull = false)
+
+  /** (text, n, numHashes, bands) → the band keys of the text's
+    * [[minhashSignature]] ([[bandKeys]]); null when it has no shingles. */
+  val minhashBandsUdf: UserDefinedFunction =
+    udf(new UDF4[String, Integer, Integer, Integer, Array[Long]] {
+      def call(text: String, n: Integer, numHashes: Integer, bands: Integer): Array[Long] =
+        bandKeys(minhashSignature(text, n, numHashes), bands)
+    }, BandKeysType)
+
+  /** (tokens, numHashes, bands) → the band keys of the token set's
+    * [[minhashTokens]] signature ([[bandKeys]]); null when it is empty. */
+  val tokenBandsUdf: UserDefinedFunction =
+    udf(new UDF3[scala.collection.Seq[String], Integer, Integer, Array[Long]] {
+      def call(toks: scala.collection.Seq[String], numHashes: Integer,
+               bands: Integer): Array[Long] =
+        bandKeys(minhashTokens(if (toks == null) null else toks.toArray, numHashes), bands)
+    }, BandKeysType)
+
+  /** ids → [[bucketPairs]] as `array<struct<a_id, b_id>>`. */
+  val bucketPairsUdf: UserDefinedFunction =
+    udf(new UDF1[scala.collection.Seq[Long], Array[(Long, Long)]] {
+      def call(ids: scala.collection.Seq[Long]): Array[(Long, Long)] = bucketPairs(ids.toArray)
+    }, ArrayType(StructType(Seq(
+      StructField("a_id", LongType, nullable = false),
+      StructField("b_id", LongType, nullable = false)))))
+
   val shingleUdf: UserDefinedFunction =
     udf((text: String, n: Int) => shingles(text, n))
 
@@ -169,13 +291,6 @@ object TextKernels {
     udf((a: Seq[String], b: Seq[String]) => jaccardDistinct(
       if (a == null) null else a.toArray,
       if (b == null) null else b.toArray))
-
-  val minhashTokensUdf: UserDefinedFunction =
-    udf((toks: Seq[String], numHashes: Int) =>
-      minhashTokens(if (toks == null) null else toks.toArray, numHashes))
-
-  val minhashUdf: UserDefinedFunction =
-    udf((text: String, n: Int, numHashes: Int) => minhashSignature(text, n, numHashes))
 
   val simhashUdf: UserDefinedFunction =
     udf((text: String) => simhash64(text))

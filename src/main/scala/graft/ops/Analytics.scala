@@ -303,7 +303,7 @@ object Analytics {
     else {
       pinCmsGeometry(statePath, d, w) // reject a (d,w) mismatch up front
       val sk = new Array[Long](d * w)
-      Tables.parquet(sp, paths: _*)
+      graft.tools.LogState.read(sp, s"$statePath/cells", paths)
         .groupBy(col("idx")).agg(sum(col("n")).as("n"))
         .collect().foreach { r =>
           val idx = r.getInt(0)

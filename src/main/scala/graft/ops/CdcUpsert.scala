@@ -256,7 +256,7 @@ object CdcUpsert {
         touchedBuckets, epoch - 1)
       val prior =
         if (priorPaths.isEmpty) None
-        else Some(fold(graft.Tables.parquet(sp, priorPaths: _*))
+        else Some(fold(graft.tools.LogState.read(sp, statePath, priorPaths))
           .join(d.select(col("user_id")), Seq("user_id"), "left_semi")
           .stage())
       val newV = prior.map(p => fold(d.unionByName(p))).getOrElse(d)
@@ -465,10 +465,10 @@ object CdcUpsert {
         .map(v => graft.Tables.parquet(sp, s"$statePath/v$v"))
     case _: Mor =>
       val paths = graft.tools.LogState.pathsAsOf(statePath, upTo)
-      if (paths.isEmpty) None else Some(fold(graft.Tables.parquet(sp, paths: _*)))
+      if (paths.isEmpty) None else Some(fold(graft.tools.LogState.read(sp, statePath, paths)))
     case _: Partitioned =>
       val paths = graft.tools.RangeState.pathsAsOf(statePath, upTo)
-      if (paths.isEmpty) None else Some(fold(graft.Tables.parquet(sp, paths: _*)))
+      if (paths.isEmpty) None else Some(fold(graft.tools.LogState.read(sp, statePath, paths)))
     case Indexed(inner, _) => stateAsOf(sp, statePath, upTo, inner)
   }
 
@@ -501,7 +501,7 @@ object CdcUpsert {
       val paths = graft.tools.RangeState.partDirs(statePath)
         .map(p => s"$p/delta/v$epoch")
         .filter(p => new java.io.File(p).isDirectory)
-      if (paths.isEmpty) None else Some(graft.Tables.parquet(sp, paths: _*))
+      if (paths.isEmpty) None else Some(graft.tools.LogState.read(sp, statePath, paths))
     case Indexed(inner, _) => writtenFrameAt(sp, statePath, epoch, inner)
   }
 
@@ -524,7 +524,7 @@ object CdcUpsert {
         _.split('/').find(_.startsWith("p="))).distinct.size.toLong
       val df =
         if (paths.isEmpty) None
-        else Some(fold(graft.Tables.parquet(sp, paths: _*))
+        else Some(fold(graft.tools.LogState.read(sp, statePath, paths))
           .filter(col("user_id") === key))
       (df, parts)
     case Indexed(inner, _) => keyLookup(sp, statePath, key, inner)
@@ -549,7 +549,7 @@ object CdcUpsert {
       .distinct.size.toLong
     val df =
       if (paths.isEmpty) None
-      else Some(indexFold(graft.Tables.parquet(sp, paths: _*))
+      else Some(indexFold(graft.tools.LogState.read(sp, s"$statePath/index", paths))
         .filter(col("v") === lit(value) && !col("del"))
         .select(col("user_id")))
     (df, parts)

@@ -183,7 +183,7 @@ object Corpus {
     val hist =
       if (histPaths.isEmpty)
         d.select(col("source"), lit(0L).as("n")).limit(0)
-      else Tables.parquet(sp, histPaths: _*)
+      else graft.tools.LogState.read(sp, s"$statePath/srctot", histPaths)
     val histTot = hist.groupBy(col("source")).agg(sum(col("n")).as("h"))
     val res = finish(local
         .join(broadcast(histTot), Seq("source"), "left_outer")

@@ -218,7 +218,6 @@ object Dedup {
 
   val NumHashes = 64
   val Bands     = 16  // 16 bands × 4 rows: catches Jaccard ≳ 0.5 w.h.p.
-  val RowsPerBand = NumHashes / Bands
   /** LSH band-bucket skew cap (see minhash Scaladoc: drop, don't salt —
     * a bucket this big means the band carries no selectivity). */
   val MinhashMaxBucket = 200
@@ -236,47 +235,65 @@ object Dedup {
     * gates exist to catch. */
   val ClusteredCorpusDocs = 140
 
-  /** documents → (doc_id, shingles) — the verification-side lookup.
-    * Compiled kernel (see TextKernels): the HOF-lambda equivalent is
-    * CodegenFallback-interpreted and ~100× slower per row. */
+  /** documents → (doc_id, shingles) — the verification-side lookup of
+    * the incremental and streaming refresh paths. Compiled kernel (see
+    * TextKernels): the HOF-lambda equivalent is CodegenFallback-
+    * interpreted and ~100× slower per row. */
   private def shingleSetsOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
         graft.functions.TextKernels.shingleUdf(col("text"), lit(ShingleN)).as("shingles"))
       .filter(size(col("shingles")) > 0)
 
-  /** documents → (doc_id, sig: array[64 minhash longs]), one compiled pass
-    * per document (each shingle string hashes once; the 64 family members
-    * re-hash that fixed-width long). */
-  private def signaturesOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-        graft.functions.TextKernels
-          .minhashUdf(col("text"), lit(ShingleN), lit(NumHashes)).as("sig"))
-      .filter(col("sig").isNotNull)
+  /** LSH band rows of `frame`, keyed by `keys`: one row per band of the
+    * `bandKeys` column (band = its position, band_sig = the key, from
+    * [[graft.functions.TextKernels.bandKeys]], equal to the `xxhash64` of
+    * the band's slice of the signature), none where it is null (no
+    * shingles or tokens). The one banding of the minhash family: 16×4
+    * for the shingle op, 8×8 for ngram-Jaccard's escape path. */
+  private def lshBands(frame: DataFrame, keys: Seq[Column], bandKeys: Column): DataFrame =
+    frame.select(keys :+ posexplode(bandKeys).as(Seq("band", "band_sig")): _*)
 
-  /** (doc_id, sig) → the slim LSH band INDEX rows (doc_id, band,
-    * band_sig): 16 rows per doc, ~24 B each — the shape the band shuffle
-    * carries, and the shape the persisted incremental index stores. */
-  private[graft] def bandRows(sigs: DataFrame): DataFrame = {
-    val bandStructs = (0 until Bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(expr(s"slice(sig, ${b * RowsPerBand + 1}, $RowsPerBand)"))
-          .as("band_sig"))
-    }
-    sigs.select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
-      .select(col("doc_id"),
-        col("bs.band").as("band"), col("bs.band_sig").as("band_sig"))
-  }
+  /** documents (doc_id, text) → the slim LSH band INDEX rows (doc_id,
+    * band, band_sig): 16 rows per doc, ~24 B each — the shape the band
+    * shuffle carries, and the shape the persisted incremental index
+    * stores. One compiled call per document signs its shingles (each
+    * shingle string hashes once; the 64 family members re-hash that
+    * fixed-width long) and bands the signature; the signature itself is
+    * never a column. */
+  private[graft] def bandRows(docs: DataFrame): DataFrame =
+    lshBands(docs, Seq(col("doc_id")), graft.functions.TextKernels.minhashBandsUdf(
+      col("text"), lit(ShingleN), lit(NumHashes), lit(Bands)))
+
+  /** Distinct candidate pairs (a_id < b_id) of band rows (doc_id, band,
+    * band_sig): one aggregation per bucket, dropping a bucket of more
+    * than `maxBucket` rows, then the compiled pair kernel and one
+    * distinct — the pairs of a band-key self-join filtered on
+    * `a_id < b_id`, without the self-join. */
+  private[graft] def bucketCandidates(bands: DataFrame, maxBucket: Int): DataFrame =
+    bands.groupBy(col("band"), col("band_sig"))
+      .agg(count(lit(1)).as("bucket_n"), collect_list(col("doc_id")).as("ids"))
+      .filter(col("bucket_n") <= maxBucket && size(col("ids")) >= 2)
+      .select(explode(graft.functions.TextKernels.bucketPairsUdf(col("ids"))).as("p"))
+      .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"))
+      // never false: spelled out so that a join on the pair columns
+      // infers nothing new, and every consumer of the pairs shares one
+      // plan below the distinct (and so one exchange)
+      .filter(col("a_id").isNotNull && col("b_id").isNotNull)
+      .distinct()
 
   /** MinHash-LSH near-dup candidate pairs, exact-Jaccard verified.
     *
     * Plan shape (the 100 TB path):
-    *  1. signature: narrow, per-row, codegen — no shuffle;
-    *  2. band explode: 16 rows/doc keyed by (band, band_sig) — shuffle is
-    *     16× doc *keys*, not content;
-    *  3. bucket self-join on the band key (equi-join ⇒ shuffle hash join,
-    *     never a cross join) with `a.doc_id < b.doc_id` dedup;
-    *  4. distinct candidate pairs → exact Jaccard over shingle sets →
-    *     threshold filter.
+    *  1. signature and band keys: narrow, per-row, compiled kernels — no
+    *     shuffle;
+    *  2. one aggregation on the band key (band, band_sig) collects each
+    *     bucket's doc ids — the shuffle is 16× doc *keys*, not content;
+    *  3. a compiled kernel emits each bucket's `a_id < b_id` pairs, then
+    *     one distinct — the self-join rule without the self-join;
+    *  4. exact Jaccard for candidate pairs only: the candidate ids
+    *     broadcast into a semi-join on the documents, so only candidate
+    *     docs' text reaches the verify, and one kernel call per pair
+    *     shingles both texts and compares them.
     * Skew guard: buckets larger than `maxBucket` are dropped (a degenerate
     * band value would otherwise quadratically explode one reducer — the
     * standard LSH salt-or-drop tradeoff, here: drop, since a bucket that
@@ -285,51 +302,39 @@ object Dedup {
               jaccardThreshold: Double = 0.5,
               maxBucket: Int = MinhashMaxBucket,
               sorted: Boolean = true): DataFrame =
-    minhashOf(Tables.rebalanced(Tables.documents(spark, dir)),
-      jaccardThreshold, maxBucket, sorted)
+    minhashOf(Tables.documents(spark, dir), jaccardThreshold, maxBucket, sorted)
 
   /** minhash over an injectable documents frame (doc_id, text, …) — the
-    * incremental and streaming paths run it over corpus slices. */
+    * incremental and streaming paths run it over corpus slices. The
+    * signature pass reads a rebalanced copy (full parallelism for the
+    * heavy per-doc kernel); the verify reads `docs` as given, so the
+    * candidate semi-join filters the scan before any text moves.
+    *
+    * Building the frame runs no Spark job: the band rows have one
+    * consumer, the bucket aggregation, so nothing is staged. The
+    * aggregation keeps the window's cap rule (a bucket's row count, not
+    * its distinct ids, against `maxBucket`) and its hash partitioning on
+    * the band key, so the pair fan-out runs at the window's parallelism. */
   private[graft] def minhashOf(docs: DataFrame,
                                jaccardThreshold: Double,
                                maxBucket: Int,
                                sorted: Boolean): DataFrame = {
-    val sigs = signaturesOf(docs)
-    // Banding runs on a SLIM frame (doc_id + 16 band keys): the wide
-    // shingle arrays must not ride through the band shuffle — they rejoin
-    // only for the (few) surviving candidate pairs below. The slim frame
-    // is materialized once because the bucket filter and both self-join
-    // sides consume it (without it Spark recomputes the signatures per
-    // branch). LAZY localCheckpoint, not persist(): a persist here pins
-    // the frame in the CacheManager until an unpersist that no lazy
-    // caller can ever place (the leak accumulates a band-frame copy per
-    // call in long-lived sessions); checkpoint blocks are reclaimed by
-    // the ContextCleaner once the frame is unreachable, and laziness is
-    // preserved for plan-only callers (Probe plan).
-    val banded = bandRows(sigs)
-      .stageLazy()
-    val bucketed = banded
-      .withColumn("bucket_n", count(lit(1))
-        .over(org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("band_sig"))))
-      .filter(col("bucket_n") <= maxBucket)
-    val a = bucketed.select(col("band"), col("band_sig"), col("doc_id").as("a_id"))
-    val b = bucketed.select(col("band"), col("band_sig"), col("doc_id").as("b_id"))
-    val candidates = a.join(b, Seq("band", "band_sig"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"))
-      .dropDuplicates("a_id", "b_id")
-    // exact-verify: fetch shingle sets for candidates only
-    val sh = shingleSetsOf(docs)
+    val candidates =
+      bucketCandidates(bandRows(Tables.rebalanced(docs)), maxBucket)
+    // text for candidate docs only: the distinct candidate ids (≤ 8 B per
+    // document, never wider than the all-document shingle sets this
+    // verify used to join) broadcast into a semi-join, so the scan is
+    // filtered before any text moves
+    val texts = docs.select(col("doc_id"), col("text"))
+      .join(broadcast(candidates.select(explode(array(col("a_id"), col("b_id")))
+        .as("doc_id")).distinct()), Seq("doc_id"), "left_semi")
     val verified = candidates
-      .join(sh.select(col("doc_id").as("a_id"), col("shingles").as("a_sh")), Seq("a_id"))
-      .join(sh.select(col("doc_id").as("b_id"), col("shingles").as("b_sh")), Seq("b_id"))
-      // compiled jaccard kernel (shingle sets are nonempty, so the ratio
-      // is always defined): the interpreted array_intersect/array_union
-      // pair was the 100×-probe verify bottleneck
-      .withColumn("jaccard", graft.functions.TextKernels.jaccardUdf(
-        col("a_sh"), col("b_sh")))
+      .join(texts.select(col("doc_id").as("a_id"), col("text").as("a_text")), Seq("a_id"))
+      .join(texts.select(col("doc_id").as("b_id"), col("text").as("b_text")), Seq("b_id"))
+      .select(col("a_id"), col("b_id"),
+        graft.functions.TextKernels.shingleJaccardUdf(
+          col("a_text"), col("b_text"), lit(ShingleN)).as("jaccard"))
       .filter(col("jaccard") >= jaccardThreshold)
-      .select(col("a_id"), col("b_id"), col("jaccard"))
     // the global sort is dump-determinism only; artifact consumers skip
     // it — its RangePartitioner sampling pass re-runs the pair pipeline
     if (sorted) verified.orderBy(col("a_id"), col("b_id")) else verified
@@ -586,7 +591,7 @@ object Dedup {
     val newRows = hammingBandRows(fps).stage()
     val histPaths = graft.tools.LogState.pathsAsOf(indexRoot, batchId - 1)
     val hist =
-      if (histPaths.nonEmpty) Tables.parquet(sp, histPaths: _*)
+      if (histPaths.nonEmpty) LogState.read(sp, indexRoot, histPaths)
       else newRows.limit(0)
     val verified =
       deltaHammingPairs(hist, newRows, maxHamming, maxBucket).pairs
@@ -872,7 +877,7 @@ object Dedup {
     val keepers =
       if (winPaths.isEmpty) firstInBatch
       else firstInBatch.join(
-        Tables.parquet(sp, winPaths: _*).select(col("dig")),
+        LogState.read(sp, digRoot, winPaths).select(col("dig")),
         Seq("dig"), "left_anti")
     arr.select(col("dig")).write.mode("overwrite")
       .parquet(s"$digRoot/delta/v$batchId")
@@ -1083,16 +1088,6 @@ object Dedup {
     // pairs should raise MaxBlockExact (exact is then O(block²)) or
     // widen EscapeBands — sizing knobs, both deliberate.
     val EscapeBands = 8
-    val EscapeRows = NumHashes / EscapeBands
-    val sigs = big
-      .select(col("lang"), col("source"), col("len_bucket"), col("doc_id"),
-        graft.functions.TextKernels.minhashTokensUdf(col("toks"), lit(NumHashes)).as("sig"))
-      .filter(col("sig").isNotNull)
-    val bandStructs = (0 until EscapeBands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(expr(s"slice(sig, ${b * EscapeRows + 1}, $EscapeRows)"))
-          .as("band_sig"))
-    }
     val bandJoinKeys = blockKeys :+ "band" :+ "band_sig"
     // The explicit repartition pins the band self-join's parallelism:
     // the banded frame is SLIM (~24 B/row), so AQE's byte-based
@@ -1103,11 +1098,9 @@ object Dedup {
     // hash partitioning, so this adds no extra exchange.
     val fanoutParts = docs0.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt
-    val bandedAll0 = sigs
-      .select(col("lang"), col("source"), col("len_bucket"), col("doc_id"),
-        explode(array(bandStructs: _*)).as("bs"))
-      .select(col("lang"), col("source"), col("len_bucket"), col("doc_id"),
-        col("bs.band").as("band"), col("bs.band_sig").as("band_sig"))
+    val bandedAll0 = lshBands(big,
+        Seq(col("lang"), col("source"), col("len_bucket"), col("doc_id")),
+        graft.functions.TextKernels.tokenBandsUdf(col("toks"), lit(NumHashes), lit(EscapeBands)))
       .repartition(fanoutParts, bandJoinKeys.map(col): _*)
       .withColumn("bucket_n", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window
@@ -1347,12 +1340,12 @@ object Dedup {
     val newDocs = all.filter(col("doc_id") >= splitId)
     val histIndex = graft.tools.ArtifactCache.parquet(spark, dir,
       s"band_index_lt$splitId") { p =>
-      bandRows(signaturesOf(oldDocs)).write.mode("overwrite").parquet(p)
+      bandRows(oldDocs).write.mode("overwrite").parquet(p)
     }
     // delta band rows, materialized once: key counts, the key broadcast,
     // and both candidate joins all read them (a batch is small by
     // definition — a corpus-sized "delta" is a rebuild, not a refresh)
-    val deltaIndex = bandRows(signaturesOf(newDocs)).stage()
+    val deltaIndex = bandRows(newDocs).stage()
     val delta = deltaVerifiedPairs(histIndex, deltaIndex,
       ids => shingleSetsOf(all.join(ids, Seq("doc_id"), "left_semi")),
       jaccardThreshold, maxBucket)
@@ -1366,7 +1359,8 @@ object Dedup {
       // threshold/cap can never read a stale artifact
       val histPairs = graft.tools.ArtifactCache.parquet(spark, dir,
         s"pairs_minhash_lt${splitId}_t${jaccardThreshold}_b$maxBucket") { p =>
-        minhashOf(oldDocs, jaccardThreshold, maxBucket, sorted = false)
+        minhashOf(Tables.documents(spark, dir).filter(col("doc_id") < splitId),
+          jaccardThreshold, maxBucket, sorted = false)
           .write.mode("overwrite").parquet(p)
       }
       retractCrossedPairs(histPairs, histIndex, deltaIndex,
@@ -1606,7 +1600,7 @@ object Dedup {
     graft.tools.RangeState.requireNoFuture(shRoot, batchId)
     val t0 = System.nanoTime()
     val arriving = batch.select(col("doc_id"), col("text")).stage()
-    val newBands = bandRows(signaturesOf(arriving)).stage()
+    val newBands = bandRows(arriving).stage()
     // the shingle store's range boundaries: the id span when the caller
     // knows it (minhashStream does), else seeded from the first batch —
     // with id-ordered arrival that parks later ids in the top partition,
@@ -1635,7 +1629,7 @@ object Dedup {
     // the ≤ compactEvery deltas after it (LogState.pathsAsOf).
     val histPaths = graft.tools.LogState.pathsAsOf(indexRoot, batchId - 1)
     val histIndex =
-      if (histPaths.nonEmpty) Tables.parquet(sp, histPaths: _*)
+      if (histPaths.nonEmpty) LogState.read(sp, indexRoot, histPaths)
       else newBands.limit(0)
     // the shared refresh core: batch×index ∪ batch×batch candidates,
     // combined-bucket skew cap, candidate-pruned exact verify. A doc is a
@@ -1664,7 +1658,7 @@ object Dedup {
       graft.tools.RoutingMetrics.add(f"sh_read_b$batchId%03d",
         buckets.size.toLong)
       if (paths.isEmpty) shingleSetsOf(arriving).limit(0)
-      else Tables.parquet(sp, paths: _*).join(candIds, Seq("doc_id"), "left_semi")
+      else LogState.read(sp, shRoot, paths).join(candIds, Seq("doc_id"), "left_semi")
     }
     val dupIds = deltaVerifiedPairs(histIndex, newBands,
       verifyFromStore, jaccardThreshold, maxBucket)
@@ -1778,7 +1772,7 @@ object Dedup {
     val survPaths =
       graft.tools.LogState.pathsAsOf(s"$base/state/survivors", Long.MaxValue)
     require(survPaths.nonEmpty, s"no survivor state under $base/state")
-    Tables.parquet(spark, survPaths: _*)
+    LogState.read(spark, s"$base/state/survivors", survPaths)
       .stage()
       .orderBy(col("doc_id"))
   }
@@ -2455,7 +2449,7 @@ object Dedup {
     graft.tools.RoutingMetrics.add("sem_buckets_read", buckets.size.toLong)
     graft.tools.RoutingMetrics.add("sem_buckets_total",
       graft.tools.RangeState.partDirs(memberRoot).size.toLong)
-    val mates = Tables.parquet(sp, paths: _*)
+    val mates = LogState.read(sp, memberRoot, paths)
       .select(col("cluster_id"), col("vec_id"), col("v"))
     val dups = semanticDupIds(mates, assigned, eps)
     arriving.select(col("vec_id"))
@@ -2649,7 +2643,7 @@ object Dedup {
     }.reduce(_ unionByName _).stage()
     val histPaths = graft.tools.LogState.pathsAsOf(indexRoot, batchId - 1)
     val hist =
-      if (histPaths.nonEmpty) Tables.parquet(sp, histPaths: _*)
+      if (histPaths.nonEmpty) LogState.read(sp, indexRoot, histPaths)
       else newRows.limit(0)
     // delta-side multi-probe: (table, sig) keys within Hamming ≤ probes
     // of each arriving vector's signature. DELIBERATELY LAZY: at
@@ -2706,7 +2700,7 @@ object Dedup {
       buckets.size.toLong)
     val aEmb =
       if (paths.isEmpty) arriving.limit(0)
-      else Tables.parquet(sp, paths: _*)
+      else LogState.read(sp, vecRoot, paths)
         .join(candIds, Seq("vec_id"), "left_semi")
     val dupIds = cands
       .join(aEmb.select(col("vec_id").as("a_id"),
@@ -3619,7 +3613,7 @@ object Dedup {
       epoch - 1)
     val histOccs =
       if (histOccPaths.isEmpty) batchOccs.limit(0)
-      else Tables.parquet(sp, histOccPaths: _*)
+      else LogState.read(sp, s"$statePath/occs", histOccPaths)
     val affected = histOccs
       .join(batchOccs.select(col("d1"), col("d2")).distinct(),
         Seq("d1", "d2"), "left_semi")
@@ -3638,7 +3632,7 @@ object Dedup {
       epoch - 1)
     val affectedDocs =
       if (histDocPaths.isEmpty) batchDocs.limit(0)
-      else Tables.parquet(sp, histDocPaths: _*)
+      else LogState.read(sp, s"$statePath/docs", histDocPaths)
         .join(affected, Seq("doc_id"), "left_semi")
     val rDocs = affectedDocs.unionByName(batchDocs)
     val recomputed = substrCoverRebuild(substrToks(rDocs), starts, n)
@@ -3672,9 +3666,10 @@ object Dedup {
     * batch lands. */
   def substringStreamState(sp: SparkSession, statePath: String,
                            upTo: Long): Option[DataFrame] = {
-    val paths = graft.tools.LogState.pathsAsOf(s"$statePath/results", upTo)
+    val root = s"$statePath/results"
+    val paths = graft.tools.LogState.pathsAsOf(root, upTo)
     if (paths.isEmpty) None
-    else Some(substringResultsFold(Tables.parquet(sp, paths: _*)))
+    else Some(substringResultsFold(LogState.read(sp, root, paths)))
   }
 
   /** STREAMING substring dedup through the HASH GATE: deterministic
@@ -3807,20 +3802,21 @@ object Dedup {
       graft.tools.LogState.pathsAsOf(s"$statePath/banned", epoch - 1)
     val banned =
       (if (histBannedPaths.isEmpty) newBanned
-       else Tables.parquet(sp, histBannedPaths: _*).unionByName(newBanned))
+       else LogState.read(sp, s"$statePath/banned", histBannedPaths)
+         .unionByName(newBanned))
         .distinct()
     val histOccPaths =
       graft.tools.LogState.pathsAsOf(s"$statePath/occs", epoch - 1)
     val histOccs =
       if (histOccPaths.isEmpty) batchOccs.limit(0)
-      else Tables.parquet(sp, histOccPaths: _*)
+      else LogState.read(sp, s"$statePath/occs", histOccPaths)
     val affected = histOccs.join(newBanned, Seq("d1", "d2"), "left_semi")
       .select(col("doc_id")).distinct().stage()
     val histDocPaths =
       graft.tools.LogState.pathsAsOf(s"$statePath/docs", epoch - 1)
     val affectedDocs =
       if (histDocPaths.isEmpty) batchDocs.limit(0)
-      else Tables.parquet(sp, histDocPaths: _*)
+      else LogState.read(sp, s"$statePath/docs", histDocPaths)
         .join(affected, Seq("doc_id"), "left_semi")
     val rDocs = affectedDocs.unionByName(batchDocs)
     val rOccs = histOccs.join(affected, Seq("doc_id"), "left_semi")

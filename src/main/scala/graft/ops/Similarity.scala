@@ -583,7 +583,7 @@ object Similarity {
       .distinct().collect().map(_.getInt(0)).toSeq
     val vecPaths = graft.tools.RangeState.pathsForBuckets(vecRoot,
       touchedBuckets, batchId)
-    val edges = buildHnswEdges(Tables.parquet(sp, vecPaths: _*), 0L)
+    val edges = buildHnswEdges(graft.tools.LogState.read(sp, vecRoot, vecPaths), 0L)
     graft.tools.RangeState.publishDelta(edgeRoot, batchId, edges,
       graft.tools.RangeState.bucketCol(bounds, col("src")))
     graft.tools.RangeState.maintainTouched(sp, touchedVec, batchId, 4)(identity)
@@ -1562,9 +1562,10 @@ object Similarity {
     * batch. */
   def embStatsStreamReport(sp: SparkSession, statePath: String,
                            upTo: Long): Option[DataFrame] = {
-    val paths = graft.tools.LogState.pathsAsOf(s"$statePath/stats", upTo)
+    val root = s"$statePath/stats"
+    val paths = graft.tools.LogState.pathsAsOf(root, upTo)
     if (paths.isEmpty) None
-    else Some(embStatsFold(Tables.parquet(sp, paths: _*)).orderBy(col("dim")))
+    else Some(embStatsFold(graft.tools.LogState.read(sp, root, paths)).orderBy(col("dim")))
   }
 
   /** STREAMING drift monitor through the HASH GATE: contiguous id-range

@@ -211,18 +211,22 @@ object TextAnalysis {
   }
 
   /** TF-IDF-style term weighting (ratio form: tf · N/df — log-free so the
-    * doubles divide identically in both engines). tf and df come from two
-    * hash aggregations over the exploded token stream; N joins in as a
+    * doubles divide identically in both engines). One compiled
+    * per-document kernel emits each distinct token with its count (the
+    * tokens of [[graft.functions.TextKernels.tokens]]), so the documents
+    * are scanned and tokenized once; df is a count over those rows
+    * partitioned by token (one exchange, where a second aggregation
+    * joined back would re-tokenize the corpus), and N joins in as a
     * broadcast single-row frame. */
   def tfidf(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val toks = docs.select(col("doc_id"),
-      explode(tokens(col("text"))).as("token"))
-    val tf = toks.groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
+    val tf = docs
+      .select(col("doc_id"),
+        explode(graft.functions.TextKernels.termFreqUdf(col("text"))).as("t"))
+      .select(col("doc_id"), col("t.token").as("token"), col("t.tf").as("tf"))
     val n = docs.agg(count(lit(1)).cast("double").as("n_docs"))
-    tf.join(df, Seq("token"))
+    tf.withColumn("df", count(lit(1))
+        .over(org.apache.spark.sql.expressions.Window.partitionBy(col("token"))))
       .join(broadcast(n), lit(true))
       .select(col("doc_id"), col("token"), col("tf"), col("df"),
         (col("tf").cast("double") * col("n_docs") / col("df").cast("double"))
@@ -767,7 +771,7 @@ object TextAnalysis {
       val paths = graft.tools.LogState.pathsAsOf(s"$statePath/$root",
         epoch - 1)
       if (paths.isEmpty) flags0.select(col("udig").as("dig")).limit(0)
-      else Tables.parquet(sp, paths: _*)
+      else LogState.read(sp, s"$statePath/$root", paths)
     }
     val urlHist = histOf("urlwin")
     val newUrlWin = flags0.groupBy(col("udig"))
@@ -809,9 +813,10 @@ object TextAnalysis {
     * batch. */
   def finewebStreamReport(sp: SparkSession, statePath: String,
                           upTo: Long): Option[DataFrame] = {
-    val paths = graft.tools.LogState.pathsAsOf(s"$statePath/flags", upTo)
+    val root = s"$statePath/flags"
+    val paths = graft.tools.LogState.pathsAsOf(root, upTo)
     if (paths.isEmpty) None
-    else Some(funnelReport(Tables.parquet(sp, paths: _*)))
+    else Some(funnelReport(LogState.read(sp, root, paths)))
   }
 
   /** STREAMING funnel through the HASH GATE: contiguous id-range

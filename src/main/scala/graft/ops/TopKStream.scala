@@ -53,10 +53,11 @@ private[ops] object TopKStream {
     * stratum; None before the first batch. */
   def rankedAsOf(sp: SparkSession, statePath: String, upTo: Long,
                  stratum: String, k: Int): Option[DataFrame] = {
-    val paths = graft.tools.LogState.pathsAsOf(s"$statePath/cand", upTo)
+    val root = s"$statePath/cand"
+    val paths = graft.tools.LogState.pathsAsOf(root, upTo)
     if (paths.isEmpty) None
     else Some(TwoLevel.rank(
-      topK(graft.Tables.parquet(sp, paths: _*), stratum, k)
+      topK(graft.tools.LogState.read(sp, root, paths), stratum, k)
         .withColumn("__cb",
           substring(col("ord"), 1, TwoLevel.Md5PrefixChars)),
       Seq(stratum), "__cb", Seq(col("ord"), col("doc_id")), "rk"))

@@ -245,7 +245,7 @@ object UrlCuration {
     val hist =
       if (histPaths.isEmpty)
         canon.select(col("digest"), col("doc_id").as("keep_id")).limit(0)
-      else Tables.parquet(sp, histPaths: _*)
+      else graft.tools.LogState.read(sp, s"$statePath/winners", histPaths)
     val batchWinners = canon.groupBy(col("digest"))
       .agg(min(col("doc_id")).as("keep_id"))
       .join(hist.select(col("digest")), Seq("digest"), "left_anti")

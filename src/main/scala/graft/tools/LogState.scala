@@ -1,6 +1,9 @@
 package graft.tools
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Versioned base/delta file layout for log-structured operator state —
   * the shared mechanics under the merge-on-read CDC upsert (q95) and the
@@ -66,7 +69,59 @@ object LogState {
     * plain-union fold of [[pathsAsOf]], the read-back of the
     * append-only logs the streaming gates publish. */
   def readAsOf(sp: SparkSession, root: String, upTo: Long): DataFrame =
-    graft.Tables.parquet(sp, pathsAsOf(root, upTo): _*)
+    read(sp, root, pathsAsOf(root, upTo))
+
+  /** `paths` — a file set of the log under `root` ([[pathsAsOf]],
+    * [[compactionInputs]], or a range-partitioned log's partition
+    * slices) — read with the log's schema, resolved once per log.
+    *
+    * [[graft.Tables.parquet]] resolves a schema once per FILE SET, and
+    * every epoch adds a delta to a log's file set, so each epoch's read
+    * of a log missed that cache and ran a schema-inference job. A log's
+    * schema is fixed by its writer: every base and delta of it is read
+    * back under one schema already. So the schema inferred for one file
+    * set of a log serves every later file set that shares a file set
+    * with the last one read (same path, same [[ArtifactCache.pathToken]]
+    * — the base or oldest delta carries over between epochs), and the
+    * base a compaction writes joins the known sets ([[maintain]]). A
+    * read sharing nothing with the last one (a log rewritten under the
+    * same root, say) infers again, as do changed parquet confs. */
+  def read(sp: SparkSession, root: String, paths: Seq[String]): DataFrame =
+    sp.read.schema(schemaOf(sp, root, paths)).parquet(paths: _*)
+
+  /** A log's schema, the file sets (`path@pathToken`) read or written
+    * with it, and the parquet inference confs it was inferred under. */
+  private final case class LogSchema(schema: StructType, sets: Set[String],
+                                     confs: String)
+  private val logSchemas = TrieMap[String, LogSchema]()
+  // bounds, as for Tables' schema cache: logs per JVM, file sets per log
+  private val MaxLogs = 4096
+  private val MaxSets = 1024
+
+  private def fileSets(paths: Seq[String]): Seq[String] =
+    paths.map(p => s"$p@${ArtifactCache.pathToken(p)}").filterNot(_.endsWith("@absent"))
+
+  private def schemaOf(sp: SparkSession, root: String, paths: Seq[String]): StructType = {
+    val sets = fileSets(paths)
+    val confs = graft.Tables.inferenceConfs(sp)
+    val known = logSchemas.get(root).filter(k => k.confs == confs && sets.exists(k.sets))
+    val schema = known.map(_.schema).getOrElse(graft.Tables.parquetSchema(sp, paths: _*))
+    val seen = known.map(_.sets).filter(_.size < MaxSets).getOrElse(Set.empty[String])
+    if (logSchemas.size >= MaxLogs) logSchemas.clear()
+    logSchemas.put(root, LogSchema(schema, seen ++ sets, confs))
+    schema
+  }
+
+  /** A base written by compaction folds the log it replaces, so it is
+    * read with that log's schema: it joins the known file sets of every
+    * log it lies under (a range-partitioned log's root as well as its
+    * partition's). */
+  private def knownBase(base: String): Unit = {
+    val set = fileSets(Seq(base))
+    logSchemas.foreach { case (root, k) =>
+      if (base.startsWith(s"$root/")) logSchemas.put(root, k.copy(sets = k.sets ++ set))
+    }
+  }
 
   /** Apply-time guard: state NEWER than the batch being applied means the
     * stream went backwards — a wiped checkpoint reusing a stale
@@ -104,8 +159,9 @@ object LogState {
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
       val tc = System.nanoTime()
       roots.foreach { root =>
-        fold(graft.Tables.parquet(sp, compactionInputs(root, batchId): _*))
+        fold(read(sp, root, compactionInputs(root, batchId)))
           .write.mode("overwrite").parquet(s"$root/base/v$batchId")
+        knownBase(s"$root/base/v$batchId")
       }
       PhaseTiming.record(f"compact$batchId%03d",
         (System.nanoTime() - tc) / 1e9)
@@ -139,9 +195,11 @@ object LogState {
     val pending =
       versions(root, "delta", batchId).count(v => base.forall(_ < v))
     val compact = maxDeltas > 0 && pending >= maxDeltas
-    if (compact)
-      fold(graft.Tables.parquet(sp, compactionInputs(root, batchId): _*))
+    if (compact) {
+      fold(read(sp, root, compactionInputs(root, batchId)))
         .write.mode("overwrite").parquet(s"$root/base/v$batchId")
+      knownBase(s"$root/base/v$batchId")
+    }
     gc(root, batchId)
     compact
   }

@@ -17,9 +17,11 @@ import graft.{Session, SparkEntry}
   * Bench executes; data dir is `SPARK_GRAFT_SF_DIR`.
   *
   *  - `iters <query...>` (default dir sf0.1): each query three times in
-  *    one fresh JVM with no tiny-SF warm-up, one wall-time line per
-  *    iteration, then the final iteration's Spark jobs (wall, stages,
-  *    tasks, call site). The first iteration against the rest is the
+  *    one fresh JVM with no tiny-SF warm-up, one line per iteration (wall
+  *    time, and the generated classes Spark compiled during it with their
+  *    compile time — a class the codegen cache serves is not counted),
+  *    then the final iteration's Spark jobs (wall, stages, tasks, call
+  *    site). The first iteration against the rest is the
   *    cold/warm A/B behind Bench's warm-up policy; the job lines tell a
   *    dispatch-floored query (many tiny jobs) from a compute-bound one.
   *  - `plan <outDir> <suffix> <query...>` (default dir sf0.001): writes
@@ -45,7 +47,7 @@ object Probe {
     "q7_topk" -> "TakeOrderedAndProject (per-partition heap, no global sort)",
     "q38_asof_native" -> "custom AsOfJoinExec: one exchange + sort per side",
     "sim_topk_brute" -> "native codegen cosine + broadcast query set",
-    "dedup_minhash" -> "slim band shuffle, bucket self-join, verify rejoin",
+    "dedup_minhash" -> "slim band shuffle into ONE bucket aggregation (collect ids, compiled a<b pair kernel, distinct) — no window, no self-join, no staging; candidate ids broadcast into a semi-join so only candidate docs' text reaches the one-call-per-pair shingle-Jaccard verify",
     "sim_topk_lsh" -> "adaptive-bit LSH: equi-join buckets, no cartesian, slim candidates",
     "q52_right_join" -> "right outer join broadcasts the filtered small side",
     "dedup_groups_jaccard" -> "pair artifact scan + O(diameter) label-propagation rounds",
@@ -164,9 +166,13 @@ object Probe {
       // holding exactly the final iteration's jobs, every one with its end
       GraftShim.waitListeners(spark)
       jobs.clear()
+      val (cls0, ns0) = GraftShim.codegenCounters
       val t0 = System.nanoTime()
       val rows = fn(spark, dir).count()
-      println(f"[probe] $name iter $i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($rows rows)")
+      val wall = (System.nanoTime() - t0) / 1e9
+      val (cls1, ns1) = GraftShim.codegenCounters
+      println(f"[probe] $name iter $i: $wall%.2f s ($rows rows), " +
+        f"codegen ${cls1 - cls0} classes ${(ns1 - ns0) / 1e6}%.0f ms")
       GraftShim.waitListeners(spark)
       if (i == 3) {
         val all = jobs.asScala.toSeq.sortBy(_._1)

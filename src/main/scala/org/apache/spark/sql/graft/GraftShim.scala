@@ -32,6 +32,13 @@ object GraftShim {
     try spark.sparkContext.listenerBus.waitUntilEmpty()
     catch { case _: java.util.concurrent.TimeoutException => () }
 
+  /** Spark's JVM-wide codegen counters (private[spark]): generated
+    * classes compiled so far, and their compile time so far in ns. A
+    * class served from the generated-code cache counts in neither. */
+  def codegenCounters: (Long, Long) =
+    (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+
   /** Whether `key` was EXPLICITLY set on this session (RuntimeConfig
     * .getOption cannot tell: it returns the registered default for any
     * built-in conf). Lets a per-call conf fallback respect a session

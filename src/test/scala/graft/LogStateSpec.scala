@@ -115,4 +115,52 @@ class LogStateSpec extends SparkSpec {
     } finally Seq(reference, crashed)
       .foreach(graft.tools.TempDirs.deleteRecursively)
   }
+
+  test("a log's schema is resolved once per log: a later epoch's read, " +
+      "its compaction and the read after it run no schema-inference job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.GraftShim
+    val root = TempDirsSpecHelper.fresh("graft-logschema-spec")
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sites.add((Option(e.properties).map(_.getProperty("callSite.short", ""))
+          .toSeq ++ e.stageInfos.map(_.name)).mkString(" | "))
+    }
+    /** Schema-inference jobs started while `body` runs. */
+    def inferenceJobs[T](body: => T): (T, Int) = {
+      GraftShim.waitListeners(spark)
+      sites.clear()
+      val out = body
+      GraftShim.waitListeners(spark)
+      (out, sites.toArray.count(_.toString.contains("Tables.scala")))
+    }
+    def writeDelta(v: Long): Unit =
+      spark.range(v * 10, v * 10 + 10)
+        .select(col("id").as("doc_id"), (col("id") % 3).as("band"))
+        .write.mode("overwrite").parquet(s"$root/delta/v$v")
+    spark.sparkContext.addSparkListener(l)
+    try {
+      writeDelta(0)
+      val (_, first) = inferenceJobs(LogState.readAsOf(spark, root, 0))
+      assert(first >= 1, "the first read of a log infers its schema")
+      for (epoch <- 1L to 3L) {
+        writeDelta(epoch)
+        val paths = LogState.pathsAsOf(root, epoch)
+        val (df, jobs) = inferenceJobs(LogState.readAsOf(spark, root, epoch))
+        assert(jobs == 0, s"epoch $epoch re-inferred the log's schema")
+        assert(df.schema == spark.read.parquet(paths: _*).schema)
+        assert(df.count() == (epoch + 1) * 10)
+        // epoch 1 compacts: its fold reads the log, and the base it
+        // writes is read by epochs 2 and 3 without inference
+        val (_, compactJobs) = inferenceJobs(
+          LogState.maintain(spark, Seq(root), epoch, compactEvery = 2)(identity))
+        assert(compactJobs == 0, s"epoch $epoch's compaction re-inferred")
+      }
+      assert(LogState.versions(root, "base") == Seq(1L, 3L))
+    } finally {
+      spark.sparkContext.removeSparkListener(l)
+      graft.tools.TempDirs.deleteRecursively(new java.io.File(root).getParent)
+    }
+  }
 }

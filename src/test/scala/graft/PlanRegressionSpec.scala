@@ -266,4 +266,50 @@ class PlanRegressionSpec extends SparkSpec {
     assert(windows == 1, s"expected only rankTail's window, found $windows:\n" +
       p.take(2000))
   }
+
+  test("minhash buckets through one aggregation: no window, no staging, " +
+      "no nested-loop join") {
+    val p = plan("dedup_minhash")
+    assert(!"\\bWindow \\[".r.findFirstIn(p).isDefined,
+      s"a bucket-count window is back:\n${p.take(2000)}")
+    assert(!p.contains("ExistingRDD"),
+      s"the band rows are staged again:\n${p.take(2000)}")
+    assert(!p.contains("BroadcastNestedLoopJoin"))
+  }
+
+  test("tf-idf tokenizes the documents once: one Generate") {
+    val p = plan("text_tfidf")
+    val generates = "\\bGenerate ".r.findAllIn(p).size
+    assert(generates == 1, s"expected one token Generate, found $generates:\n" +
+      p.take(2000))
+  }
+
+  /** Spark jobs started while `body` runs, counted by a listener and
+    * drained from the bus on both sides. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.GraftShim
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    GraftShim.waitListeners(spark)
+    spark.sparkContext.addSparkListener(l)
+    try { body; GraftShim.waitListeners(spark) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
+
+  test("a warm dedup_minhash builds its frame without running a job") {
+    val build = () => SparkEntry.queries("dedup_minhash")(spark, sf)
+    build().collect() // warm: schema reads and codegen done
+    assert(jobsDuring(build()) == 0)
+  }
+
+  test("a warm text_tfidf runs at most 7 jobs") {
+    val run = () => SparkEntry.queries("text_tfidf")(spark, sf).collect()
+    run()
+    val jobs = jobsDuring(run())
+    assert(jobs <= 7, s"text_tfidf ran $jobs jobs")
+  }
 }

@@ -25,7 +25,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - one planted late schedule: its Scala form appears once under
   *    `src/main` ([[graft.ops.Dedup.lateEventTime]]);
   *  - one banded-Hamming band definition: the 4×16-bit band expression
-  *    appears once under `src/main` (`Dedup.hammingBandRows`).
+  *    appears once under `src/main` (`Dedup.hammingBandRows`);
+  *  - one minhash banding: no sliced-signature band expression under
+  *    `src/main` (`TextKernels.bandKeys`).
   */
 class SparkEntrySpec extends AnyFunSuite {
 
@@ -142,5 +144,11 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(mainCount("filter(split(") == 0,
       "an interpreted filter-lambda tokenizer copy is back — use " +
         "TextKernels.tokens")
+  }
+
+  test("grep invariant: minhash bands come from the band-key kernel") {
+    assert(mainCount("slice(sig,") == 0,
+      "a sliced-signature xxhash64 band expression is back — band " +
+        "through TextKernels.bandKeys")
   }
 }
