@@ -281,6 +281,16 @@ object EtlPipeline {
       |FROM customer JOIN nation ON c_nationkey = n_nationkey
       |ORDER BY direccion, localidad, rubro, localizar""".stripMargin
 
+  /** The embedded Derby database the sink round trips load into: one per
+    * JVM, created on first use under a JVM-lifetime scratch dir (the
+    * [[pagesRoot]] recipe) and deleted at JVM exit. Each call gets its own
+    * table instead of its own database, so no call pays a database boot
+    * and shutdown. */
+  private[graft] lazy val jdbcSinkUrl: String =
+    s"jdbc:derby:${graft.tools.TempDirs.createFastForJvm("graft-jdbc")}/db;create=true"
+
+  private val jdbcSinkTables = new java.util.concurrent.atomic.AtomicLong()
+
   /** K1/K2 through the HASH GATE: the chunked JDBC load (schema DDL +
     * batched parallel append — writeJdbc, the reference's `to_sql` shape)
     * against a real embedded Derby database, read back through Spark's
@@ -289,27 +299,36 @@ object EtlPipeline {
     * row set all sit inside the bitwise oracle compare. Derby uppercases
     * unquoted identifiers, so read-back columns re-alias to lowercase
     * (resolution is case-insensitive; the gate comparator is not).
+    * Each call loads a fresh `orders_sink_<n>` table of [[jdbcSinkUrl]]
+    * and drops it once the read-back is staged.
     * Embedded Derby is reachable from executors only because local mode
     * is single-JVM — production points the same code at a server URL. */
   def jdbcSinkRoundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val dbDir = graft.tools.TempDirs.createFast("graft-jdbc")
-    val url = s"jdbc:derby:$dbDir/db;create=true"
+    val url = jdbcSinkUrl
+    val table = s"orders_sink_${jdbcSinkTables.incrementAndGet()}"
     val df = Tables.orders(spark, dir).select(
       col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
       col("o_totalprice"))
-    writeJdbc(df, url, "orders_sink", batchSize = 500, numPartitions = 4)
-    val back = spark.read.jdbc(url, "orders_sink", new java.util.Properties)
-      .select(col("o_orderkey").as("o_orderkey"),
-        col("o_custkey").as("o_custkey"),
-        col("o_orderstatus").as("o_orderstatus"),
-        col("o_totalprice").as("o_totalprice"))
-      .orderBy(col("o_orderkey"))
-      .stage() // materialize before the db dir is torn down
-    // clean shutdown (Derby signals success via SQLException), then delete
-    try java.sql.DriverManager.getConnection(s"jdbc:derby:$dbDir/db;shutdown=true")
-    catch { case _: java.sql.SQLException => () }
-    graft.tools.TempDirs.deleteRecursively(dbDir)
-    back
+    try {
+      writeJdbc(df, url, table, batchSize = 500, numPartitions = 4)
+      spark.read.jdbc(url, table, new java.util.Properties)
+        .select(col("o_orderkey").as("o_orderkey"),
+          col("o_custkey").as("o_custkey"),
+          col("o_orderstatus").as("o_orderstatus"),
+          col("o_totalprice").as("o_totalprice"))
+        .orderBy(col("o_orderkey"))
+        .stage() // materialize before the table is dropped
+    } finally {
+      val c = java.sql.DriverManager.getConnection(url)
+      try {
+        val st = c.createStatement()
+        try st.execute(s"DROP TABLE $table")
+        catch { // 42Y55: no such table — the DDL never ran
+          case e: java.sql.SQLException if e.getSQLState == "42Y55" => ()
+        }
+        finally st.close()
+      } finally c.close()
+    }
   }
 
   val jdbcSinkRoundTripSql: String =

@@ -52,7 +52,12 @@ object Relational {
     * final) → sort. The filter and the 7-column projection reach the parquet
     * scan (PushedFilters / ReadSchema); agg shuffles on the 2 grouping cols
     * only after map-side combine, so shuffle volume is O(groups), not O(rows)
-    * — the property that keeps this plan viable at 100 TB. */
+    * — the property that keeps this plan viable at 100 TB. The result is
+    * bounded by the grouping domain (≤ |returnflag| × |linestatus| rows),
+    * so the final sort runs in one partition: `coalesce(1)` satisfies the
+    * sort's ordered distribution, and no range exchange or RangePartitioner
+    * sampling job is planned. The final aggregation keeps its hash
+    * exchange; the grouping keys are the sort keys, so the order is unique. */
   def q1PricingSummary(spark: SparkSession, dir: String): DataFrame =
     Tables.lineitem(spark, dir)
       .filter(col("l_shipdate") <= lit("1998-09-01").cast("timestamp"))
@@ -62,6 +67,7 @@ object Relational {
         dsum(col("l_extendedprice")).as("sum_base_price"),
         revenueSum.as("sum_disc_price"),
         count(lit(1)).as("count_order"))
+      .coalesce(1)
       .orderBy(col("l_returnflag"), col("l_linestatus"))
 
   val q1Sql: String =

@@ -18,10 +18,15 @@ import graft.tools.Stage._
   *  3. hyperplane LSH: signature equality bucket join — sub-linear
   *     candidate generation, fully shuffle-based, no centroids needed.
   *
-  * Scale posture: queries are broadcast (small side), the corpus never
-  * re-shuffles for brute force; IVF/LSH shuffle the corpus ONCE on the
-  * cell/signature key and reuse that partitioning. All cosine math is the
-  * explicit left-fold from Dedup.cosine, bit-identical to the oracle.
+  * Scale posture: the query set is the broadcast (small) side of every
+  * tier. Brute force and IVF never shuffle the corpus — IVF assigns cells
+  * and probes them map-side against a driver-side quantizer; LSH, PQ and
+  * the graph tier generate slim (q_id, n_id) candidates and rejoin the
+  * corpus for the rerank. Every tier ends in [[rankTail]]: one hash
+  * exchange of scored rows on q_id for the rank window, then a sort of at
+  * most queries × K rows in one partition (no range exchange). All cosine
+  * math is the explicit left-fold from Dedup.cosine, bit-identical to the
+  * oracle.
   *
   * Public-literature anchors: random-hyperplane LSH (Charikar, STOC
   * 2002), IVF coarse quantization (Jégou/Douze/Schmid, "Product
@@ -62,7 +67,15 @@ object Similarity {
 
   /** Shared exact-rerank tail of every tier: rank scored candidates per
     * query on (cos DESC, n_id), keep K. One definition so the tie order
-    * every oracle pins cannot drift between tiers. */
+    * every oracle pins cannot drift between tiers.
+    *
+    * The result is bounded by construction: at most queries × K rows,
+    * the queries being the broadcast side. So the final sort runs in one
+    * partition — `coalesce(1)` reports `SinglePartition`, which already
+    * satisfies the sort's ordered distribution, so no range exchange and
+    * no RangePartitioner sampling job is planned. The scoring scan and
+    * the window's hash exchange upstream keep their parallelism;
+    * (q_id, rank) is unique, so the row order is the same either way. */
   private def rankTail(scored: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("n_id"))
@@ -70,6 +83,7 @@ object Similarity {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= K)
       .select(col("q_id"), col("rank"), col("n_id"), col("cos"))
+      .coalesce(1)
       .orderBy(col("q_id"), col("rank"))
   }
 

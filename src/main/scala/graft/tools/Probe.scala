@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SQLExecution}
 import org.apache.spark.sql.graft.GraftShim
 
 import graft.{Session, SparkEntry}
@@ -17,9 +17,10 @@ import graft.{Session, SparkEntry}
   * Bench executes; data dir is `SPARK_GRAFT_SF_DIR`.
   *
   *  - `iters <query...>` (default dir sf0.1): each query three times in
-  *    one fresh JVM with no tiny-SF warm-up, one line per iteration (wall
-  *    time, and the generated classes Spark compiled during it with their
-  *    compile time — a class the codegen cache serves is not counted),
+  *    one fresh JVM with no tiny-SF warm-up, every output column
+  *    materialized as the benchmark times an op, one line per iteration
+  *    (wall time, and the generated classes Spark compiled during it with
+  *    their compile time — a class the codegen cache serves is not counted),
   *    then the final iteration's Spark jobs (wall, stages, tasks, call
   *    site). The first iteration against the rest is the
   *    cold/warm A/B behind Bench's warm-up policy; the job lines tell a
@@ -168,7 +169,7 @@ object Probe {
       jobs.clear()
       val (cls0, ns0) = GraftShim.codegenCounters
       val t0 = System.nanoTime()
-      val rows = fn(spark, dir).count()
+      val rows = materialize(fn(spark, dir))
       val wall = (System.nanoTime() - t0) / 1e9
       val (cls1, ns1) = GraftShim.codegenCounters
       println(f"[probe] $name iter $i: $wall%.2f s ($rows rows), " +
@@ -184,6 +185,20 @@ object Probe {
       }
     }
     spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Runs `df` to completion with every output column computed and
+    * returns its row count — the benchmark's op timing. `count()` would
+    * prune the columns and understate ops whose cost is in the output. */
+  private def materialize(df: DataFrame): Long = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe) {
+      qe.toRdd.mapPartitions { it =>
+        var n = 0L
+        while (it.hasNext) { it.next(); n += 1 }
+        Iterator.single(n)
+      }.collect().sum
+    }
   }
 
   private def latency(spark: SparkSession): Unit = {

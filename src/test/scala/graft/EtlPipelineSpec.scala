@@ -116,6 +116,20 @@ class EtlPipelineSpec extends SparkSpec {
       == 2 * df.count())
   }
 
+  test("JDBC sink round trips share one database and drop their tables") {
+    val first = EtlPipeline.jdbcSinkRoundTrip(spark, sf).collect().toSeq
+    val second = EtlPipeline.jdbcSinkRoundTrip(spark, sf).collect().toSeq
+    assert(first.nonEmpty)
+    assert(second == first)
+    val c = java.sql.DriverManager.getConnection(EtlPipeline.jdbcSinkUrl)
+    try {
+      val rs = c.getMetaData.getTables(null, null, "ORDERS_SINK_%", null)
+      val left = Iterator.continually(rs).takeWhile(_.next())
+        .map(_.getString("TABLE_NAME")).toList
+      assert(left.isEmpty, s"sink tables left behind: $left")
+    } finally c.close()
+  }
+
   test("the source round trips leave no page dir in java.io.tmpdir") {
     val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
     def pageDirs(): Set[String] = {

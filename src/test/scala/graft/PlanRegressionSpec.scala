@@ -284,6 +284,19 @@ class PlanRegressionSpec extends SparkSpec {
       p.take(2000))
   }
 
+  test("bounded top-k and summary results sort in one partition: no " +
+      "range exchange") {
+    // a rangepartitioning exchange costs a RangePartitioner sampling job
+    // and a map job before the result job; these results are ≤ queries ×
+    // K rows (rankTail) or ≤ the grouping domain (q1)
+    Seq("sim_topk_brute", "sim_topk_ivf", "sim_topk_lsh", "sim_topk_pq",
+        "sim_topk_hnsw", "q1_pricing_summary").foreach { name =>
+      val p = plan(name)
+      assert(!p.contains("rangepartitioning"),
+        s"$name plans a range exchange:\n${p.take(2000)}")
+    }
+  }
+
   /** Spark jobs started while `body` runs, counted by a listener and
     * drained from the bus on both sides. */
   private def jobsDuring(body: => Unit): Int = {
@@ -306,10 +319,13 @@ class PlanRegressionSpec extends SparkSpec {
     assert(jobsDuring(build()) == 0)
   }
 
-  test("a warm text_tfidf runs at most 7 jobs") {
-    val run = () => SparkEntry.queries("text_tfidf")(spark, sf).collect()
-    run()
-    val jobs = jobsDuring(run())
-    assert(jobs <= 7, s"text_tfidf ran $jobs jobs")
+  Seq("text_tfidf" -> 7, "sim_topk_brute" -> 3, "sim_topk_ivf" -> 3,
+      "q1_pricing_summary" -> 2).foreach { case (name, bound) =>
+    test(s"a warm $name runs at most $bound jobs") {
+      val run = () => SparkEntry.queries(name)(spark, sf).collect()
+      run()
+      val jobs = jobsDuring(run())
+      assert(jobs <= bound, s"$name ran $jobs jobs")
+    }
   }
 }
