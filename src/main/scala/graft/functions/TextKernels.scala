@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.api.java.{UDF1, UDF3, UDF4}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.{array_remove, lit, split, udf}
@@ -196,21 +196,74 @@ object TextKernels {
       out
     }
 
-  /** Candidate pairs of one LSH bucket: every (a, b) of its ids with
-    * a < b — the rule of a band-key self-join filtered on `a_id < b_id`,
-    * without the join. Repeated ids pair with nothing (a < b is strict). */
-  def bucketPairs(ids: Array[Long]): Array[(Long, Long)] = {
-    val s = ids.clone()
-    java.util.Arrays.sort(s)
-    val out = Array.newBuilder[(Long, Long)]
-    var i = 0
-    while (i < s.length) {
-      var j = i + 1
-      while (j < s.length) { if (s(i) < s(j)) out += ((s(i), s(j))); j += 1 }
-      i += 1
+  /** Candidate pairs of LSH buckets, walked off rows (band_sig, band,
+    * doc_id) in which each bucket's rows are one contiguous run — a
+    * partition sorted on its band key. A run of at most `maxBucket`
+    * rows yields every pair (a, b) of its ids with a < b — the rule of a
+    * band-key self-join filtered on `a_id < b_id`, without the join; a
+    * longer run yields nothing. A null id counts toward the cap and pairs
+    * with nothing, and so does a repeated one (a < b is strict). The ids
+    * of a run may come in any order. Pairs of one bucket are emitted while
+    * the walk holds the next bucket's first row; no run is buffered past
+    * `maxBucket + 1` rows. */
+  def bucketRunPairs(rows: Iterator[Row],
+                     maxBucket: Int): Iterator[(java.lang.Long, java.lang.Long)] =
+    new Iterator[(java.lang.Long, java.lang.Long)] {
+      private val ids = new Array[Long](maxBucket)
+      private var n = 0        // non-null ids of the current run
+      private var pending: Row = if (rows.hasNext) rows.next() else null
+      private var i = 0
+      private var j = 1
+
+      /** Reads the next run of at most `maxBucket` rows into `ids`; false
+        * when the rows are exhausted. */
+      private def nextRun(): Boolean = {
+        var found = false
+        while (!found && pending != null) {
+          val sig = pending.getLong(0)
+          val band = pending.getInt(1)
+          var rowsInRun = 0
+          n = 0
+          var r = pending
+          pending = null
+          while (r != null) {
+            rowsInRun += 1
+            if (rowsInRun <= maxBucket && !r.isNullAt(2)) { ids(n) = r.getLong(2); n += 1 }
+            r = if (rows.hasNext) rows.next() else null
+            if (r != null && (r.getLong(0) != sig || r.getInt(1) != band)) {
+              pending = r
+              r = null
+            }
+          }
+          found = rowsInRun <= maxBucket && n >= 2
+        }
+        i = 0
+        j = 1
+        found
+      }
+
+      /** Moves (i, j) to the run's next pair of distinct ids. */
+      private def settle(): Boolean = {
+        var ok = false
+        while (!ok) {
+          if (i >= n - 1) { if (!nextRun()) return false }
+          else if (j >= n) { i += 1; j = i + 1 }
+          else if (ids(i) == ids(j)) j += 1
+          else ok = true
+        }
+        true
+      }
+
+      def hasNext: Boolean = settle()
+
+      def next(): (java.lang.Long, java.lang.Long) = {
+        if (!settle()) throw new NoSuchElementException
+        val a = ids(i)
+        val b = ids(j)
+        j += 1
+        if (a < b) (a, b) else (b, a)
+      }
     }
-    out.result()
-  }
 
   /** Per-document term frequencies: each distinct token of [[tokens]]
     * once, with its occurrence count. One hash-map pass per document,
@@ -275,14 +328,6 @@ object TextKernels {
                bands: Integer): Array[Long] =
         bandKeys(minhashTokens(if (toks == null) null else toks.toArray, numHashes), bands)
     }, BandKeysType)
-
-  /** ids → [[bucketPairs]] as `array<struct<a_id, b_id>>`. */
-  val bucketPairsUdf: UserDefinedFunction =
-    udf(new UDF1[scala.collection.Seq[Long], Array[(Long, Long)]] {
-      def call(ids: scala.collection.Seq[Long]): Array[(Long, Long)] = bucketPairs(ids.toArray)
-    }, ArrayType(StructType(Seq(
-      StructField("a_id", LongType, nullable = false),
-      StructField("b_id", LongType, nullable = false)))))
 
   val shingleUdf: UserDefinedFunction =
     udf((text: String, n: Int) => shingles(text, n))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -265,31 +265,53 @@ object Dedup {
       col("text"), lit(ShingleN), lit(NumHashes), lit(Bands)))
 
   /** Distinct candidate pairs (a_id < b_id) of band rows (doc_id, band,
-    * band_sig): one aggregation per bucket, dropping a bucket of more
-    * than `maxBucket` rows, then the compiled pair kernel and one
-    * distinct — the pairs of a band-key self-join filtered on
-    * `a_id < b_id`, without the self-join. */
+    * band_sig): one exchange on the band key, each partition sorted so
+    * that every bucket is one run, then the compiled run walk
+    * ([[graft.functions.TextKernels.bucketRunPairs]]: a bucket of more
+    * than `maxBucket` rows yields nothing) and one distinct — the pairs
+    * of a band-key self-join filtered on `a_id < b_id`, without the
+    * self-join, and with no map-side aggregation buffers.
+    *
+    * The sort leads with band_sig, a 64-bit hash, so the sorter's 8-byte
+    * key prefix settles nearly every comparison, where the band (16
+    * values) would leave them to the full comparator. */
   private[graft] def bucketCandidates(bands: DataFrame, maxBucket: Int): DataFrame =
-    bands.groupBy(col("band"), col("band_sig"))
-      .agg(count(lit(1)).as("bucket_n"), collect_list(col("doc_id")).as("ids"))
-      .filter(col("bucket_n") <= maxBucket && size(col("ids")) >= 2)
-      .select(explode(graft.functions.TextKernels.bucketPairsUdf(col("ids"))).as("p"))
-      .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"))
+    bands.select(col("band_sig"), col("band"), col("doc_id"))
+      .repartition(col("band"), col("band_sig"))
+      .sortWithinPartitions(col("band_sig"), col("band"), col("doc_id"))
+      .mapPartitions(RunPairs(maxBucket))(PairEncoder)
+      .toDF("a_id", "b_id")
       // never false: spelled out so that a join on the pair columns
       // infers nothing new, and every consumer of the pairs shares one
       // plan below the distinct (and so one exchange)
       .filter(col("a_id").isNotNull && col("b_id").isNotNull)
       .distinct()
 
+  /** The run walk as a plan node's function: it prints as
+    * `RunPairs(maxBucket)`, where a lambda prints a per-JVM class name. */
+  private final case class RunPairs(maxBucket: Int)
+      extends (Iterator[Row] => Iterator[(java.lang.Long, java.lang.Long)]) {
+    def apply(rows: Iterator[Row]): Iterator[(java.lang.Long, java.lang.Long)] =
+      graft.functions.TextKernels.bucketRunPairs(rows, maxBucket)
+    override def toString: String = s"RunPairs($maxBucket)"
+  }
+
+  /** Boxed longs: the pair columns are nullable, as the near-dup ops'
+    * published schemas have them. */
+  private val PairEncoder = Encoders.tuple(Encoders.LONG, Encoders.LONG)
+
   /** MinHash-LSH near-dup candidate pairs, exact-Jaccard verified.
     *
     * Plan shape (the 100 TB path):
     *  1. signature and band keys: narrow, per-row, compiled kernels — no
     *     shuffle;
-    *  2. one aggregation on the band key (band, band_sig) collects each
-    *     bucket's doc ids — the shuffle is 16× doc *keys*, not content;
-    *  3. a compiled kernel emits each bucket's `a_id < b_id` pairs, then
-    *     one distinct — the self-join rule without the self-join;
+    *  2. one exchange on the band key (band, band_sig), each partition
+    *     sorted on (band_sig, band, doc_id) so that every bucket is one
+    *     run — the shuffle is 16× doc *keys*, not content, and no
+    *     aggregation buffers a bucket map-side;
+    *  3. a compiled walk over each partition's runs emits every
+    *     `a_id < b_id` pair of a bucket, then one distinct — the
+    *     self-join rule without the self-join;
     *  4. exact Jaccard for candidate pairs only: the candidate ids
     *     broadcast into a semi-join on the documents, so only candidate
     *     docs' text reaches the verify, and one kernel call per pair
@@ -311,10 +333,10 @@ object Dedup {
     * candidate semi-join filters the scan before any text moves.
     *
     * Building the frame runs no Spark job: the band rows have one
-    * consumer, the bucket aggregation, so nothing is staged. The
-    * aggregation keeps the window's cap rule (a bucket's row count, not
-    * its distinct ids, against `maxBucket`) and its hash partitioning on
-    * the band key, so the pair fan-out runs at the window's parallelism. */
+    * consumer, the bucket walk, so nothing is staged. The walk keeps the
+    * window's cap rule (a bucket's row count, null ids included, not its
+    * distinct ids, against `maxBucket`) and its hash partitioning on the
+    * band key, so the pair fan-out runs at the window's parallelism. */
   private[graft] def minhashOf(docs: DataFrame,
                                jaccardThreshold: Double,
                                maxBucket: Int,

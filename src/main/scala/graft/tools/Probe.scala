@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -48,7 +49,7 @@ object Probe {
     "q7_topk" -> "TakeOrderedAndProject (per-partition heap, no global sort)",
     "q38_asof_native" -> "custom AsOfJoinExec: one exchange + sort per side",
     "sim_topk_brute" -> "native codegen cosine + broadcast query set",
-    "dedup_minhash" -> "slim band shuffle into ONE bucket aggregation (collect ids, compiled a<b pair kernel, distinct) — no window, no self-join, no staging; candidate ids broadcast into a semi-join so only candidate docs' text reaches the one-call-per-pair shingle-Jaccard verify",
+    "dedup_minhash" -> "slim band shuffle, each partition sorted by band key and walked run by run (compiled a<b pair kernel, capped runs dropped, one distinct) — no aggregation buffers, no window, no self-join, no staging; candidate ids broadcast into a semi-join so only candidate docs' text reaches the one-call-per-pair shingle-Jaccard verify",
     "sim_topk_lsh" -> "adaptive-bit LSH: equi-join buckets, no cartesian, slim candidates",
     "q52_right_join" -> "right outer join broadcasts the filtered small side",
     "dedup_groups_jaccard" -> "pair artifact scan + O(diameter) label-propagation rounds",
@@ -115,7 +116,23 @@ object Probe {
   }
 
   private def formattedPlan(df: DataFrame): String =
-    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    maskScratch(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+
+  /** `text` with this JVM's scratch paths made stable: a scratch root
+    * (`TempDirs.resolvedRoot`, the JVM temp dir) reads `<tmp>`, and in a
+    * path under it the random suffix `Files.createTempDirectory` gives
+    * each `graft-*` dir reads `<id>` — so two dumps of one plan, from two
+    * JVMs, differ only where the plan does. */
+  private[graft] def maskScratch(text: String): String = {
+    val roots = Seq(TempDirs.resolvedRoot, System.getProperty("java.io.tmpdir"))
+      .map(_.stripSuffix("/")).filter(_.nonEmpty).distinct.sortBy(-_.length)
+    val rooted = roots.foldLeft(text)((t, r) => t.replace(s"$r/graft-", "<tmp>/graft-"))
+    ScratchPath.replaceAllIn(rooted, m => Regex.quoteReplacement(
+      RandomSuffix.replaceAllIn(m.matched, "$1<id>")))
+  }
+
+  private val ScratchPath = "<tmp>/[^\\s,\\])]*".r
+  private val RandomSuffix = "(graft-[a-z]+(?:-[a-z]+)*)[0-9]+".r
 
   private def explainMd(spark: SparkSession, dir: String, out: String): Unit = {
     val cores = spark.sparkContext.defaultParallelism

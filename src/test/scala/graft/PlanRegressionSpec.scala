@@ -277,6 +277,13 @@ class PlanRegressionSpec extends SparkSpec {
     assert(!p.contains("BroadcastNestedLoopJoin"))
   }
 
+  test("minhash buckets by a sorted-run walk: no object aggregate on the " +
+      "band shuffle") {
+    val p = plan("dedup_minhash")
+    assert(!p.contains("ObjectHashAggregate"),
+      s"a collect_list bucket aggregation is back:\n${p.take(2000)}")
+  }
+
   test("tf-idf tokenizes the documents once: one Generate") {
     val p = plan("text_tfidf")
     val generates = "\\bGenerate ".r.findAllIn(p).size
@@ -319,8 +326,8 @@ class PlanRegressionSpec extends SparkSpec {
     assert(jobsDuring(build()) == 0)
   }
 
-  Seq("text_tfidf" -> 7, "sim_topk_brute" -> 3, "sim_topk_ivf" -> 3,
-      "q1_pricing_summary" -> 2).foreach { case (name, bound) =>
+  Seq("dedup_minhash" -> 10, "text_tfidf" -> 7, "sim_topk_brute" -> 3,
+      "sim_topk_ivf" -> 3, "q1_pricing_summary" -> 2).foreach { case (name, bound) =>
     test(s"a warm $name runs at most $bound jobs") {
       val run = () => SparkEntry.queries(name)(spark, sf).collect()
       run()

@@ -93,10 +93,35 @@ class TextKernelsSpec extends SparkSpec {
     assert(want.nonEmpty)
     assert(got.size == got.toSet.size, "candidate pairs are not distinct")
     assert(got.toSet == want)
-    // the kernel alone: sorted strict pairs, repeated ids pair with nothing
-    assert(TextKernels.bucketPairs(Array(5L, 3L, 5L, 9L)).toSeq ==
+  }
+
+  test("run-walk kernel: strict a < b pairs per run, the cap counting every row") {
+    // (doc_id, band, band_sig) per row, one bucket per contiguous run
+    def walk(cap: Int)(rows: (java.lang.Long, Int, Long)*): Seq[(Long, Long)] =
+      TextKernels.bucketRunPairs(rows.iterator.map { case (d, b, s) => Row(s, b, d) }, cap)
+        .map { case (a, b) => (a.longValue, b.longValue) }.toSeq.sorted
+    def run(ids: Any*) = ids.map(d => (d.asInstanceOf[java.lang.Long], 0, 7L))
+    // ids in any order; a repeated id pairs with nothing
+    assert(walk(10)(run(5L, 3L, 5L, 9L): _*) ==
       Seq((3L, 5L), (3L, 5L), (3L, 9L), (5L, 9L), (5L, 9L)))
-    assert(TextKernels.bucketPairs(Array(4L, 4L)).isEmpty)
+    assert(walk(10)(run(4L, 4L): _*).isEmpty)
+    // a run of exactly the cap pairs; one row more and it yields nothing
+    assert(walk(3)(run(1L, 2L, 3L): _*) == Seq((1L, 2L), (1L, 3L), (2L, 3L)))
+    assert(walk(3)(run(1L, 2L, 3L, 4L): _*).isEmpty)
+    // a null id counts toward the cap but pairs with nothing
+    assert(walk(3)(run(null, 1L, 2L): _*) == Seq((1L, 2L)))
+    assert(walk(2)(run(null, 1L, 2L): _*).isEmpty)
+    assert(walk(3)(run(null, null, 2L): _*).isEmpty)
+    // runs split on the band and on the band key; a capped run between
+    // two others drops only itself
+    assert(walk(2)(
+      (1L, 0, 7L), (2L, 0, 7L),
+      (3L, 1, 7L), (4L, 1, 7L),
+      (5L, 1, 8L), (6L, 1, 8L), (7L, 1, 8L),
+      (8L, 1, 9L), (9L, 1, 9L),
+      (10L, 2, 9L)) ==
+      Seq((1L, 2L), (3L, 4L), (8L, 9L)))
+    assert(walk(5)().isEmpty)
   }
 
   private val texts = Seq(null, "", " ", "   ", "a", "a a a", " lead", "trail ",

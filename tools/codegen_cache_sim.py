@@ -15,7 +15,8 @@ order, then passes in shuffled op order; every pass after the first
 shuffled one counts as timed. Prints, per working set, the recompiles per
 timed pass and the share of timed passes that recompile nothing.
 Defaults: the five curation ops' first-call class counts at the lean
-MinHash/TF-IDF change (BASELINE.md), followed by smaller working sets.
+MinHash/TF-IDF change and after the sorted-run MinHash bucket walk
+(BASELINE.md), followed by smaller working sets.
 """
 import collections
 import random
@@ -75,5 +76,6 @@ if __name__ == "__main__":
                 "dedup_minhash": 39, "text_tfidf": 23}
         report({**base, "dedup_minhash": 43})
         report(base)
+        report({**base, "dedup_minhash": 31})  # sorted-run bucket walk
         for mh, tf in [(35, 18), (30, 18), (26, 16), (20, 14)]:
             report({**base, "dedup_minhash": mh, "text_tfidf": tf})
