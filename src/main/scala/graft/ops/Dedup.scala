@@ -1659,28 +1659,23 @@ object Dedup {
     // arrival order is id order, so this is the batch "no earlier
     // near-dup" rule.
     val verifyFromStore: DataFrame => DataFrame = candIds => {
-      // ≤ shinglePartitions distinct buckets — a tiny collect off the
-      // already-materialized broadcast candidate set, bought back as a
-      // partition-pruned read: only the candidate-bearing slices of the
-      // store are listed or scanned
-      val buckets = candIds
-        .select(graft.tools.RangeState.bucketCol(bounds, col("doc_id")).as("p"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      val paths =
-        graft.tools.RangeState.pathsForBuckets(shRoot, buckets, batchId)
+      // ≤ shinglePartitions buckets off the already-materialized
+      // broadcast candidate set: only the candidate-bearing slices of
+      // the store are listed or scanned
+      val (store, bucketsRead) = graft.tools.RangeState.readForKeys(sp,
+        shRoot, bounds, candIds, "doc_id", batchId)(shingleSetsOf(arriving).limit(0))
       // Pruning observability (VERDICT r8 #8): how many of the store's
       // partitions this batch's verify actually listed/read, vs how many
       // hold state. On id-local traffic buckets ≈ the batch's own ranges;
       // on a worst-case corpus (every batch touches every cluster) it
       // approaches the whole store — drained per query into the bench
       // routing map, and per batch by the id-local scale probe.
-      graft.tools.RoutingMetrics.add("sh_buckets_read", buckets.size.toLong)
+      graft.tools.RoutingMetrics.add("sh_buckets_read", bucketsRead.toLong)
       graft.tools.RoutingMetrics.add("sh_buckets_total",
         graft.tools.RangeState.partDirs(shRoot).size.toLong)
       graft.tools.RoutingMetrics.add(f"sh_read_b$batchId%03d",
-        buckets.size.toLong)
-      if (paths.isEmpty) shingleSetsOf(arriving).limit(0)
-      else LogState.read(sp, shRoot, paths).join(candIds, Seq("doc_id"), "left_semi")
+        bucketsRead.toLong)
+      store.join(candIds, Seq("doc_id"), "left_semi")
     }
     val dupIds = deltaVerifiedPairs(histIndex, newBands,
       verifyFromStore, jaccardThreshold, maxBucket)
@@ -1902,33 +1897,100 @@ object Dedup {
        |ORDER BY a.label, a_id, b_id""".stripMargin
   }
 
-  /** Slim candidate (a_id, b_id) pairs from LSH signature collisions over
-    * `tables` tables with query-side multi-probe — exposed for the
-    * candidate-fraction spec (the sub-linearity claim is asserted on the
-    * candidate count, not assumed). */
+  /** Per-table LSH signature rows (vec_id, table, sig0) of (vec_id,
+    * embedding) rows — the one signature definition of the
+    * embedding-LSH family: the batch candidates, the incremental history
+    * artifact and the stream's index rows are all this frame. */
+  private def embLshSigs(e: DataFrame, tables: Int, bits: Int): DataFrame =
+    (0 until tables).map { t =>
+      e.select(col("vec_id"), lit(t).as("table"),
+        graft.functions.LshSignature.lsh_sig(col("embedding"), t, bits).as("sig0"))
+    }.reduce(_ unionByName _)
+
+  /** Multi-probe rows (table, d_id, sig) of signature rows: every key
+    * within Hamming ≤ `probes` of each row's sig0 (Lv et al. VLDB 2007).
+    * Candidacy is the Hamming-ball relation probe(x) ∋ sig0(y) ⟺
+    * Hamming(sig0(x), sig0(y)) ≤ probes ⟺ probe(y) ∋ sig0(x) —
+    * symmetric, so probing ONE side of any split and answering with the
+    * other side's exact signatures finds every pair across it. */
+  private def embLshProbes(sigs: DataFrame, bits: Int, probes: Int): DataFrame =
+    sigs.select(col("table"), col("vec_id").as("d_id"),
+      explode(graft.functions.VectorKernels.probeSigsUdf(
+        col("sig0"), lit(bits), lit(probes))).as("sig"))
+
+  /** Signature rows as the answering side of a probe join: (table, sig,
+    * a_id). Each pair is found when its LATER id probes. */
+  private def embLshKeyed(sigs: DataFrame): DataFrame =
+    sigs.select(col("table"), col("sig0").as("sig"), col("vec_id").as("a_id"))
+
+  /** Slim candidate (a_id, b_id) pairs of a whole corpus — every pair
+    * within Hamming ≤ `probes` in ANY table. The join is unhinted: here
+    * the probing side is the corpus itself, which must never broadcast.
+    * Exposed for the candidate-fraction spec (the sub-linearity claim is
+    * asserted on the candidate count, not assumed). */
   private[graft] def embeddingLshCandidates(e: DataFrame, tables: Int,
                                             bits: Int, probes: Int): DataFrame = {
-    val candParts = (0 until tables).map { t =>
-      val sigged = e.withColumn("sig0",
-        graft.functions.LshSignature.lsh_sig(col("embedding"), t, bits))
-      val a = sigged.select(col("vec_id").as("a_id"),
-        explode(graft.functions.VectorKernels.probeSigsUdf(
-          col("sig0"), lit(bits), lit(probes))).as("sig"))
-      val b = sigged.select(col("sig0").as("sig"), col("vec_id").as("b_id"))
-      a.join(b, Seq("sig")).filter(col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id"))
-    }
-    candParts.reduce(_ unionByName _).dropDuplicates("a_id", "b_id")
+    val sigs = embLshSigs(e, tables, bits)
+    embLshProbes(sigs, bits, probes)
+      .join(embLshKeyed(sigs), Seq("table", "sig"))
+      .filter(col("a_id") < col("d_id"))
+      .select(col("a_id"), col("d_id").as("b_id"))
+      .dropDuplicates("a_id", "b_id")
   }
 
+  /** The delta candidate kernel of the incremental and stream forms:
+    * slim, deduplicated (a_id, b_id) pairs of hist×delta ∪ delta×delta.
+    * Only the delta probes, against ONE index: the history rows plus the
+    * delta's own signature rows. History is pruned to the delta's probe
+    * keys by a broadcast semi-join (it only removes rows that could
+    * never join) and is never re-probed: a history row is the earlier
+    * side (ids below the split, or earlier arrivals), so it pairs as the
+    * a-side with every delta row that reaches it, and by the Hamming-ball
+    * symmetry of [[embLshProbes]] a delta×delta pair is found when its
+    * later id probes. The index BROADCASTS, so the exploded probe frame
+    * streams through a map-side hash join and never shuffles: Catalyst's
+    * explode-output estimate is the INPUT size, so left alone it would
+    * broadcast the wrong (~1000×-larger at production widths) side
+    * (measured: executor OOM unrolling it). DELIBERATELY LAZY: the probe frame is recomputed for
+    * its two consumers, a narrow map off the delta signatures
+    * (materializing it piled hundreds of MB into the block manager per
+    * stream epoch: epochs grew 9→27 s over 16 batches at 100×). Stages
+    * nothing — a caller that reads the pairs twice stages them, as for
+    * [[deltaCandidatePairs]]. */
+  private def embLshDeltaCandidates(histSigs: DataFrame, deltaSigs: DataFrame,
+                                    bits: Int, probes: Int): DataFrame = {
+    val dProbe = embLshProbes(deltaSigs, bits, probes)
+    val probeKeys = dProbe.select(col("table"), col("sig").as("sig0")).distinct()
+    val touchedHist = histSigs
+      .join(broadcast(probeKeys), Seq("table", "sig0"), "left_semi")
+    val index = embLshKeyed(touchedHist).withColumn("hist", lit(true))
+      .unionByName(embLshKeyed(deltaSigs).withColumn("hist", lit(false)))
+    dProbe.join(broadcast(index), Seq("table", "sig"))
+      .filter(col("hist") || col("a_id") < col("d_id"))
+      .select(col("a_id"), col("d_id").as("b_id"))
+      .dropDuplicates("a_id", "b_id")
+  }
+
+  /** The exact cosine verify of slim candidate pairs: the a-side and
+    * b-side (vec_id, embedding) rows rejoin only for the candidates (the
+    * 64-float vectors never ride the candidate shuffle — minhash's slim
+    * band discipline), keeping (a_id, b_id, cos) with cos > threshold. */
+  private def embCosineVerify(pairs: DataFrame, aSide: DataFrame,
+                              bSide: DataFrame, threshold: Double): DataFrame =
+    pairs
+      .join(aSide.select(col("vec_id").as("a_id"), col("embedding").as("a_emb")), Seq("a_id"))
+      .join(bSide.select(col("vec_id").as("b_id"), col("embedding").as("b_emb")), Seq("b_id"))
+      .withColumn("cos", cosine("a_emb", "b_emb"))
+      .filter(col("cos") > threshold)
+      .select(col("a_id"), col("b_id"), col("cos"))
+
   /** Embedding near-dup without any semantic bucket column: candidates
-    * come from hyperplane-LSH signature equality (multi-table), verified
-    * by exact cosine — the fully content-addressed variant that works on
-    * any corpus. Each table's bucket join is an equi-join on the short
-    * signature; one side additionally probes all buckets within Hamming ≤
-    * `probes` of its signature (multi-probe, Lv et al. VLDB 2007), so a
-    * pair within that Hamming distance in ANY table becomes a candidate —
-    * recall rises steeply while each doc still hashes once per table.
+    * come from hyperplane-LSH signature collisions over `tables` tables
+    * with multi-probe ([[embeddingLshCandidates]] — each doc hashes once
+    * per table, and a pair within Hamming ≤ `probes` in ANY table is a
+    * candidate, so recall rises steeply), verified by the exact cosine
+    * ([[embCosineVerify]]) — the fully content-addressed variant that
+    * works on any corpus.
     *
     * `bits` ≤ 0 → adaptive signature width from the corpus size
     * (Similarity.adaptiveLshBits): candidate pairs stay ≤ ~5% of all
@@ -1955,40 +2017,19 @@ object Dedup {
   private def embeddingLshOf(e: DataFrame, threshold: Double,
                              tables: Int, bits: Int,
                              probes: Int): DataFrame =
-    // candidate pairs stay SLIM (two ids) through the union + distinct —
-    // the 64-float embeddings must not ride the shuffle (same discipline
-    // as minhash's slim band frame); they rejoin only for the survivors.
-    embeddingLshCandidates(e, tables, bits, probes)
-      .join(e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb")), Seq("a_id"))
-      .join(e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb")), Seq("b_id"))
-      .withColumn("cos", cosine("a_emb", "b_emb"))
-      .filter(col("cos") > threshold)
-      .select(col("a_id"), col("b_id"), col("cos"))
+    embCosineVerify(embeddingLshCandidates(e, tables, bits, probes), e, e,
+      threshold)
 
-  /** Per-table LSH signatures (vec_id, table, sig0) — the persisted
-    * index shape of the incremental embedding path. */
-  private def embLshSigs(e: DataFrame, tables: Int, bits: Int): DataFrame =
-    (0 until tables).map { t =>
-      e.select(col("vec_id"), lit(t).as("table"),
-        graft.functions.LshSignature.lsh_sig(col("embedding"), t, bits).as("sig0"))
-    }.reduce(_ unionByName _)
-
-  /** Incremental EMBEDDING-LSH near-dup maintenance — completes the
-    * incremental axis for the embedding tier (minhash, simhash, and the
-    * span tier have theirs): history persists its per-table signature
-    * index (one short int per table per vector) and its verified pair
-    * set; a delta signs ONLY its own vectors. Key property making the
-    * split exact: multi-probe candidacy is a HAMMING-BALL relation —
-    * probe(x) ∋ sig0(y) ⟺ Hamming(sig0(x), sig0(y)) ≤ probes ⟺
-    * probe(y) ∋ sig0(x) — symmetric, so the full pair set partitions
-    * cleanly into hist×hist (the artifact), hist×delta (delta probes,
-    * history answers exactly — history is NEVER re-probed), and
-    * delta×delta; and this tier has no bucket cap, so there is no
-    * crossing semantics and incremental == rebuild unconditionally.
-    * Verification is the same exact cosine over candidate-pruned
-    * embedding rejoins. `bits` ≤ 0 derives the adaptive width from the
-    * FULL corpus count (what a rebuild would use — equality requires
-    * it). */
+  /** Incremental EMBEDDING-LSH near-dup maintenance: history persists
+    * its signature rows ([[embLshSigs]], one short int per table per
+    * vector) and its verified pair set; a delta signs ONLY its own
+    * vectors, and its new pairs are the delta candidate kernel
+    * ([[embLshDeltaCandidates]] — hist×delta ∪ delta×delta, exact by the
+    * Hamming-ball symmetry) through the same cosine verify. This tier
+    * has no bucket cap, so there is no crossing semantics and
+    * incremental == rebuild unconditionally. `bits` ≤ 0 derives the
+    * adaptive width from the FULL corpus count (what a rebuild would
+    * use — equality requires it). */
   def embeddingLshIncremental(spark: SparkSession, dir: String,
                               splitId: Long, threshold: Double = 0.35,
                               tables: Int = 4, bits: Int = -1,
@@ -2005,27 +2046,8 @@ object Dedup {
       s"emb_lsh_sigs_lt${splitId}_t${tables}_b${b}_p$probes") { p =>
       embLshSigs(hist, tables, b).write.mode("overwrite").parquet(p)
     }
-    val deltaSigs = embLshSigs(delta, tables, b).stage()
-    val dProbe = deltaSigs.select(col("table"), col("vec_id").as("d_id"),
-      explode(graft.functions.VectorKernels.probeSigsUdf(
-        col("sig0"), lit(b), lit(probes))).as("sig"))
-    // hist ids < splitId ≤ delta ids, so (a, b) = (hist, delta) is
-    // already the canonical order
-    val hd = dProbe.join(histSigs.select(col("table"),
-        col("sig0").as("sig"), col("vec_id").as("a_id")),
-      Seq("table", "sig"))
-      .select(col("a_id"), col("d_id").as("b_id"))
-    val dd = dProbe.join(deltaSigs.select(col("table"),
-        col("sig0").as("sig"), col("vec_id").as("b_id")),
-      Seq("table", "sig"))
-      .filter(col("d_id") < col("b_id"))
-      .select(col("d_id").as("a_id"), col("b_id"))
-    val deltaPairs = hd.unionByName(dd).dropDuplicates("a_id", "b_id")
-      .join(e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb")), Seq("a_id"))
-      .join(e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb")), Seq("b_id"))
-      .withColumn("cos", cosine("a_emb", "b_emb"))
-      .filter(col("cos") > threshold)
-      .select(col("a_id"), col("b_id"), col("cos"))
+    val deltaPairs = embCosineVerify(embLshDeltaCandidates(histSigs,
+      embLshSigs(delta, tables, b), b, probes), e, e, threshold)
     if (deltaOnly) deltaPairs
     else {
       val histPairs = graft.tools.ArtifactCache.parquet(spark, dir,
@@ -2462,17 +2484,12 @@ object Dedup {
     val touched = graft.tools.RangeState.publishDelta(memberRoot, batchId,
       assigned, graft.tools.RangeState.bucketCol(bounds, col("cluster_id")))
     graft.tools.RoutingMetrics.add("sem_publish_parts", touched.size.toLong)
-    val buckets = assigned
-      .select(graft.tools.RangeState.bucketCol(bounds, col("cluster_id"))
-        .as("p"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val paths =
-      graft.tools.RangeState.pathsForBuckets(memberRoot, buckets, batchId)
-    graft.tools.RoutingMetrics.add("sem_buckets_read", buckets.size.toLong)
+    val (members, bucketsRead) = graft.tools.RangeState.readForKeys(sp,
+      memberRoot, bounds, assigned, "cluster_id", batchId)(assigned.limit(0))
+    graft.tools.RoutingMetrics.add("sem_buckets_read", bucketsRead.toLong)
     graft.tools.RoutingMetrics.add("sem_buckets_total",
       graft.tools.RangeState.partDirs(memberRoot).size.toLong)
-    val mates = LogState.read(sp, memberRoot, paths)
-      .select(col("cluster_id"), col("vec_id"), col("v"))
+    val mates = members.select(col("cluster_id"), col("vec_id"), col("v"))
     val dups = semanticDupIds(mates, assigned, eps)
     arriving.select(col("vec_id"))
       .join(dups, Seq("vec_id"), "left_anti")
@@ -2582,36 +2599,28 @@ object Dedup {
     frozen
   }
 
-  /** One micro-batch of STREAMING embedding-LSH dedup — the last
-    * near-dup tier without a streaming form (VERDICT r12 #1; minhash,
-    * simhash, and the span tier already stream), completing the 4×3
-    * batch/incremental/streaming matrix. Delta-side-only multi-probe is
-    * justified by the same symmetry the incremental split rests on:
-    * candidacy is the Hamming-ball relation probe(x) ∋ sig0(y) ⟺
-    * Hamming(sig0(x), sig0(y)) ≤ probes ⟺ probe(y) ∋ sig0(x), so
-    * probing the DELTA only and answering with the index's exact
-    * signatures covers every hist×delta pair — history is never
-    * re-probed.
+  /** One micro-batch of STREAMING embedding-LSH dedup on the family's
+    * shared steps: the batch's signature rows ([[embLshSigs]]) are the
+    * index delta, the delta candidate kernel ([[embLshDeltaCandidates]])
+    * pairs them against the index (delta-side-only multi-probe —
+    * history is never re-probed), and the cosine verify
+    * ([[embCosineVerify]]) takes the pruned vector-store read as the
+    * a-side and the arrivals as the b-side.
     *
     * State layout is the MINHASH-STREAM architecture, not the simhash
     * one: a SLIM signature index ((vec_id, table, sig0) LogState rows —
     * ~16 B each, so the per-epoch touched-key semi-join scans stay
     * cheap at any index size) plus a vec_id-range-partitioned VECTOR
-    * STORE ([[graft.tools.RangeState]]) the verify reads pruned to
-    * candidate buckets. The first cut rode the 256-byte vector on every
-    * signature row (the simhash fp-on-band-rows move): correct, but the
-    * 100× probe measured per-epoch cost GROWING 6→16 s over 16 epochs —
-    * the full-index scan was hauling ~1 KB/row of payload that the
-    * prune then threw away. An 8-byte fp can ride its band rows; a
-    * vector cannot. Candidate pairs stay SLIM (two ids) through the
-    * union + distinct; embeddings rejoin only for candidate a-ids (from
-    * the pruned store read) and the batch itself. No bucket cap: this
-    * tier has none (matching batch/incremental), so there is no
-    * crossing semantics and the streamed survivor set equals the batch
-    * rule whenever arrival order is id order. A vector is a duplicate
-    * iff it is the LATER side of a verified pair; writes are
-    * epoch-keyed overwrites derived from state < batchId —
-    * replay-idempotent.
+    * STORE ([[graft.tools.RangeState]]) read pruned to the candidate
+    * a-ids' buckets. A 256-byte vector riding every signature row (the
+    * simhash fp-on-band-rows move) measured per-epoch cost GROWING
+    * 6→16 s over 16 epochs at 100×: the index scan hauled ~1 KB/row of
+    * payload the prune then threw away. No bucket cap: this tier has
+    * none (matching batch/incremental), so there is no crossing
+    * semantics and the streamed survivor set equals the batch rule
+    * whenever arrival order is id order. A vector is a duplicate iff it
+    * is the LATER side of a verified pair; writes are epoch-keyed
+    * overwrites derived from state < batchId — replay-idempotent.
     *
     * `bits` ≤ 0 (the default) derives the signature width from EXPECTED
     * corpus size via [[streamLshBits]] and freezes it in the state dir —
@@ -2658,79 +2667,26 @@ object Dedup {
       graft.tools.RangeState.bucketCol(bounds, col("vec_id")))
     graft.tools.RoutingMetrics.add("emb_publish_parts",
       touchedVec.size.toLong)
-    val newRows = (0 until tables).map { t =>
-      arriving.select(col("vec_id"), lit(t).as("table"),
-        graft.functions.LshSignature.lsh_sig(col("embedding"), t, bw)
-          .as("sig0"))
-    }.reduce(_ unionByName _).stage()
+    val newRows = embLshSigs(arriving, tables, bw).stage()
     val histPaths = graft.tools.LogState.pathsAsOf(indexRoot, batchId - 1)
     val hist =
       if (histPaths.nonEmpty) LogState.read(sp, indexRoot, histPaths)
       else newRows.limit(0)
-    // delta-side multi-probe: (table, sig) keys within Hamming ≤ probes
-    // of each arriving vector's signature. DELIBERATELY LAZY: at
-    // production bit widths the radius-2 ball is ~230 keys/signature, so
-    // this frame is ~1000× the batch — materializing it per epoch
-    // (localCheckpoint) piles hundreds of MB into the block manager
-    // every batch and later epochs pay the eviction/GC bill (measured:
-    // epochs grew 9→27 s over 16 batches at 100×). Recomputing the
-    // explode for its two consumers is a cheap narrow map off the
-    // already-checkpointed slim newRows.
-    val dProbe = newRows.select(col("table"), col("vec_id").as("d_id"),
-      explode(graft.functions.VectorKernels.probeSigsUdf(
-        col("sig0"), lit(bw), lit(probes))).as("sig"))
-    // prune the historical index to the probe keys this batch touches
-    // BEFORE anything else reads it — per-batch candidate cost follows
-    // locality; the scan itself stays cheap because rows are slim
-    val probeKeys = dProbe.select(col("table"), col("sig").as("sig0"))
-      .distinct()
-    val touchedHist = hist
-      .join(broadcast(probeKeys), Seq("table", "sig0"), "left_semi")
-      .stage()
-    // hist ids < delta ids under id-ordered arrival → (a, b) =
-    // (hist, delta) is already canonical; delta×delta orders by id.
-    // Both joins BROADCAST their slim side (pruned hist slice / batch
-    // sigs) so the exploded probe frame streams through map-side hash
-    // joins and never shuffles — Catalyst's explode-output estimate is
-    // the INPUT size, so left alone it would broadcast the wrong
-    // (1000×-larger) side (measured: executor OOM unrolling it).
-    val hd = dProbe.join(broadcast(touchedHist.select(col("table"),
-        col("sig0").as("sig"), col("vec_id").as("a_id"))),
-      Seq("table", "sig"))
-      .select(col("a_id"), col("d_id").as("b_id"))
-    val dd = dProbe.join(broadcast(newRows.select(col("table"),
-        col("sig0").as("sig"), col("vec_id").as("b_id"))),
-      Seq("table", "sig"))
-      .filter(col("d_id") < col("b_id"))
-      .select(col("d_id").as("a_id"), col("b_id"))
-    val cands = hd.unionByName(dd).dropDuplicates("a_id", "b_id")
-      .stage()
+    // the index rows are the earlier arrivals, the kernel's history
+    // side. Staged: read for the a-ids and by the verify
+    val cands = embLshDeltaCandidates(hist, newRows, bw, probes).stage()
     // a-side vectors from the store, PRUNED to the partitions holding
-    // candidate a-ids (the minhash shingle-store move): ≤ vecPartitions
-    // distinct buckets — a tiny collect bought back as a pruned read
+    // candidate a-ids (the minhash shingle-store move)
     val candIds = cands.select(col("a_id").as("vec_id")).distinct()
-    val buckets = candIds
-      .select(graft.tools.RangeState.bucketCol(bounds, col("vec_id"))
-        .as("p"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val paths =
-      graft.tools.RangeState.pathsForBuckets(vecRoot, buckets, batchId)
-    graft.tools.RoutingMetrics.add("emb_buckets_read", buckets.size.toLong)
+    val (store, bucketsRead) = graft.tools.RangeState.readForKeys(sp,
+      vecRoot, bounds, candIds, "vec_id", batchId)(arriving.limit(0))
+    graft.tools.RoutingMetrics.add("emb_buckets_read", bucketsRead.toLong)
     graft.tools.RoutingMetrics.add("emb_buckets_total",
       graft.tools.RangeState.partDirs(vecRoot).size.toLong)
     graft.tools.RoutingMetrics.add(f"emb_read_b$batchId%03d",
-      buckets.size.toLong)
-    val aEmb =
-      if (paths.isEmpty) arriving.limit(0)
-      else LogState.read(sp, vecRoot, paths)
-        .join(candIds, Seq("vec_id"), "left_semi")
-    val dupIds = cands
-      .join(aEmb.select(col("vec_id").as("a_id"),
-        col("embedding").as("a_emb")), Seq("a_id"))
-      .join(arriving.select(col("vec_id").as("b_id"),
-        col("embedding").as("b_emb")), Seq("b_id"))
-      .withColumn("cos", cosine("a_emb", "b_emb"))
-      .filter(col("cos") > threshold)
+      bucketsRead.toLong)
+    val dupIds = embCosineVerify(cands,
+        store.join(candIds, Seq("vec_id"), "left_semi"), arriving, threshold)
       .select(col("b_id").as("vec_id")).distinct()
     val batchSurvivors = arriving.select(col("vec_id"))
       .join(dupIds, Seq("vec_id"), "left_anti")
@@ -2747,24 +2703,6 @@ object Dedup {
     graft.tools.RangeState.maintainTouched(sp, touchedVec, batchId,
       compactEvery)(identity)
   }
-
-  /** [[embeddingStreamApplyBatch]] under the shared event-time lateness
-    * wrapper ([[CdcUpsert.withLateness]]) — all FOUR streaming dedup
-    * tiers now share one watermark/quarantine protocol: late vectors
-    * quarantine instead of entering the signature index. */
-  private[graft] def embeddingStreamLateApplyBatch(
-      batch: DataFrame, epoch: Long, lateState: String,
-      dedupState: String, latenessMicros: Long,
-      threshold: Double = 0.35, tables: Int = 4,
-      bits: Int = -1, probes: Int = 2,
-      compactEvery: Int = 4, idSpan: Long = -1): Unit =
-    CdcUpsert.withLateness(batch, epoch, lateState, latenessMicros,
-      col("ts_us")) { onTime =>
-      embeddingStreamApplyBatch(
-        onTime.select(col("vec_id"), col("embedding")),
-        epoch, dedupState, threshold, tables, bits, probes,
-        compactEvery = compactEvery, idSpan = idSpan)
-    }
 
   /** STREAMING embedding-LSH through the HASH GATE on the clustered
     * corpus: four contiguous id-range batches (arrival order = id
@@ -3864,24 +3802,6 @@ object Dedup {
       compactEvery)(substringResultsFold)
   }
 
-  /** [[decontaminateStreamApplyBatch]] with the TRAIN side under the
-    * shared event-time lateness wrapper ([[CdcUpsert.withLateness]]):
-    * late train docs quarantine instead of entering the occs/docs
-    * logs. The test side is exempt by design — a late-arriving eval
-    * doc must still ban its grams (missing a contamination source is
-    * strictly worse than processing it late; the banned set is
-    * order-insensitive, so lateness cannot corrupt it). */
-  private[graft] def decontaminateStreamLateApplyBatch(
-      trainBatch: DataFrame, testBatch: DataFrame, epoch: Long,
-      lateState: String, dedupState: String, latenessMicros: Long,
-      n: Int = SubstringN): Unit =
-    CdcUpsert.withLateness(trainBatch, epoch, lateState, latenessMicros,
-      col("ts_us")) { onTime =>
-      decontaminateStreamApplyBatch(
-        onTime.select(col("doc_id"), col("text")), testBatch, epoch,
-        dedupState, n)
-    }
-
   /** STREAMING decontamination through the HASH GATE: the batch
     * operator's md5 split (bucket '0'/'1' = test), both sides arriving
     * in pmod(doc_id, epochs) batches — worst-case cross-epoch
@@ -3910,40 +3830,6 @@ object Dedup {
       .stage()
       .orderBy(col("doc_id"))
   }
-
-  /** [[minhashStream]]'s id-chunk batches under the same lateness
-    * wrapper — spec-verified (the base stream is itself a rows-only
-    * entry: survivor choice is approximation-structure-specific): late
-    * docs quarantine instead of entering the band index / shingle
-    * store, and the final survivor set equals the no-lateness stream
-    * over the on-time docs alone. */
-  private[graft] def minhashStreamLateApplyBatch(
-      batch: DataFrame, epoch: Long, lateState: String,
-      dedupState: String, latenessMicros: Long,
-      jaccardThreshold: Double = 0.5,
-      maxBucket: Int = MinhashMaxBucket,
-      compactEvery: Int = 8,
-      idSpan: Long = -1): Unit =
-    CdcUpsert.withLateness(batch, epoch, lateState, latenessMicros,
-      col("ts_us")) { onTime =>
-      minhashStreamApplyBatch(onTime.select(col("doc_id"), col("text")),
-        epoch, dedupState, jaccardThreshold, maxBucket,
-        compactEvery = compactEvery, idSpan = idSpan)
-    }
-
-  /** [[simhashStreamApplyBatch]] under the shared lateness wrapper
-    * ([[CdcUpsert.withLateness]]) — the one watermark/quarantine
-    * protocol of every streaming near-dup tier (minhash, simhash,
-    * embedding, substring). */
-  private[graft] def simhashStreamLateApplyBatch(
-      batch: DataFrame, epoch: Long, lateState: String,
-      dedupState: String, latenessMicros: Long,
-      maxHamming: Int = 3, maxBucket: Int = 200): Unit =
-    CdcUpsert.withLateness(batch, epoch, lateState, latenessMicros,
-      col("ts_us")) { onTime =>
-      simhashStreamApplyBatch(onTime.select(col("doc_id"), col("text")),
-        epoch, dedupState, maxHamming, maxBucket)
-    }
 
   /** KEEP-FIRST substring dedup — the published method's actual
     * retention rule (Lee et al. remove a duplicated substring from all

@@ -591,13 +591,11 @@ object Similarity {
     val arriving = batch.select(col("vec_id"), col("embedding")).stage()
     val touchedVec = graft.tools.RangeState.publishDelta(vecRoot, batchId,
       arriving, graft.tools.RangeState.bucketCol(bounds, col("vec_id")))
-    // bounded collect: ≤ |batch|/width touched partition ids
-    val touchedBuckets = arriving
-      .select(graft.tools.RangeState.bucketCol(bounds, col("vec_id")).as("p"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val vecPaths = graft.tools.RangeState.pathsForBuckets(vecRoot,
-      touchedBuckets, batchId)
-    val edges = buildHnswEdges(graft.tools.LogState.read(sp, vecRoot, vecPaths), 0L)
+    // the touched partitions' accumulated vectors (a bounded collect:
+    // ≤ |batch|/width partition ids)
+    val (touchedVecs, _) = graft.tools.RangeState.readForKeys(sp, vecRoot,
+      bounds, arriving, "vec_id", batchId)(arriving.limit(0))
+    val edges = buildHnswEdges(touchedVecs, 0L)
     graft.tools.RangeState.publishDelta(edgeRoot, batchId, edges,
       graft.tools.RangeState.bucketCol(bounds, col("src")))
     graft.tools.RangeState.maintainTouched(sp, touchedVec, batchId, 4)(identity)

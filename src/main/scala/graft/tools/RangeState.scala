@@ -146,4 +146,20 @@ object RangeState {
     buckets.distinct.sorted.map(b => s"$root/p=$b")
       .filter(d => new java.io.File(d).isDirectory)
       .flatMap(LogState.pathsAsOf(_, upTo))
+
+  /** The pruned read of a store routed by [[bucketCol]]: the buckets
+    * holding the `key` values of `keys` (a tiny collect — at most one
+    * row per partition), then those buckets' rows as of `upTo`, or
+    * `empty` when none of them has state yet. Untouched partitions are
+    * never listed or scanned. Returns the rows and the number of
+    * buckets read, which each caller records under its own routing
+    * names. */
+  def readForKeys(sp: SparkSession, root: String, bounds: Array[Long],
+                  keys: DataFrame, key: String, upTo: Long)
+                 (empty: => DataFrame): (DataFrame, Int) = {
+    val buckets = keys.select(bucketCol(bounds, col(key)).as("p"))
+      .distinct().collect().map(_.getInt(0)).toSeq
+    val paths = pathsForBuckets(root, buckets, upTo)
+    (if (paths.isEmpty) empty else LogState.read(sp, root, paths), buckets.size)
+  }
 }

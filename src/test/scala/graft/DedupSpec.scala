@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Dedup
+import org.apache.spark.sql.DataFrame
 
 /** Dedup-suite semantics on tiny controlled corpora written to temp
   * parquet (the operators read a directory, like production). */
@@ -22,6 +23,16 @@ class DedupSpec extends SparkSpec {
   private val nearDup = base.replace("tonight", "today") // 1-word edit
   private val unrelated =
     "completely different content about spark shuffles and partitions in clusters now"
+
+  /** A late gate's lateness step around a stream family's apply body:
+    * `CdcUpsert.withLateness` splits the event-time (`ts_us`) batch,
+    * quarantines its late rows under `lateState` and hands the on-time
+    * rows to `apply`. */
+  private def lateApply(batch: DataFrame, epoch: Long,
+                        lateState: String, latenessMicros: Long)
+                       (apply: DataFrame => Unit): Unit =
+    graft.ops.CdcUpsert.withLateness(batch, epoch, lateState, latenessMicros,
+      org.apache.spark.sql.functions.col("ts_us"))(apply)
 
   test("minhash finds the planted near-dup pair and not the unrelated doc") {
     val dir = corpus((1L, base), (2L, nearDup), (3L, unrelated))
@@ -135,6 +146,8 @@ class DedupSpec extends SparkSpec {
     info(f"adaptive bits=$bits, candidates=$cands of $allPairs pairs (${cands.toDouble / allPairs}%.4f)")
     assert(cands <= 0.05 * allPairs,
       s"candidate pairs $cands exceed 5% of $allPairs — LSH not sub-linear-shaped")
+    // the exact set: a signature, probe or candidate-join drift moves it
+    assert(cands == 64264L, s"candidate count drifted: $cands")
   }
 
   test("components match a reference union-find on random graphs") {
@@ -483,16 +496,19 @@ class DedupSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft-latesim").toString
     val (lateState, dedupState) = (s"$root/late", s"$root/state")
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    Dedup.simhashStreamLateApplyBatch(
+    def applyLate(batch: DataFrame, epoch: Long): Unit =
+      lateApply(batch, epoch, lateState, latenessMicros = 2000000L) { onTime =>
+        Dedup.simhashStreamApplyBatch(onTime.select(col("doc_id"),
+          col("text")), epoch, dedupState)
+      }
+    applyLate(
       docs.filter(col("doc_id") <= 2)
-        .withColumn("ts_us", col("doc_id") * 1000000L + 9000000L),
-      0L, lateState, dedupState, latenessMicros = 2000000L)
+        .withColumn("ts_us", col("doc_id") * 1000000L + 9000000L), 0L)
     // doc 3 arrives LATE (5s < wm(0)=9s); doc 4 (copy of 1) on time
-    Dedup.simhashStreamLateApplyBatch(
+    applyLate(
       docs.filter(col("doc_id") > 2)
         .withColumn("ts_us", when(col("doc_id") === 3L, lit(5000000L))
-          .otherwise(lit(12000000L))),
-      1L, lateState, dedupState, latenessMicros = 2000000L)
+          .otherwise(lit(12000000L))), 1L)
     val idx = spark.read.parquet(
       graft.tools.LogState.pathsAsOf(s"$dedupState/index", 1L): _*)
       .select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSet
@@ -537,18 +553,22 @@ class DedupSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft-latemh").toString
     val (lateState, dedupState) = (s"$root/late", s"$root/state")
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    def applyLate(batch: DataFrame, epoch: Long): Unit =
+      lateApply(batch, epoch, lateState, latenessMicros = 2000000L) { onTime =>
+        Dedup.minhashStreamApplyBatch(onTime.select(col("doc_id"),
+          col("text")), epoch, dedupState, jaccardThreshold = 0.5,
+          maxBucket = Dedup.MinhashMaxBucket)
+      }
     // epoch 0: docs 1,2 at ts 10s/11s; L=2s → wm(0)=9s
-    Dedup.minhashStreamLateApplyBatch(
+    applyLate(
       docs.filter(col("doc_id") <= 2)
-        .withColumn("ts_us", col("doc_id") * 1000000L + 9000000L),
-      0L, lateState, dedupState, latenessMicros = 2000000L)
+        .withColumn("ts_us", col("doc_id") * 1000000L + 9000000L), 0L)
     // epoch 1: doc 3 at 5s (below wm(0) → LATE), doc 4 at 12s (on time)
     val b1 = docs.filter(col("doc_id") > 2)
       .withColumn("ts_us",
         org.apache.spark.sql.functions.when(col("doc_id") === 3L,
           lit(5000000L)).otherwise(lit(12000000L)))
-    Dedup.minhashStreamLateApplyBatch(b1, 1L, lateState, dedupState,
-      latenessMicros = 2000000L)
+    applyLate(b1, 1L)
     def shingleIds() = spark.read.parquet(
       graft.tools.RangeState.pathsAsOf(s"$dedupState/shingles", 1L): _*)
       .collect().map(_.getLong(0)).toSet
@@ -569,8 +589,7 @@ class DedupSpec extends SparkSpec {
     assert(quar.select(col("quarantine_epoch")).head.getLong(0) == 1L)
     // at-least-once replay of the last epoch rewrites identical state
     // AND identical quarantine
-    Dedup.minhashStreamLateApplyBatch(b1, 1L, lateState, dedupState,
-      latenessMicros = 2000000L)
+    applyLate(b1, 1L)
     assert(snap() == first)
     assert(graft.ops.CdcUpsert.quarantineAsOf(spark, lateState, 1L).get
       .select(col("doc_id")).collect().map(_.getLong(0)).toSeq == Seq(3L))
@@ -587,24 +606,30 @@ class DedupSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft-latemh2").toString
     val (lateState, dedupState) = (s"$root/late", s"$root/state")
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    def applyLate(batch: DataFrame, epoch: Long): Unit =
+      lateApply(batch, epoch, lateState, latenessMicros = 2000000L) { onTime =>
+        Dedup.minhashStreamApplyBatch(onTime.select(col("doc_id"),
+          col("text")), epoch, dedupState, jaccardThreshold = 0.5,
+          maxBucket = Dedup.MinhashMaxBucket)
+      }
     // epoch 0: doc 1 (family A survivor) at 10s; L=2s → wm(0)=8s
-    Dedup.minhashStreamLateApplyBatch(
+    applyLate(
       docs.filter(col("doc_id") === 1L).withColumn("ts_us", lit(10000000L)),
-      0L, lateState, dedupState, latenessMicros = 2000000L)
+      0L)
     // epoch 1: doc 3 = LATE replica of A (ts 5s < wm) → must quarantine,
     // and doc 1 must STAY the survivor; doc 4 = LATE first copy of
     // family B (ts 6s < wm) → quarantined, B has no survivor yet
-    Dedup.minhashStreamLateApplyBatch(
+    applyLate(
       docs.filter(col("doc_id").isin(3L, 4L))
         .withColumn("ts_us", when(col("doc_id") === 3L, lit(5000000L))
           .otherwise(lit(6000000L))),
-      1L, lateState, dedupState, latenessMicros = 2000000L)
+      1L)
     // epoch 2: doc 5 = ON-TIME copy of family B's text → must SURVIVE
     // (the quarantined doc 4 never entered the index, so it cannot have
     // pre-claimed family B)
-    Dedup.minhashStreamLateApplyBatch(
+    applyLate(
       docs.filter(col("doc_id") === 5L).withColumn("ts_us", lit(12000000L)),
-      2L, lateState, dedupState, latenessMicros = 2000000L)
+      2L)
     val surv = spark.read.parquet(graft.tools.LogState.pathsAsOf(
         s"$dedupState/survivors", 2L): _*)
       .collect().map(_.getLong(0)).toSet
@@ -780,18 +805,19 @@ class DedupSpec extends SparkSpec {
     val (lateState, dedupState) = (s"$root/late", s"$root/state")
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
-    Dedup.embeddingStreamLateApplyBatch(
+    def applyLate(batch: DataFrame, epoch: Long): Unit =
+      lateApply(batch, epoch, lateState, latenessMicros = 2000000L) { onTime =>
+        Dedup.embeddingStreamApplyBatch(onTime.select(col("vec_id"),
+          col("embedding")), epoch, dedupState, threshold = 0.99)
+      }
+    applyLate(
       vecs.filter(col("vec_id") <= 2)
-        .withColumn("ts_us", col("vec_id") * 1000000L + 9000000L),
-      0L, lateState, dedupState, latenessMicros = 2000000L,
-      threshold = 0.99)
+        .withColumn("ts_us", col("vec_id") * 1000000L + 9000000L), 0L)
     // vec 3 arrives LATE (5s < wm(0)=9s); vec 4 (copy of 1) on time
-    Dedup.embeddingStreamLateApplyBatch(
+    applyLate(
       vecs.filter(col("vec_id") > 2)
         .withColumn("ts_us", when(col("vec_id") === 3L, lit(5000000L))
-          .otherwise(lit(12000000L))),
-      1L, lateState, dedupState, latenessMicros = 2000000L,
-      threshold = 0.99)
+          .otherwise(lit(12000000L))), 1L)
     val idx = spark.read.parquet(
       graft.tools.LogState.pathsAsOf(s"$dedupState/index", 1L): _*)
       .select(col("vec_id")).distinct().collect().map(_.getLong(0)).toSet

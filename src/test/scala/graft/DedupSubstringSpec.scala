@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Dedup
@@ -305,17 +306,24 @@ class DedupSubstringSpec extends SparkSpec {
       def bt(rows: (Long, String, Long)*) =
         rows.toSeq.toDF("doc_id", "text", "ts_us")
       def b(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
+      // lateness covers the TRAIN side only: a late eval doc must still
+      // ban its grams (missing a contamination source is worse than
+      // processing it late, and the banned set is order-insensitive)
+      def applyLate(train: DataFrame, test: DataFrame, epoch: Long): Unit =
+        graft.ops.CdcUpsert.withLateness(train, epoch, lateState,
+            2000000L, col("ts_us")) { onTime =>
+          graft.ops.Dedup.decontaminateStreamApplyBatch(
+            onTime.select(col("doc_id"), col("text")), test, epoch,
+            dedupState, n)
+        }
       // epoch 0: on-time train doc at ts 9 s → watermark 7 s (lateness 2 s)
-      graft.ops.Dedup.decontaminateStreamLateApplyBatch(
-        bt((1L, "a1 a2 s1 s2 s3 s4 a3", 9000000L)), b(),
-        0L, lateState, dedupState, latenessMicros = 2000000L, n)
+      applyLate(bt((1L, "a1 a2 s1 s2 s3 s4 a3", 9000000L)), b(), 0L)
       // epoch 1: doc 2 (ts 1 s) is below the carried watermark →
       // quarantined; doc 3 on-time; the eval delta bans S
-      graft.ops.Dedup.decontaminateStreamLateApplyBatch(
+      applyLate(
         bt((2L, "b1 s1 s2 s3 s4 b2", 1000000L),
            (3L, "c1 s1 s2 s3 s4 c2", 9500000L)),
-        b(100L -> "tq1 s1 s2 s3 s4 tq2"),
-        1L, lateState, dedupState, latenessMicros = 2000000L, n)
+        b(100L -> "tq1 s1 s2 s3 s4 tq2"), 1L)
       val st = graft.ops.Dedup.substringStreamState(
           spark, dedupState, Long.MaxValue).get.collect()
         .map(r => r.getLong(0) ->

@@ -327,12 +327,32 @@ class PlanRegressionSpec extends SparkSpec {
   }
 
   Seq("dedup_minhash" -> 10, "text_tfidf" -> 7, "sim_topk_brute" -> 3,
-      "sim_topk_ivf" -> 3, "q1_pricing_summary" -> 2).foreach { case (name, bound) =>
+      "sim_topk_ivf" -> 3, "q1_pricing_summary" -> 2,
+      "dedup_embedding_lsh" -> 6, "dedup_incr_embedding_clustered" -> 9
+  ).foreach { case (name, bound) =>
     test(s"a warm $name runs at most $bound jobs") {
       val run = () => SparkEntry.queries(name)(spark, sf).collect()
       run()
       val jobs = jobsDuring(run())
       assert(jobs <= bound, s"$name ran $jobs jobs")
     }
+  }
+
+  test("one embedding-LSH stream batch over a small state runs at most " +
+      "22 jobs") {
+    import org.apache.spark.sql.functions.col
+    val cdir = graft.ops.Similarity.clusteredCorpusDir(spark)
+    val vecs = graft.Tables.embeddings(spark, cdir)
+      .select(col("vec_id"), col("embedding"))
+    val root = graft.tools.TempDirs.createFast("graft-embjobs")
+    try {
+      def apply(batchId: Long): Unit = graft.ops.Dedup.embeddingStreamApplyBatch(
+        vecs.filter(col("vec_id") >= batchId * 50 && col("vec_id") < (batchId + 1) * 50),
+        batchId, s"$root/state", threshold = 0.5, tables = 4, bits = 10,
+        probes = 2, idSpan = 200)
+      apply(0L)
+      val jobs = jobsDuring(apply(1L))
+      assert(jobs <= 22, s"embedding stream batch 1 ran $jobs jobs")
+    } finally graft.tools.TempDirs.deleteRecursively(root)
   }
 }

@@ -27,7 +27,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - one banded-Hamming band definition: the 4×16-bit band expression
   *    appears once under `src/main` (`Dedup.hammingBandRows`);
   *  - one minhash banding: no sliced-signature band expression under
-  *    `src/main` (`TextKernels.bandKeys`).
+  *    `src/main` (`TextKernels.bandKeys`);
+  *  - one embedding-LSH signature row and one probe explode in the
+  *    near-dup engine (`Dedup.embLshSigs`, `Dedup.embLshProbes`), beside
+  *    the ANN tier's own (`Similarity.lshSig`, `Similarity.lshCandidates`).
   */
 class SparkEntrySpec extends AnyFunSuite {
 
@@ -150,5 +153,15 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(mainCount("slice(sig,") == 0,
       "a sliced-signature xxhash64 band expression is back — band " +
         "through TextKernels.bandKeys")
+  }
+
+  test("grep invariant: embedding-LSH signature rows and probe rows have " +
+      "one definition each") {
+    assert(mainCount("LshSignature.lsh_sig(") == 2,
+      "an embedding-LSH signature copy is back — sign through " +
+        "Dedup.embLshSigs (Similarity.lshSig is the ANN tier's)")
+    assert(mainCount("probeSigsUdf(") == 2,
+      "a multi-probe explode copy is back — probe through " +
+        "Dedup.embLshProbes (Similarity.lshCandidates is the ANN tier's)")
   }
 }
